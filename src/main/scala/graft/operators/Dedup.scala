@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.functions.{K, Kernel}
 
 /** Deduplication family for training-data pipelines. Detectors at distinct
@@ -352,160 +354,212 @@ object Dedup {
   /** Duplicate-cluster labeling: connected components of the near-dup
     * pair graph by min-label propagation WITH POINTER DOUBLING — every
     * doc in a duplicate group gets the group's smallest id as `cluster`.
-    * Labels SEED at min(own id, neighbor ids) — one aggregate over the
-    * edge list, no join — then each round takes the min over three
-    * candidate sets: the node's own label, its neighbors' labels (1-hop
-    * propagation), and its label's label (path doubling — labels are
-    * always node ids, so l(l(v)) is a valid lookup). The doubling term
-    * makes the closed chain length grow exponentially: from the seeded
-    * 1-hop start, round k closes ascending chains of diameter 2^k
-    * (2, 4, 8, …), so the default 5 rounds close 32-hop chains where
-    * the same budget of plain propagation closed only 6 — spec-checked
-    * on a 30-hop chain fixture.
+    * Labels SEED at min(own id, neighbor ids), then each round takes
+    * l(v) ← min(l(v), min over neighbours n of l(n), l(l(v))): the
+    * node's own label, its neighbors' labels (1-hop propagation) and
+    * its label's label (path doubling — labels are always node ids, so
+    * l(l(v)) is a valid lookup). The doubling term makes the closed
+    * chain length grow exponentially: from the seeded 1-hop start,
+    * round k closes ascending chains of diameter 2^k (2, 4, 8, …), so
+    * the default 5 rounds close 32-hop chains where the same budget of
+    * plain propagation closed only 6 — spec-checked on a 33-node chain.
     *
     * Runs EXACTLY `iterations` rounds (not to convergence) so the result
     * is a pure function of the input — deterministic and oracle-able;
-    * raise `iterations` for pathological graphs. Each round is ONE
-    * equi-join + one min-aggregate over the PAIR GRAPH (tiny relative
-    * to the corpus), never over the corpus itself: the 1-hop and
-    * pointer-doubling lookups share a single probe of the label table —
-    * probe rows (key=s, out=d) from the edge list ask "label of my
-    * neighbor", probe rows (key=cluster, out=id) from the label table
-    * ask "label of my label"; both answers are min-merged with the
-    * node's own label. Candidate sets per round are identical to the
-    * two-join formulation at half the join stages, and each round is a
-    * full cluster-wide barrier — at 1000-executor scale the round count
-    * is the latency floor, which is why the seed (a free round: it
-    * rides the aggregate that builds the node set anyway) is worth one
-    * whole barrier. */
+    * raise `iterations` for pathological graphs. The rounds run on the
+    * driver or as distributed barriers by the size of the pair graph
+    * ([[components]]); labels and schema do not depend on the regime. */
   def duplicateClusters(pairs: DataFrame,
-                        iterations: Int = DefaultClusterIterations,
-                        checkpointEvery: Int = 1): DataFrame = {
-    require(checkpointEvery > 0,
-      s"checkpointEvery must be positive (got $checkpointEvery); lineage must be cut " +
-        "periodically or the per-round plan tree grows exponentially")
-    // localCheckpoint per round: labels is referenced three times per
-    // round, so without a LINEAGE cut every round multiplies the
-    // logical plan — exponentially many copies of the pair-graph
-    // computation (a cache alone still carries the exponential logical
-    // tree and can OOM the driver during analysis). The checkpoint
-    // materializes each round's tiny label table and restarts the plan
-    // from it — the standard Spark shape for iterative graph algorithms.
-    val edges = pairs.select(col("id_a").as("s"), col("id_b").as("d"))
-      .union(pairs.select(col("id_b").as("s"), col("id_a").as("d")))
-      .localCheckpoint()
-    // the REAL edge size (the eager checkpoint captured actual stats):
-    // the constant estimate every label cut below is stamped with
-    val edgeSize = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    var labels = edges.groupBy(col("s")).agg(min(col("d")).as("__mn"))
-      .select(col("s").as("id"), least(col("s"), col("__mn")).as("cluster"))
-    for (i <- 1 to iterations) {
-      val probe = edges.select(col("s").as("key"), col("d").as("out"))
-        .union(labels.select(col("cluster").as("key"), col("id").as("out")))
-      val looked = probe.join(labels, probe("key") === labels("id"))
-        .select(col("out").as("id"), col("cluster"))
-      labels = labels.union(looked)
-        .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
-      // LAZY checkpoint: the logical plan is cut immediately (the round
-      // tree is replaced by a LogicalRDD), but no per-round job fires —
-      // all rounds execute as one job chain at the final action, and the
-      // checkpoint blocks still materialize once despite the three
-      // references per round. Eager checkpoints here cost a scheduled
-      // job per round, which dominated wall time on small label tables.
-      // `checkpointEvery` trades plan-tree growth against cut count.
-      // The r19 A/B settled it: since the cuts are lazy (blocks
-      // materialize inside the final action, no scheduled round jobs),
-      // an uncut round saves nothing and its 3 label references
-      // re-derive the round plan — every-round cuts measured 0.70–0.85×
-      // of every-2 on the 12-round clustering gates, and every-4 ran
-      // 1.25–1.66× (OPTIMIZATION_r19.md). All callers now use the
-      // default 1; labels are identical at any cadence.
-      // replaceOriginStats: the cut snapshots the round plan's
-      // Statistics, and this loop's self-join SQUARES sizeInBytes every
-      // round — a BigInt whose bit length doubles per cut (measured:
-      // 19 → 147M bits in 24 rounds; java.math.BigInteger overflows at
-      // ~31 cuts, and the giant-number arithmetic costs real per-round
-      // time well before). Stamping each cut with the CONSTANT edge
-      // size keeps static planning exactly as healthy early rounds had
-      // it (labels ≤ the doubled edge list's endpoints, so a small
-      // graph keeps its broadcast round joins and a 100 TB one keeps
-      // shuffling) while the estimate no longer compounds.
-      if (i % checkpointEvery == 0 || i == iterations)
-        labels = org.apache.spark.sql.graftbridge.Bridge
-          .replaceOriginStats(labels.localCheckpoint(false), Some(edgeSize))
-    }
-    labels
-  }
+                        iterations: Int = DefaultClusterIterations): DataFrame =
+    components(pairs, iterations, toFixpoint = false)
 
-  /** [[duplicateClusters]] run TO THE FIXPOINT with early exit — the
-    * production form when the round count, not per-round volume, is
-    * the latency floor (each round is a cluster-wide barrier; the
-    * gated queries burn a fixed 12 so the DuckDB oracle can mirror
-    * them, which overshoots graphs that converge in 6 and would
-    * under-shoot a pathological one). Convergence is detected from the
-    * label-sum invariant: every node's label is non-increasing round
-    * over round (it is a min over candidate sets that include the
-    * current label), so the label SUM strictly decreases until — and
-    * only until — the fixpoint; an unchanged sum between two checks
-    * means no node moved in between, i.e. both checkpoints already ARE
-    * the fixpoint. The sum is taken as decimal(38,0), exact for any
-    * realistic id space, so equality is never an overflow artifact.
-    *
-    * Each check rides an EAGER localCheckpoint (the periodic lineage
-    * cut the loop needs anyway) plus one count-star-sized aggregate of
-    * the label table — per check, one extra tiny job on the critical
-    * path, bought against `checkEvery` whole barrier rounds skipped
-    * once converged. The result is still a pure function of the input:
-    * the fixpoint is unique (it does not depend on when the loop
-    * detects it), and equals [[duplicateClusters]] at any sufficient
-    * iteration budget — spec-gated on the chain fixture and the real
-    * ANN graph. `maxIterations` (default 64: pointer doubling closes
-    * 2^64-hop chains — any graph) only bounds the pathological case. */
+  /** [[duplicateClusters]] run TO THE FIXPOINT with early exit — for
+    * callers that cannot know the graph's diameter (the gated queries
+    * burn a fixed 12 so the DuckDB oracle can mirror them, which
+    * overshoots graphs that converge in 6 and under-shoots deeper ones).
+    * The fixpoint is unique, so the result equals [[duplicateClusters]]
+    * at any sufficient budget. `maxIterations` (default 64: pointer
+    * doubling closes 2^64-hop chains) only bounds the pathological case;
+    * `checkEvery` spaces the distributed regime's convergence checks. */
   def duplicateClustersConverged(pairs: DataFrame,
                                  maxIterations: Int = 64,
                                  checkEvery: Int = 3): DataFrame = {
     require(maxIterations >= 1 && checkEvery >= 1,
       s"need maxIterations >= 1 and checkEvery >= 1 (got $maxIterations, $checkEvery)")
+    components(pairs, maxIterations, toFixpoint = true, checkEvery)
+  }
+
+  /** Doubled edge lists with fewer rows than this label on the driver;
+    * larger pair graphs run distributed rounds. Measured on synthetic
+    * chain and random graphs of 2^12–2^22 pairs, labelled to the
+    * fixpoint at local[4] (4-core VM, 4 GB driver heap), driver vs
+    * distributed regime: 0.2 s vs 3–4 s at 2^12, 1.3 s vs 14 s at 2^18,
+    * 6 s vs 70 s at 2^20, 27–31 s vs 335–416 s at 2^22. The driver won
+    * at every size, so the limit is set by driver heap instead: at 2^20
+    * rows the packed edges, index arrays and label rows take roughly
+    * 200 MB (estimated from element sizes), inside a default 1 GB driver. */
+  private[operators] val DriverComponentsLimit: Int = 1 << 20
+
+  /** The one connected-components core behind [[duplicateClusters]]
+    * (`toFixpoint = false`: exactly `maxRounds` rounds) and
+    * [[duplicateClustersConverged]] (`toFixpoint = true`: stop at the
+    * fixpoint, or at `maxRounds`). The doubled edge list is cut eagerly
+    * once — the pair lineage is never recomputed — and then at most
+    * `limit` of its rows are read back in one job (one task walking the
+    * checkpoint's blocks; the BPE trainer's `CollectPairsLimit` shape).
+    *
+    *  - DRIVER regime (fewer than `limit` rows, integral non-null ids):
+    *    the seeded recurrence runs over arrays ([[labelOnDriver]]) and
+    *    the labels come back as a local relation with the distributed
+    *    plan's schema. It mirrors the recurrence round for round rather
+    *    than running union-find, so it is bit-exact even where a fixed
+    *    budget is too small to reach the fixpoint. A round that changes
+    *    nothing ends the loop in either mode: every later round would
+    *    change nothing too.
+    *  - DISTRIBUTED regime: each round is ONE equi-join + one
+    *    min-aggregate over the pair graph, never the corpus. The 1-hop
+    *    and pointer-doubling lookups share a single probe of the label
+    *    table — probe rows (key=s, out=d) ask "label of my neighbor",
+    *    rows (key=cluster, out=id) ask "label of my label". Every round
+    *    cuts its lineage (labels are referenced three times per round,
+    *    so an uncut chain re-derives exponentially many round plans);
+    *    the cuts are LAZY, so all rounds execute as one job chain at
+    *    the final action. In fixpoint mode every `checkEvery`-th cut is
+    *    EAGER and followed by a label-sum aggregate: labels never
+    *    increase, so the sum strictly decreases until — and only until —
+    *    the fixpoint, and an unchanged sum between two checks means both
+    *    checkpoints already are the fixpoint (decimal(38,0): exact, never
+    *    an overflow artifact).
+    *
+    * `limit` is the regime switch (tests pass 0 to force the
+    * distributed regime). */
+  private[operators] def components(pairs: DataFrame, maxRounds: Int, toFixpoint: Boolean,
+                                    checkEvery: Int = 3,
+                                    limit: Int = DriverComponentsLimit): DataFrame = {
     val edges = pairs.select(col("id_a").as("s"), col("id_b").as("d"))
       .union(pairs.select(col("id_b").as("s"), col("id_a").as("d")))
       .localCheckpoint()
-    // constant stats estimate for the label cuts (see duplicateClusters)
-    val edgeSize = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-    var labels = edges.groupBy(col("s")).agg(min(col("d")).as("__mn"))
-      .select(col("s").as("id"), least(col("s"), col("__mn")).as("cluster"))
-    var prevSum: Option[java.math.BigDecimal] = None
-    var i = 1
-    var converged = false
-    while (i <= maxIterations && !converged) {
-      val probe = edges.select(col("s").as("key"), col("d").as("out"))
-        .union(labels.select(col("cluster").as("key"), col("id").as("out")))
-      val looked = probe.join(labels, probe("key") === labels("id"))
-        .select(col("out").as("id"), col("cluster"))
-      labels = labels.union(looked)
-        .groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
-      if (i % checkEvery == 0 || i == maxIterations) {
-        // eager: materialize once, agg reads blocks; replaceOriginStats
-        // as in [[duplicateClusters]] — without it the self-join stats
-        // double per cut and a deep graph overflows BigInteger
-        labels = org.apache.spark.sql.graftbridge.Bridge
-          .replaceOriginStats(labels.localCheckpoint(), Some(edgeSize))
-        val s = Option(labels
-          .agg(sum(col("cluster").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
-          .head().getDecimal(0))
-        // compareTo, not equals: BigDecimal.equals is scale-sensitive
-        // (1E+2 != 100). Both sides come from the same decimal(38,0)
-        // agg today, so scales match — but numeric equality keeps the
-        // invariant robust to any future cast change.
-        val same = (prevSum, s) match {
-          case (Some(p), Some(c)) => p.compareTo(c) == 0
-          case (None, None)       => true
-          case _                  => false
+    driverEdges(edges, limit) match {
+      case Some(sd) =>
+        val (ids, labels) = labelOnDriver(sd, maxRounds)
+        // the distributed plan's schema, derived without analysing it:
+        // `id` is the edge column; `cluster` is a min aggregate (always
+        // nullable) after any round, least(s, min) (nullable as s) before
+        val e = edges.schema.head
+        val schema = StructType(Seq(StructField("id", e.dataType, e.nullable),
+          StructField("cluster", e.dataType, maxRounds > 0 || e.nullable)))
+        val box: Long => Any = e.dataType match {
+          case IntegerType => _.toInt
+          case ShortType   => _.toShort
+          case ByteType    => _.toByte
+          case _           => identity
         }
-        if (same) converged = true else prevSum = s
-      }
-      i += 1
+        val rows = new java.util.ArrayList[Row](ids.length)
+        ids.indices.foreach(v => rows.add(Row(box(ids(v)), box(labels(v)))))
+        pairs.sparkSession.createDataFrame(rows, schema)
+      case None =>
+        // replaceOriginStats: a cut snapshots the round plan's
+        // Statistics, and the round's self-join SQUARES sizeInBytes — a
+        // BigInt whose bit length doubles per cut (java.math.BigInteger
+        // overflows at ~31 cuts). Stamping each cut with the CONSTANT
+        // edge size keeps static planning as healthy early rounds had it
+        // (a small graph keeps its broadcast round joins, a 100 TB one
+        // keeps shuffling) while the estimate no longer compounds.
+        val edgeSize = edges.queryExecution.optimizedPlan.stats.sizeInBytes
+        def round(labels: DataFrame): DataFrame = {
+          val probe = edges.select(col("s").as("key"), col("d").as("out"))
+            .union(labels.select(col("cluster").as("key"), col("id").as("out")))
+          val looked = probe.join(labels, probe("key") === labels("id"))
+            .select(col("out").as("id"), col("cluster"))
+          labels.union(looked).groupBy(col("id")).agg(min(col("cluster")).as("cluster"))
+        }
+        var labels = edges.groupBy(col("s")).agg(min(col("d")).as("__mn"))
+          .select(col("s").as("id"), least(col("s"), col("__mn")).as("cluster"))
+        var prevSum: Option[java.math.BigDecimal] = None
+        var i = 0
+        var converged = false
+        while (i < maxRounds && !converged) {
+          i += 1
+          val check = toFixpoint && (i % checkEvery == 0 || i == maxRounds)
+          labels = org.apache.spark.sql.graftbridge.Bridge
+            .replaceOriginStats(round(labels).localCheckpoint(check), Some(edgeSize))
+          if (check) {
+            val s = Option(labels
+              .agg(sum(col("cluster").cast(DecimalType(38, 0)))).head().getDecimal(0))
+            // compareTo: BigDecimal.equals is scale-sensitive (1E+2 != 100)
+            converged = (prevSum, s) match {
+              case (Some(p), Some(c)) => p.compareTo(c) == 0
+              case (None, None)       => true
+              case _                  => false
+            }
+            prevSum = s
+          }
+        }
+        labels
     }
-    labels
+  }
+
+  /** The doubled edge list as packed (s, d) longs when it has fewer
+    * than `limit` rows and integral, non-null ids — read in ONE job
+    * whose single task walks the checkpoint's blocks and stops after
+    * `limit` rows, so an over-limit graph is never pulled — else None. */
+  private def driverEdges(edges: DataFrame, limit: Int): Option[Array[Long]] = {
+    val get: (InternalRow, Int) => Long = edges.schema.head.dataType match {
+      case LongType    => _.getLong(_)
+      case IntegerType => _.getInt(_).toLong
+      case ShortType   => _.getShort(_).toLong
+      case ByteType    => _.getByte(_).toLong
+      case _           => null
+    }
+    if (get == null || limit <= 0) None
+    else edges.queryExecution.toRdd.coalesce(1).mapPartitions { it =>
+      val sd = new scala.collection.mutable.ArrayBuilder.ofLong
+      var n = 0
+      var ok = true
+      while (ok && it.hasNext) {
+        val r = it.next()
+        ok = n + 1 < limit && !r.isNullAt(0) && !r.isNullAt(1)
+        if (ok) { sd += get(r, 0); sd += get(r, 1); n += 1 }
+      }
+      Iterator.single(Option.when(ok)(sd.result()))
+    }.collect().headOption.getOrElse(Some(Array.emptyLongArray)) // no blocks: no edges
+  }
+
+  /** The driver regime's kernel: the seeded min-label + pointer-doubling
+    * recurrence of [[components]] over arrays, for the packed doubled
+    * edge list `sd` (s0, d0, s1, d1, …). Nodes are ranked by id, so a min
+    * over ranks is a min over ids. Runs `maxRounds` rounds or stops at
+    * the first round that changes nothing (the fixpoint). Returns the
+    * node ids ascending and each one's label. */
+  private def labelOnDriver(sd: Array[Long], maxRounds: Int): (Array[Long], Array[Long]) = {
+    val m = sd.length / 2
+    val ids = {
+      val all = Array.tabulate(m)(e => sd(2 * e))
+      java.util.Arrays.sort(all)
+      var k = 0
+      all.indices.foreach(i => if (i == 0 || all(i) != all(i - 1)) { all(k) = all(i); k += 1 })
+      java.util.Arrays.copyOf(all, k)
+    }
+    val n = ids.length
+    val src = Array.tabulate(m)(e => java.util.Arrays.binarySearch(ids, sd(2 * e)))
+    val dst = Array.tabulate(m)(e => java.util.Arrays.binarySearch(ids, sd(2 * e + 1)))
+    var l = Array.range(0, n)
+    var e = 0
+    while (e < m) { if (dst(e) < l(src(e))) l(src(e)) = dst(e); e += 1 }
+    var next = new Array[Int](n)
+    var r = 0
+    var changed = true
+    while (r < maxRounds && changed) {
+      System.arraycopy(l, 0, next, 0, n)
+      e = 0
+      while (e < m) { if (l(src(e)) < next(dst(e))) next(dst(e)) = l(src(e)); e += 1 }
+      var v = 0
+      while (v < n) { if (l(l(v)) < next(v)) next(v) = l(l(v)); v += 1 }
+      changed = !java.util.Arrays.equals(l, next)
+      val t = l; l = next; next = t
+      r += 1
+    }
+    (ids, l.map(ids(_)))
   }
 
   /** Exact repeated token spans — the substring-level dedup signal of

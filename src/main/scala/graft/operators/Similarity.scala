@@ -805,32 +805,7 @@ object Similarity {
       .select(col("x.qid").as("id_a"), col("x.nid").as("id_b"))
   }
 
-  /** The ANN candidate pass of [[mutualAnnPairs]]: top-(k+1) bucket
-    * mates per vector (self included) as (qid, nid) with self dropped.
-    * Exposed pre-checkpoint so plan audits can see the join shape.
-    *
-    * Cost model: the bucket self-join scores Σ_b |bucket_b|² pairs, so
-    * `nPlanes` must GROW with the corpus — pick it so 2^nPlanes ≈
-    * n / target_bucket_size (the gated nPlanes=4 is sized for the sf
-    * test corpora, not a constant). Growing nPlanes costs recall
-    * (cross-bucket near pairs are missed); `probes` buys it back:
-    * each vector ALSO probes, as the QUERY side only, the buckets at
-    * Hamming distance 1 on its first `probes` planes (the q17b
-    * multi-probe rule) — the 1-flip relation is symmetric, so the
-    * downstream mutuality filter is unchanged in meaning. Candidate
-    * cost becomes (probes+1)·Σ_b |b_q||b_c| over adjacent bucket
-    * pairs instead of one quadratic term per bucket, and the bucket
-    * population stays 2^nPlanes-way split — more planes + probes is
-    * strictly finer-grained than fewer planes.
-    *
-    * `salt` addresses SKEW, not total cost: the candidate side of a
-    * hot bucket splits into `salt` deterministic sub-groups (id-hash)
-    * while the query side replicates across all of them, so the
-    * largest single join group shrinks `salt`× and the heap work
-    * spreads over `salt`× more tasks. Each (q, c) pair still meets
-    * exactly once (c holds one salt; q covers all), so the result is
-    * salt-INVARIANT — a physical-parallelism knob, asserted by spec. */
-  /** Auto-size `nPlanes` from the cost-model rule above: the smallest
+  /** Auto-size `nPlanes` from [[annBucketKnn]]'s cost-model rule: the smallest
     * plane count with 2^nPlanes ≥ n / targetBucket, i.e. expected
     * bucket occupancy ≤ targetBucket, so the bucket self-join's
     * Σ|bucket|² term stays ≈ n·targetBucket (linear in n) instead of
@@ -872,6 +847,31 @@ object Similarity {
     nPlanes / 2
   }
 
+  /** The ANN candidate pass of [[mutualAnnPairs]]: top-(k+1) bucket
+    * mates per vector (self included) as (qid, nid) with self dropped.
+    * Exposed pre-checkpoint so plan audits can see the join shape.
+    *
+    * Cost model: the bucket self-join scores Σ_b |bucket_b|² pairs, so
+    * `nPlanes` must GROW with the corpus — pick it so 2^nPlanes ≈
+    * n / target_bucket_size (the gated nPlanes=4 is sized for the sf
+    * test corpora, not a constant). Growing nPlanes costs recall
+    * (cross-bucket near pairs are missed); `probes` buys it back:
+    * each vector ALSO probes, as the QUERY side only, the buckets at
+    * Hamming distance 1 on its first `probes` planes (the q17b
+    * multi-probe rule) — the 1-flip relation is symmetric, so the
+    * downstream mutuality filter is unchanged in meaning. Candidate
+    * cost becomes (probes+1)·Σ_b |b_q||b_c| over adjacent bucket
+    * pairs instead of one quadratic term per bucket, and the bucket
+    * population stays 2^nPlanes-way split — more planes + probes is
+    * strictly finer-grained than fewer planes.
+    *
+    * `salt` addresses SKEW, not total cost: the candidate side of a
+    * hot bucket splits into `salt` deterministic sub-groups (id-hash)
+    * while the query side replicates across all of them, so the
+    * largest single join group shrinks `salt`× and the heap work
+    * spreads over `salt`× more tasks. Each (q, c) pair still meets
+    * exactly once (c holds one salt; q covers all), so the result is
+    * salt-INVARIANT — a physical-parallelism knob, asserted by spec. */
   private[graft] def annBucketKnn(vecs: DataFrame, idCol: String, vecCol: String,
                                   dim: Int, nPlanes: Int, k: Int,
                                   probes: Int = 0, salt: Int = 1): DataFrame = {
@@ -972,11 +972,6 @@ object Similarity {
         math.min(probes, nPlanes), salt))
   }
 
-  /** Semantic clusters: the mutual-kNN graph labeled by connected
-    * components ([[Dedup.duplicateClusters]] — seeded min-label +
-    * pointer doubling). Output (id, cluster) for every vector with at
-    * least one mutual edge; isolated vectors are their own trivial
-    * cluster and are omitted (the q38 convention). */
   /** Default CC rounds for SEMANTIC clustering — deeper than
     * [[Dedup.DefaultClusterIterations]] (5) because mutual-kNN
     * components are chains, not near-dup cliques: the sf0.01/sf0.1
@@ -984,21 +979,26 @@ object Similarity {
     * default caller non-converged labels. 12 is the gate setting. */
   val DefaultSemanticIterations = 12
 
+  /** Semantic clusters: the mutual-kNN graph labeled by connected
+    * components ([[Dedup.duplicateClusters]] — seeded min-label +
+    * pointer doubling). Output (id, cluster) for every vector with at
+    * least one mutual edge; isolated vectors are their own trivial
+    * cluster and are omitted (the q38 convention). */
   def semanticClusters(vecs: DataFrame, idCol: String, vecCol: String,
                        k: Int, iterations: Int = DefaultSemanticIterations): DataFrame =
     semanticClustersFromKnn(mutualKnnPairs(vecs, idCol, vecCol, k), iterations)
 
   /** CC labeling over any precomputed mutual-pair frame (id_a, id_b) —
-    * the hook for ANN-candidate graphs at scale. Checkpoints every
-    * round: the cuts are LAZY (no per-round job — blocks materialize
-    * inside the final action), so an uncut round buys nothing and costs
-    * the 3-way re-derivation of its label plan; the r19 A/B at sf0.1
-    * measured every-round cuts at 0.70–0.85× of every-2 and every-4 at
-    * 1.25–1.66× (OPTIMIZATION_r19.md) — labels are identical at any
-    * cut cadence, so this is purely a physical-plan knob. */
+    * the hook for ANN-candidate graphs at scale. Exactly `iterations`
+    * rounds of [[Dedup.duplicateClusters]], placed by its size regime:
+    * a mutual graph whose doubled edge list fits the driver limit (every
+    * gated corpus) labels on the driver in one collect job instead of
+    * `iterations` shuffle rounds; a larger one runs the distributed
+    * rounds, lineage cut lazily every round. Labels are identical in
+    * both regimes (spec-pinned), so the split is purely physical. */
   def semanticClustersFromKnn(pairs: DataFrame,
                               iterations: Int = DefaultSemanticIterations): DataFrame =
-    Dedup.duplicateClusters(pairs, iterations, checkpointEvery = 1)
+    Dedup.duplicateClusters(pairs, iterations)
 
   /** Topic-balanced selection: cap any one semantic cluster at
     * `maxPerCluster` members, chosen by the deterministic id-hash
@@ -1006,10 +1006,11 @@ object Similarity {
     * dominant topic from swamping a training mix, composed from the
     * cluster labeling above. Output (id, cluster) for the kept rows.
     *
-    * Scale shape: the cluster labels come out of the CC loop behind a
-    * lazy checkpoint, so capPerKey's two references (partial top-k
-    * picks + restoring semi join) materialize the clustering once; the
-    * cap itself is one hash-key shuffle over label-sized rows. */
+    * Scale shape: the cluster labels come out of the CC core as a
+    * local relation (driver regime) or behind a lineage cut
+    * (distributed regime), so capPerKey's two references (partial top-k
+    * picks + restoring semi join) never re-run the clustering; the cap
+    * itself is one hash-key shuffle over label-sized rows. */
   def clusterBalancedSample(vecs: DataFrame, idCol: String, vecCol: String,
                             k: Int, maxPerCluster: Int,
                             iterations: Int = DefaultSemanticIterations): DataFrame =

@@ -390,13 +390,15 @@ class OperatorsSpec extends AnyFunSuite with SparkSessionTestWrapper {
     // bit length doubled per cut, so ~31+ cuts threw "BigInteger would
     // overflow supported range" (and giant-BigInt stats arithmetic
     // dominated rounds well before). The fix stamps each cut with the
-    // constant edge size. 40 rounds at checkpointEvery=1 is past the
-    // old overflow point; labels must equal the 6-round fixpoint.
+    // constant edge size. 40 cut rounds is past the old overflow point;
+    // labels must equal the 6-round fixpoint. Forced into the
+    // distributed regime: the driver regime would label this small
+    // graph without a single cut.
     val chain = (0L until 20L).map(i => (i, i + 1L)).toDF("id_a", "id_b")
-    val deep = Dedup.duplicateClusters(chain, iterations = 40, checkpointEvery = 1)
+    val deep = graft.operators.ComponentsSpec.distributed(chain, 40)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(deep.size == 21 && deep.values.forall(_ == 0L))
-    val stamped = Dedup.duplicateClusters(chain, iterations = 6)
+    val stamped = graft.operators.ComponentsSpec.distributed(chain, 6)
       .queryExecution.optimizedPlan.stats.sizeInBytes
     assert(stamped.bitLength < 64,
       s"label stats must stay constant-sized, got ${stamped.bitLength} bits")
