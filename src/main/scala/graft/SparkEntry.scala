@@ -1416,10 +1416,10 @@ object SparkEntry {
         nMerges = 128)._1.toDF("rnk", "l", "r", "cnt")
     }),
 
-    // the DISTRIBUTED batched rounds under the same sequential oracle:
-    // gate corpora fit the driver (q162 now takes the incremental
-    // path), so this leg forces driverWords = 0 to keep the R1–R3
-    // exchange path itself under the DuckDB gate at every sf
+    // the PARTITIONED placement under the same sequential oracle: gate
+    // corpora fit the driver (q162 takes the driver placement), so this
+    // leg forces driverWords = 0 to keep the R1–R3 RDD rounds
+    // themselves under the DuckDB gate at every sf
     "q162b_bpe_merges_distributed" -> ((s, dir) => {
       import s.implicits._
       TokenizerTrain.trainBpeMergesBatched(

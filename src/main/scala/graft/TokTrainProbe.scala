@@ -111,20 +111,20 @@ object TokTrainProbe {
       .groupBy("word").agg(org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.col("cnt")).as("cnt"))
       .localCheckpoint(true)
     val synthWords = synth.count()
-    // r19 regime split: `regime:"incremental"` is the DEFAULT path now
-    // (this table fits DriverWordsLimit — one collect job, driver-side
-    // incremental pair-count maintenance), `regime:"distributed"`
-    // forces the R1–R3 batched exchange rounds the true 1e8-word regime
-    // still pays. Same learned list (spec/gate-pinned); the probe
-    // ASSERTS it anyway so the perf rows double as an equality check at
-    // a depth the specs don't reach.
+    // the merge core's two placements: `regime:"driver"` is the
+    // DEFAULT (this table fits DriverWordsLimit — one collect job, then
+    // heap-head rounds on the driver), `regime:"partitioned"` forces
+    // the R1–R3 batched RDD rounds the true 1e8-word regime pays. Same
+    // learned list (spec/gate-pinned); the probe ASSERTS it anyway so
+    // the perf rows double as an equality check at a depth the specs
+    // don't reach.
     var incLists = Map.empty[Int, Seq[(Long, String, String, Long)]]
     Seq(256, 1024).foreach { m =>
       val t1 = System.nanoTime()
       val (bat, rounds) = TokenizerTrain.trainBpeMergesBatched(synth, m)
       val batSec = (System.nanoTime() - t1) / 1e9
       incLists += m -> bat
-      println(f"""{"probe":"toktrain_synth_batched","regime":"incremental","words":$synthWords,"merges":$m,"learned":${bat.size},"rounds":$rounds,"sec":$batSec%.3f,"sec_per_merge":${batSec / math.max(1, bat.size)}%.4f}""")
+      println(f"""{"probe":"toktrain_synth_batched","regime":"driver","words":$synthWords,"merges":$m,"learned":${bat.size},"rounds":$rounds,"sec":$batSec%.3f,"sec_per_merge":${batSec / math.max(1, bat.size)}%.4f}""")
     }
     Seq(256, 1024).foreach { m =>
       val t1 = System.nanoTime()
@@ -132,16 +132,16 @@ object TokTrainProbe {
         driverWords = 0)
       val batSec = (System.nanoTime() - t1) / 1e9
       require(bat == incLists(m),
-        s"regime divergence at $m merges: distributed != incremental")
-      println(f"""{"probe":"toktrain_synth_batched","regime":"distributed","words":$synthWords,"merges":$m,"learned":${bat.size},"rounds":$rounds,"sec":$batSec%.3f,"sec_per_round":${batSec / math.max(1, rounds)}%.4f}""")
+        s"placement divergence at $m merges: partitioned != driver")
+      println(f"""{"probe":"toktrain_synth_batched","regime":"partitioned","words":$synthWords,"merges":$m,"learned":${bat.size},"rounds":$rounds,"sec":$batSec%.3f,"sec_per_round":${batSec / math.max(1, rounds)}%.4f}""")
     }
-    // production depth on the incremental path: the 30k-vocab train the
+    // production depth on the driver placement: the 30k-vocab train the
     // r18 cost law priced at ~2.2 h of distributed rounds
     Seq(30000).foreach { m =>
       val t1 = System.nanoTime()
       val (bat, rounds) = TokenizerTrain.trainBpeMergesBatched(synth, m)
       val batSec = (System.nanoTime() - t1) / 1e9
-      println(f"""{"probe":"toktrain_synth_deep","regime":"incremental","words":$synthWords,"merges":$m,"learned":${bat.size},"rounds":$rounds,"sec":$batSec%.3f,"sec_per_merge":${batSec / math.max(1, bat.size)}%.4f}""")
+      println(f"""{"probe":"toktrain_synth_deep","regime":"driver","words":$synthWords,"merges":$m,"learned":${bat.size},"rounds":$rounds,"sec":$batSec%.3f,"sec_per_merge":${batSec / math.max(1, bat.size)}%.4f}""")
     }
     spark.stop()
   }

@@ -406,7 +406,7 @@ object Dedup {
     * fixpoint, or at `maxRounds`). The doubled edge list is cut eagerly
     * once — the pair lineage is never recomputed — and then at most
     * `limit` of its rows are read back in one job (one task walking the
-    * checkpoint's blocks; the BPE trainer's `CollectPairsLimit` shape).
+    * checkpoint's blocks; the BPE trainer's `DriverWordsLimit` shape).
     *
     *  - DRIVER regime (fewer than `limit` rows, integral non-null ids):
     *    the seeded recurrence runs over arrays ([[labelOnDriver]]) and

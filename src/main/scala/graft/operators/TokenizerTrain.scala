@@ -1,5 +1,8 @@
 package graft.operators
 
+import scala.collection.mutable
+
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -113,290 +116,307 @@ object TokenizerTrain {
     out.toSeq
   }
 
-  /** One greedy-left pass applying a BATCH of merges — sound only for
-    * batches [[trainBpeMergesBatched]] accepts (pairwise
-    * symbol-disjoint, cascade-free), where a position matches at most
-    * one pair and no merged token re-enters any rule, so one combined
-    * fold ≡ the sequential per-pair folds. The batch ships as two
-    * literal maps (left → expected right, left → merged token). */
-  private def applyMergeBatch(syms: Column, ms: Seq[(String, String)]): Column = {
-    val rmap = map(ms.flatMap { case (l, r) => Seq(lit(l), lit(r)) }: _*)
-    val mmap = map(ms.flatMap { case (l, r) => Seq(lit(l), lit(l + r)) }: _*)
-    aggregate(syms,
-      array().cast("array<string>"),
-      (acc, x) =>
-        when((size(acc) > 0)
-            .and(element_at(rmap, element_at(acc, -1)) === x),
-          concat(slice(acc, lit(1), size(acc) - 1),
-            array(element_at(mmap, element_at(acc, -1)))))
-          .otherwise(concat(acc, array(x))))
-  }
-
-  /** [[trainBpeMerges]] with PROVABLY-EXACT merge batching — the same
-    * learned list, fewer driver-sequenced rounds. The sequential
-    * trainer's wall at production merge counts (~30k) is not data: the
-    * word table saturates (≈1e8 rows at 100 TB) and each round's jobs
-    * are small — it is the ROUND COUNT × fixed job overhead
-    * (TokTrainProbe: ~0.11 s/round of pure overhead even on a 176-word
-    * table ⇒ ~55 min of driver sequencing for 30k merges). This
-    * variant accepts, per round, the maximal PREFIX of the sorted
-    * candidate pairs that is provably the next run of sequential
-    * argmaxes, and applies it in one pass:
+  /** [[trainBpeMerges]]'s learned list from fewer driver-sequenced
+    * rounds. The sequential trainer's wall at production merge counts
+    * (~30k) is not data: the word table saturates (≈1e8 rows at
+    * 100 TB), so it is the ROUND COUNT × fixed job overhead
+    * (TokTrainProbe: ~0.11 s/round even on a 176-word table ⇒ ~55 min
+    * of driver sequencing for 30k merges).
     *
-    *  - '''R1 (disjoint)''': accepted pairs share no symbol — merging
-    *    one cannot change another's count (a merge only perturbs pairs
-    *    adjacent to its own symbols), so every accepted count is the
-    *    exact sequential count at its step.
-    *  - '''R2 (cascade-free)''': no accepted pair's MERGED token
-    *    equals any accepted pair's symbol — new tokens never re-enter
-    *    a batch rule, making the one-pass fold order-free and ≡ the
-    *    sequential folds.
-    *  - '''R3 (new-pair bound)''': merging (l, r) can create new pairs
-    *    only of the form (x, lr) or (lr, y), with counts bounded by
-    *    count(x, l) resp. count(r, y) — both already in the counts
-    *    table. A candidate is accepted only while its count is
-    *    STRICTLY above every earlier accepted pair's bound
-    *    B = max(maxₓ count(x, l), max_y count(r, y)), so no new pair
-    *    can overtake it (strictness also settles lex ties).
-    *  - '''Prefix rule''': stop at the FIRST candidate failing any
-    *    rule — a skipped candidate's count may have decreased, so
-    *    everything after it is unprovable this round.
+    * ONE merge core, two placements of the word arrays. Every round
+    * selects a batch of merges, folds the words with [[foldWord]], and
+    * merges each changed word's [[pairDiff]] into one driver-resident
+    * pair-count table through [[mergeDelta]]; the table starts from one
+    * complete count (the partitioned placement keeps it only while it
+    * fits [[CollectPairsLimit]]). The placement decides only how a batch
+    * is chosen and which words a round folds:
+    *
+    *  - '''Driver placement''' (word table ≤ `driverWords`, proven by
+    *    one limit+1 collect job): a round is the lazy-deletion heap's
+    *    head — the sequential argmax itself — and folds only the words
+    *    the pair → words occurrence index names. Reports 1 round: the
+    *    collect is its only job.
+    *  - '''Partitioned placement''' (the 1e8-word regime): the words
+    *    stay in an `RDD[(Array[String], Long)]`, and each round is one
+    *    single-stage job that folds every word and returns per-partition
+    *    pair deltas. A round accepts the maximal PREFIX of the sorted
+    *    candidate pairs that is provably the next run of sequential
+    *    argmaxes:
+    *    - '''R1 (disjoint)''': accepted pairs share no symbol — merging
+    *      one cannot change another's count (a merge only perturbs pairs
+    *      adjacent to its own symbols), so every accepted count is the
+    *      exact sequential count at its step.
+    *    - '''R2 (cascade-free)''': no accepted pair's MERGED token
+    *      equals any accepted pair's symbol — new tokens never re-enter
+    *      a batch rule, making the one-pass fold order-free and ≡ the
+    *      sequential folds.
+    *    - '''R3 (new-pair bound)''': merging (l, r) can create new pairs
+    *      only of the form (x, lr) or (lr, y), with counts bounded by
+    *      count(x, l) resp. count(r, y) — both already in the counts
+    *      table. A candidate is accepted only while its count is
+    *      STRICTLY above every earlier accepted pair's bound
+    *      B = max(maxₓ count(x, l), max_y count(r, y)), so no new pair
+    *      can overtake it (strictness also settles lex ties).
+    *    - '''Prefix rule''': stop at the FIRST candidate failing any
+    *      rule — a skipped candidate's count may have decreased, so
+    *      everything after it is unprovable this round.
     *
     * Every batch has length ≥ 1 (the head is the argmax by
     * construction), so this is never worse than sequential; the spec
-    * pins list-equality against [[trainBpeMerges]] to exhaustion on
-    * BOTH regimes, the q162/q162b gates pin both against the
+    * pins list-equality against [[trainBpeMerges]] to exhaustion in
+    * both placements, and the q162/q162b gates pin both against the
     * chained-CTE oracle at 128 rounds (past the gate corpus's full
-    * 89-merge vocabulary). Returns ((rank, left, right, cnt),
-    * roundsUsed) — roundsUsed is 1 on the driver-incremental regime
-    * (word table ≤ `driverWords`: one collect job, zero per-round
-    * jobs; see [[trainBpeIncremental]]).
-    *
-    * Distributed rounds maintain the pair-count table INCREMENTALLY
-    * once a single complete collect proves it fits [[CollectPairsLimit]]
-    * (the distributed analog of [[trainBpeIncremental]]'s delta
-    * maintenance): each later round's one Spark job computes only the
-    * accepted batch's count deltas over the words the fold changed —
-    * the exchange is delta-vocabulary-sized, the collect is
-    * delta-sized, and the full pair multiset is never re-exploded.
-    * `verifyDeltas` (spec-only) recounts after every round and asserts
-    * the maintained table equals the recount. */
+    * 89-merge vocabulary). Returns ((rank, left, right, cnt), rounds).
+    * `verifyDeltas` (spec-only) recounts after every round and
+    * requires the maintained table to equal the recount. */
   def trainBpeMergesBatched(wc: DataFrame, nMerges: Int,
-                            topN: Int = 1024,
                             driverWords: Int = DriverWordsLimit,
-                            verifyDeltas: Boolean = false): (Seq[(Long, String, String, Long)], Int) = {
-    // REGIME SPLIT, one level above the CollectPairsLimit fast path: a
-    // word table that fits the driver trains ENTIRELY there with
-    // incremental pair-count maintenance (below) — the corpus-sized
-    // work was already done by wordCounts' one shuffle, and per-round
-    // Spark jobs only re-derive counts the merge itself determines.
-    // The limit+1 collect proves the regime (≤ limit rows ⇒ complete);
-    // the true 1e8-word regime falls through to the distributed rounds.
-    val head = wc.select(col("word"), col("cnt"))
-      .limit(driverWords + 1).collect()
+                            verifyDeltas: Boolean = false): (Seq[(Long, String, String, Long)], Int) =
+    trainBpe(wc, nMerges, driverWords, verifyDeltas)
+
+  /** [[trainBpeMergesBatched]] with the pair limit exposed (specs pass
+    * a tiny one to force the over-limit recount rounds). */
+  private[operators] def trainBpe(wc: DataFrame, nMerges: Int, driverWords: Int,
+      verifyDeltas: Boolean, pairLimit: Int = CollectPairsLimit): (Seq[(Long, String, String, Long)], Int) = {
+    val head = wc.select(col("word"), col("cnt")).limit(driverWords + 1).collect()
     if (head.length <= driverWords) {
-      val words = head.map(r =>
-        (r.getString(0).map(_.toString).toArray, r.getLong(1)))
-      return (trainBpeIncremental(words, nMerges), 1)
+      val words = head.map(r => (r.getString(0).map(_.toString).toArray, r.getLong(1)))
+      (new OnDriver(words).run(nMerges, verifyDeltas)._1, 1)
+    } else {
+      val spark = wc.sparkSession
+      import spark.implicits._
+      val words = withSyms(wc).select(col("syms"), col("cnt")).as[(Array[String], Long)].rdd
+      new Partitioned(words.localCheckpoint(), pairLimit).run(nMerges, verifyDeltas)
     }
-    val spark = wc.sparkSession
-    import spark.implicits._
-    // the loop state never reads `word` (rounds consume only (cnt, syms);
-    // the merge list is the output) — dropping it halves the per-round
-    // lineage-cut block bytes
-    var syms = withSyms(wc).select(col("cnt"), col("syms")).localCheckpoint(false)
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var rounds = 0
-    var exhausted = false
-    // Driver-maintained pair-count table for the INCREMENTAL distributed
-    // regime (r19 verdict #1 — the distributed analog of
-    // [[trainBpeIncremental]]'s delta maintenance): once one complete
-    // collect proves the pair table fits CollectPairsLimit, later rounds
-    // never recount it. Each round's ONE Spark job computes only the
-    // accepted batch's COUNT DELTAS over the words the fold changed and
-    // the driver folds them into this map — exactly recount-equivalent
-    // (a merge perturbs only pairs adjacent to its own occurrences;
-    // `verifyDeltas` recounts and asserts per round, spec-pinned). If
-    // the table ever outgrows the limit the map drops and the next
-    // round re-proves the regime with the limit+1 collect, preserving
-    // the driver-memory bound.
-    //
-    // In this regime the word table lives as a plain RDD and rounds run
-    // as SINGLE-STAGE RDD jobs: the measured round wall was FIXED
-    // per-round overhead, not data (TokTrainProbe r20: 0.29 s/round on
-    // the DataFrame loop at 96k words AND at 176 words — Catalyst
-    // analysis/optimization of a fresh plan every round plus a 2-stage
-    // partial/final aggregation), and an RDD round skips all of it: no
-    // SQL planning, no exchange (per-partition delta maps merge on the
-    // driver — they are bounded by the touched pair vocabulary), one
-    // narrow fold pass, lineage cut per round via RDD.localCheckpoint
-    // (the graft-cc-stats rule: iterative loops must not grow task
-    // binaries with round depth).
-    var pcOpt: Option[scala.collection.mutable.HashMap[(String, String), Long]] = None
-    var symsRdd: org.apache.spark.rdd.RDD[(Array[String], Long)] = null
-    while (out.size < nMerges && !exhausted) {
-      // The round's wall is FIXED JOB OVERHEAD, not data (TokTrainProbe:
-      // ~1.3 s/round across 3 jobs at any word-table size) — so when the
-      // whole pair-count table is small enough to ship, ONE job collects
-      // it and the topN sort + byRight/byLeft new-pair bounds compute on
-      // the driver: identical candidate prefix, a third of the jobs. The
-      // limit+1 collect proves completeness (≤ limit rows ⇒ nothing was
-      // cut) without ever pulling an over-limit table; past the limit —
-      // the true 1e8-word regime where the pair vocabulary is huge —
-      // the distributed path below computes the same bounds with
-      // exchanges. The syms cut stays LAZY here so the re-segmentation
-      // folds into this same job (materializing truncates its lineage
-      // each round, keeping round k's closure one round deep).
-      val cand: Array[org.apache.spark.sql.Row] = pcOpt match {
-        case Some(pc) => candidateRows(pc, topN)
-        case None =>
-      val whole = pairCountsOf(syms).limit(CollectPairsLimit + 1).collect()
-      if (whole.length <= CollectPairsLimit) {
-        val pc = scala.collection.mutable.HashMap.empty[(String, String), Long]
-        whole.foreach(r => pc.update((r.getString(0), r.getString(1)), r.getLong(2)))
-        pcOpt = Some(pc)
-        symsRdd = syms.select(col("syms"), col("cnt")).as[(Array[String], Long)].rdd
-        candidateRows(pc, topN)
-      } else {
-        // EAGER cuts on the wide path: the bound joins add two plan
-        // branches per round; past ~100 lazily-cut rounds the
-        // accumulated closure graph overflowed task deserialization
-        val counts = pairCountsOf(syms).localCheckpoint(true)
-        val byRight = counts.groupBy(col("r")).agg(max(col("cnt")).as("bl"))
-          .withColumnRenamed("r", "k1")
-        val byLeft = counts.groupBy(col("l")).agg(max(col("cnt")).as("br"))
-          .withColumnRenamed("l", "k2")
-        counts
-          .orderBy(col("cnt").desc, col("l").asc, col("r").asc).limit(topN)
-          .join(broadcast(byRight), col("l") === col("k1"), "left")
-          .join(broadcast(byLeft), col("r") === col("k2"), "left")
-          .select(col("l"), col("r"), col("cnt"),
-            greatest(coalesce(col("bl"), lit(0L)), coalesce(col("br"), lit(0L))).as("b"))
-          .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-          .collect()
-      }
-      }
-      if (cand.isEmpty) exhausted = true
-      else {
-        val used = scala.collection.mutable.Set.empty[String]
-        val batch = scala.collection.mutable.ArrayBuffer.empty[(String, String, Long)]
-        var maxB = Long.MinValue
-        var stop = false
-        var i = 0
-        while (!stop && i < cand.length && out.size + batch.size < nMerges) {
-          val (l, r, c, b) =
-            (cand(i).getString(0), cand(i).getString(1), cand(i).getLong(2), cand(i).getLong(3))
-          val m = l + r
-          // `used` holds every accepted pair's symbols AND merged token,
-          // so the three membership tests cover R1 and both directions
-          // of R2 (a candidate whose symbol is an accepted merged token,
-          // and a candidate whose merged token is an accepted symbol).
-          // l == r candidates need no special case: m = l+r is strictly
-          // longer than either symbol, so it can never collide with its
-          // own pair's symbols.
-          val ok = (batch.isEmpty || c > maxB) &&
-            !used.contains(l) && !used.contains(r) && !used.contains(m)
-          if (ok) {
-            batch += ((l, r, c))
-            used += l; used += r; used += m
-            maxB = math.max(maxB, b)
-          } else stop = true
-          i += 1
-        }
+  }
+
+  private type Pair = (String, String)
+
+  /** Where the word arrays live — all the round loop leaves open. */
+  private abstract class Placement {
+    /** The delta-maintained pair-count table, while it is on the driver. */
+    def table: Option[mutable.HashMap[Pair, Long]]
+    /** The next provably sequential run of at most `budget` merges,
+      * (left, right, cnt); empty once no pair is left. */
+    def select(budget: Int): Seq[(String, String, Long)]
+    /** Fold the words by `batch` and merge their pair deltas into `table`. */
+    def fold(batch: Seq[(String, String, Long)]): Unit
+    /** A from-scratch pair count of the current words. */
+    def recount(): collection.Map[Pair, Long]
+
+    final def run(nMerges: Int, verifyDeltas: Boolean): (Seq[(Long, String, String, Long)], Int) = {
+      val out = mutable.ArrayBuffer.empty[(Long, String, String, Long)]
+      def next() = if (out.size < nMerges) select(nMerges - out.size) else Nil
+      var rounds = 0
+      var batch = next()
+      while (batch.nonEmpty) {
         batch.foreach { case (l, r, c) => out += ((out.size.toLong, l, r, c)) }
-        pcOpt match {
-          case Some(pc) if batch.nonEmpty =>
-            // ONE single-stage RDD job per round: fold every word (the
-            // same greedy-left single-lookup pass as MergeBatchFold —
-            // foldWord returns the INPUT REFERENCE when nothing merged),
-            // accumulate the changed words' pair deltas inside the same
-            // pass, and persist ONE element per partition: the folded
-            // word array plus its delta map. The delta collect
-            // materializes the round's checkpoint; the next round
-            // flatMaps the words back out of the same blocks. Unchanged
-            // words keep their previous round's array REFERENCE, so the
-            // per-round heap growth is only the touched words.
-            val rules = new java.util.HashMap[String, Array[String]](batch.size * 2)
-            batch.foreach { case (l, r, _) => rules.put(l, Array(r, l + r)) }
-            val staged = symsRdd.mapPartitions { it =>
-              val acc = scala.collection.mutable.HashMap.empty[(String, String), Long]
-              val out = scala.collection.mutable.ArrayBuffer.empty[(Array[String], Long)]
-              it.foreach { case (a, c) =>
-                val n = foldWord(a, rules)
-                if (n ne a) accumulatePairDeltas(acc, a, n, c)
-                out += ((n, c))
-              }
-              Iterator.single((out.toArray, acc.toArray))
-            }.localCheckpoint()
-            staged.map(_._2).collect().foreach(_.foreach { case (key, dc) =>
-              val nv = pc.getOrElse(key, 0L) + dc
-              require(nv >= 0L,
-                s"BPE delta maintenance drove pair $key below zero ($nv)")
-              if (nv == 0L) pc.remove(key) else pc.update(key, nv)
-            })
-            symsRdd = staged.flatMap(_._1.iterator)
-            if (verifyDeltas) {
-              val recount = scala.collection.mutable.HashMap.empty[(String, String), Long]
-              symsRdd.mapPartitions(partitionPairCounts).collect()
-                .foreach { case (k, c) =>
-                  recount.update(k, recount.getOrElse(k, 0L) + c) }
-              require(recount == pc,
-                s"delta-maintained pair table diverged from recount at round $rounds")
-            }
-            // the memory bound the limit+1 collect enforced: a table
-            // that outgrew the limit drops back to the recount regimes
-            // (rare — the pair vocabulary saturates with the word
-            // vocabulary), materializing the RDD state as an eager
-            // DataFrame cut so the recount path re-proves (or refutes)
-            // the regime next round
-            if (pc.size > CollectPairsLimit) {
-              pcOpt = None
-              syms = symsRdd.toDF("syms", "cnt").localCheckpoint(true)
-              symsRdd = null
-            }
-          case _ =>
-            // recount regimes: lazy cut, the next round's collect job
-            // computes this re-segmentation and truncates its lineage
-            // in the same pass. The fold is the reference-object
-            // expression (MergeBatchFold ≡ applyMergeBatch), so the
-            // generated source is round-invariant and codegen compiles
-            // ONCE for the whole training run.
-            val bridge = org.apache.spark.sql.graftbridge.Bridge
-            syms = syms.select(col("cnt"),
-              bridge.column(graft.functions.MergeBatchFold(
-                bridge.expression(col("syms")),
-                batch.toSeq.map(t => (t._1, t._2)))).as("syms"))
-              .localCheckpoint(false)
-        }
+        fold(batch)
+        if (verifyDeltas) table.foreach(pc => require(recount() == pc,
+          s"delta-maintained pair table diverged from recount at round $rounds"))
         rounds += 1
-        // cand smaller than topN AND nothing accepted → truly no pair
-        if (batch.isEmpty) exhausted = true
+        batch = next()
+      }
+      (out.toSeq, rounds)
+    }
+  }
+
+  /** Driver placement: one merge per round, the lazy-deletion heap's
+    * head. Heap entries are (l, r, cnt) snapshots pushed whenever a
+    * round settles a new count and validated against the live table on
+    * pop, so the popped maximum is exactly the sequential trainer's
+    * TakeOrdered argmax (symbols are [a-z0-9] strings, where Java
+    * code-unit order ≡ the engines' binary order). A round folds only
+    * the words the occurrence index names: O(affected words · word
+    * length) + heap ops, sub-millisecond where a distributed round
+    * pays a job. */
+  private final class OnDriver(words: Array[(Array[String], Long)]) extends Placement {
+    private val syms = words.map(_._1)
+    private val cnts = words.map(_._2)
+    private val pc = mutable.HashMap.empty[Pair, Long]
+    private val occ = mutable.HashMap.empty[Pair, mutable.Set[Int]]
+    private val heap = new java.util.PriorityQueue[(String, String, Long)](ByCount)
+    private val touched = mutable.HashSet.empty[Pair]
+    val table: Option[mutable.HashMap[Pair, Long]] = Some(pc)
+
+    /** Re-segment word `w`: one pair diff updates the table and the
+      * occurrence index together. */
+    private def refold(w: Int, o: Array[String], n: Array[String]): Unit = {
+      pairDiff(o, n) { (p, before, after) =>
+        mergeDelta(pc, p, (after - before).toLong * cnts(w))
+        touched += p
+        if (after == 0) occ(p) -= w
+        else if (before == 0) occ.getOrElseUpdate(p, mutable.Set.empty) += w
+      }
+      syms(w) = n
+    }
+
+    private def pushTouched(): Unit = {
+      touched.foreach(p => pc.get(p).foreach(c => heap.add((p._1, p._2, c))))
+      touched.clear()
+    }
+
+    // the complete count: every word's diff from the empty segmentation
+    syms.indices.foreach(w => refold(w, Array.empty, syms(w)))
+    pushTouched()
+
+    def select(budget: Int): Seq[(String, String, Long)] = {
+      var best: (String, String, Long) = null
+      while (best == null && !heap.isEmpty) {
+        val e = heap.poll()
+        if (pc.get((e._1, e._2)).contains(e._3)) best = e // else stale
+      }
+      Option(best).toList
+    }
+
+    def fold(batch: Seq[(String, String, Long)]): Unit = {
+      val rules = rulesOf(batch)
+      batch.foreach { case (l, r, _) =>
+        occ.get((l, r)).fold(Array.empty[Int])(_.toArray).foreach { w =>
+          val n = foldWord(syms(w), rules)
+          if (n ne syms(w)) refold(w, syms(w), n)
+        }
+      }
+      pushTouched()
+    }
+
+    def recount(): collection.Map[Pair, Long] =
+      partitionPairCounts(syms.iterator.zip(cnts.iterator)).toMap
+  }
+
+  /** Partitioned placement: the words never leave the RDD. Each round
+    * is ONE single-stage `mapPartitions` job — no SQL planning, no
+    * exchange — that folds every word (unchanged words keep their array
+    * REFERENCE, so per-round heap growth is only the touched words) and
+    * persists one element per partition: the folded words plus their
+    * summed pair deltas. The delta collect materializes the round's
+    * local checkpoint, which keeps every task one round deep.
+    *
+    * While the table has at most `pairLimit` pairs it stays on the
+    * driver, delta-maintained; past the limit it is dropped, and each
+    * round recounts the pairs over the same RDD and collects only the
+    * top candidates and the symbol-vocabulary-sized bound maxima. A
+    * recount that fits the limit puts the table back on the driver. */
+  private final class Partitioned(private var state: RDD[(Array[String], Long)], pairLimit: Int)
+      extends Placement {
+    var table: Option[mutable.HashMap[Pair, Long]] = None
+
+    def select(budget: Int): Seq[(String, String, Long)] = {
+      table = table.filter(_.size <= pairLimit)
+      val cand = table match {
+        case Some(pc) => candidates(pc)
+        case None =>
+          val counts = pairCounts(state)
+          if (counts.count() <= pairLimit) {
+            val pc = mutable.HashMap.empty[Pair, Long] ++= counts.collect()
+            table = Some(pc)
+            candidates(pc)
+          } else withBounds(counts.map(triple).takeOrdered(TopN)(ByCount),
+            counts.flatMap(symbolEnds).reduceByKey(maxBoth).collectAsMap())
+      }
+      provablePrefix(cand, budget)
+    }
+
+    def fold(batch: Seq[(String, String, Long)]): Unit = {
+      val rules = rulesOf(batch)
+      val track = table.isDefined
+      val staged = state.mapPartitions { it =>
+        val acc = mutable.HashMap.empty[Pair, Long]
+        val words = it.map { case (a, c) =>
+          val n = foldWord(a, rules)
+          if (track && (n ne a)) pairDiff(a, n) { (p, before, after) =>
+            acc.update(p, acc.getOrElse(p, 0L) + (after - before).toLong * c)
+          }
+          (n, c)
+        }.toArray
+        Iterator.single((words, acc.toArray))
+      }.localCheckpoint()
+      table.foreach(pc => staged.map(_._2).collect()
+        .foreach(_.foreach { case (p, d) => mergeDelta(pc, p, d) }))
+      state = staged.flatMap(_._1.iterator)
+    }
+
+    def recount(): collection.Map[Pair, Long] = pairCounts(state).collectAsMap()
+  }
+
+  /** The R1–R3 prefix of the candidates (see [[trainBpeMergesBatched]]),
+    * at most `budget` long. */
+  private def provablePrefix(cand: Array[(String, String, Long, Long)],
+                             budget: Int): Seq[(String, String, Long)] = {
+    val used = mutable.Set.empty[String]
+    val batch = mutable.ArrayBuffer.empty[(String, String, Long)]
+    var maxB = Long.MinValue
+    var ok = true
+    var i = 0
+    while (ok && i < cand.length && batch.size < budget) {
+      val (l, r, c, b) = cand(i)
+      val m = l + r
+      // `used` holds every accepted pair's symbols AND merged token, so
+      // the three membership tests cover R1 and both directions of R2.
+      // l == r needs no special case: m is strictly longer than either
+      // symbol, so it never collides with its own pair's symbols.
+      ok = (batch.isEmpty || c > maxB) &&
+        !used.contains(l) && !used.contains(r) && !used.contains(m)
+      if (ok) {
+        batch += ((l, r, c))
+        used += l; used += r; used += m
+        maxB = math.max(maxB, b)
+      }
+      i += 1
+    }
+    batch.toSeq
+  }
+
+  /** The top [[TopN]] pairs of a driver-resident table by
+    * (cnt desc, l, r), each with its R3 new-pair bound. */
+  private def candidates(pc: mutable.HashMap[Pair, Long]): Array[(String, String, Long, Long)] =
+    withBounds(pc.iterator.map(triple).toArray.sorted(ByCount).take(TopN),
+      pc.toSeq.flatMap(symbolEnds).groupMapReduce(_._1)(_._2)(maxBoth))
+
+  /** Attach B = max(maxₓ count(x, l), max_y count(r, y)); `maxima` maps
+    * a symbol to (max count ending in it, max count starting with it). */
+  private def withBounds(top: Array[(String, String, Long)],
+                         maxima: collection.Map[String, (Long, Long)]) =
+    top.map { case (l, r, c) =>
+      (l, r, c, math.max(maxima.get(l).fold(0L)(_._1), maxima.get(r).fold(0L)(_._2))) }
+
+  private def triple(e: (Pair, Long)): (String, String, Long) = (e._1._1, e._1._2, e._2)
+
+  private def symbolEnds(e: (Pair, Long)): Iterator[(String, (Long, Long))] =
+    Iterator((e._1._2, (e._2, 0L)), (e._1._1, (0L, e._2)))
+
+  private def maxBoth(a: (Long, Long), b: (Long, Long)): (Long, Long) =
+    (math.max(a._1, b._1), math.max(a._2, b._2))
+
+  /** (cnt desc, left asc, right asc) — the sequential trainer's argmax order. */
+  private object ByCount extends Ordering[(String, String, Long)] {
+    def compare(a: (String, String, Long), b: (String, String, Long)): Int = {
+      val c = java.lang.Long.compare(b._3, a._3)
+      if (c != 0) c
+      else {
+        val lc = a._1.compareTo(b._1)
+        if (lc != 0) lc else a._2.compareTo(b._2)
       }
     }
-    (out.toSeq, rounds)
   }
 
-  /** The candidate prefix (l, r, cnt, bound) of a DRIVER-RESIDENT pair
-    * table — identical ordering, truncation, and R3 bounds to the
-    * one-job collect path, so batch boundaries cannot depend on which
-    * path produced the rows. */
-  private def candidateRows(
-      pc: scala.collection.mutable.HashMap[(String, String), Long],
-      topN: Int): Array[org.apache.spark.sql.Row] = {
-    val rows = pc.iterator.map { case ((l, r), c) => (l, r, c) }.toArray
-    val byRight = rows.groupBy(_._2).map { case (k, v) => k -> v.map(_._3).max }
-    val byLeft = rows.groupBy(_._1).map { case (k, v) => k -> v.map(_._3).max }
-    rows.sortBy { case (l, r, c) => (-c, l, r) }
-      .take(topN)
-      .map { case (l, r, c) =>
-        org.apache.spark.sql.Row(l, r, c,
-          math.max(byRight.getOrElse(l, 0L), byLeft.getOrElse(r, 0L))) }
+  /** Candidates per partitioned round; the R1–R3 prefix rarely reaches it. */
+  private val TopN = 1024
+
+  /** A batch as fold rules: left → [expected right, merged token]. */
+  private def rulesOf(batch: Seq[(String, String, Long)]): java.util.HashMap[String, Array[String]] = {
+    val rules = new java.util.HashMap[String, Array[String]](batch.size * 2)
+    batch.foreach { case (l, r, _) => rules.put(l, Array(r, l + r)) }
+    rules
   }
 
-  /** [[MergeBatchFold]]'s greedy-left single-lookup pass on a plain
-    * array (`rules`: left → [expected right, merged token]) — the RDD
-    * regime's fold. Returns the INPUT reference when nothing merged, so
-    * the delta pass detects untouched words with a pointer compare. */
+  /** The one array fold: a greedy-left single-lookup pass — if the
+    * output's last symbol has a rule whose expected right is the
+    * incoming symbol, coalesce. ≡ [[applyMerge]] for one rule, and for
+    * an R1–R3 batch ≡ the sequential per-pair folds (a position matches
+    * at most one rule, and no merged token re-enters any). Returns the
+    * INPUT reference when nothing merged, so callers detect untouched
+    * words with a pointer compare. */
   private[operators] def foldWord(a: Array[String],
       rules: java.util.HashMap[String, Array[String]]): Array[String] = {
     val n = a.length
@@ -420,9 +440,8 @@ object TokenizerTrain {
   }
 
   /** Adjacent-pair occurrence counts of one word's symbol array. */
-  private def wordPairCounts(a: Array[String])
-      : scala.collection.mutable.HashMap[(String, String), Int] = {
-    val h = scala.collection.mutable.HashMap.empty[(String, String), Int]
+  private def wordPairCounts(a: Array[String]): mutable.HashMap[Pair, Int] = {
+    val h = mutable.HashMap.empty[Pair, Int]
     var i = 0
     while (i + 1 < a.length) {
       val p = (a(i), a(i + 1))
@@ -432,32 +451,33 @@ object TokenizerTrain {
     h
   }
 
-  /** Fold one changed word's pair-count deltas into a per-partition
-    * accumulator: new pairs at +cnt, old pairs at −cnt. The accumulator
-    * is bounded by the partition's touched pair vocabulary, so the
-    * driver merge replaces the aggregation exchange outright.
-    * Equivalent to `pairCountsOf(new) − pairCountsOf(old)` by
-    * construction (the fold changes nothing else), which `verifyDeltas`
-    * re-proves per round. */
-  private def accumulatePairDeltas(
-      acc: scala.collection.mutable.HashMap[(String, String), Long],
-      o: Array[String], n: Array[String], c: Long): Unit = {
+  /** The one per-word pair diff: `f(pair, before, after)` for every
+    * pair whose occurrence count differs between the word's old
+    * segmentation `o` and new one `n`. A word of weight c contributes
+    * (after − before)·c to the pair's count — the fold changes nothing
+    * else, which `verifyDeltas` re-proves per round. */
+  private def pairDiff(o: Array[String], n: Array[String])(f: (Pair, Int, Int) => Unit): Unit = {
     val before = wordPairCounts(o)
     val after = wordPairCounts(n)
     (before.keySet ++ after.keySet).foreach { p =>
-      val d = (after.getOrElse(p, 0) - before.getOrElse(p, 0)).toLong * c
-      if (d != 0L) {
-        val nv = acc.getOrElse(p, 0L) + d
-        if (nv == 0L) acc.remove(p) else acc.update(p, nv)
-      }
+      val b = before.getOrElse(p, 0)
+      val a = after.getOrElse(p, 0)
+      if (a != b) f(p, b, a)
     }
   }
 
-  /** Full per-partition pair counts of a (syms, cnt) iterator — the
-    * `verifyDeltas` recount's partition leg (driver merges partitions). */
-  private def partitionPairCounts(it: Iterator[(Array[String], Long)])
-      : Iterator[((String, String), Long)] = {
-    val acc = scala.collection.mutable.HashMap.empty[(String, String), Long]
+  /** The one pair-table delta merge. A pair whose count reaches zero
+    * leaves the table; a count below zero can only be a maintenance
+    * bug, so it throws. */
+  private[operators] def mergeDelta(pc: mutable.HashMap[Pair, Long], p: Pair, d: Long): Unit = {
+    val nv = pc.getOrElse(p, 0L) + d
+    require(nv >= 0L, s"BPE delta maintenance drove pair $p below zero ($nv)")
+    if (nv == 0L) pc.remove(p) else pc.update(p, nv)
+  }
+
+  /** Full per-partition pair counts of a (syms, cnt) iterator. */
+  private def partitionPairCounts(it: Iterator[(Array[String], Long)]): Iterator[(Pair, Long)] = {
+    val acc = mutable.HashMap.empty[Pair, Long]
     it.foreach { case (a, c) =>
       wordPairCounts(a).foreach { case (p, k) =>
         acc.update(p, acc.getOrElse(p, 0L) + k.toLong * c)
@@ -466,142 +486,20 @@ object TokenizerTrain {
     acc.iterator
   }
 
-  /** Word tables at or below this many rows train entirely DRIVER-SIDE
-    * ([[trainBpeIncremental]]) — the regime split the round cost law
-    * demands: rounds never touch the corpus (their input is the
-    * saturating word table), so once that table fits one machine the
-    * per-round Spark job is pure overhead (TokTrainProbe r18: 0.71–0.77
-    * s/round of mostly fixed job cost at 96k words ⇒ ~2.2 h for a 30k
-    * vocab). At the limit the table is ~260k (word, cnt) rows — a few
-    * MB — and the pair-occurrence index it builds stays well under
-    * driver headroom; past it (the true 1e8-word regime) the
-    * distributed batched rounds below carry on unchanged. */
+  /** The complete pair-count table of a partitioned word state. */
+  private def pairCounts(state: RDD[(Array[String], Long)]): RDD[(Pair, Long)] =
+    state.mapPartitions(partitionPairCounts).reduceByKey(_ + _)
+
+  /** Word tables at or below this many rows take the driver placement
+    * of [[trainBpeMergesBatched]]: rounds never touch the corpus (their
+    * input is the saturating word table), so once that table fits one
+    * machine a per-round Spark job is pure overhead (TokTrainProbe r18:
+    * 0.71–0.77 s/round of mostly fixed job cost at 96k words ⇒ ~2.2 h
+    * for a 30k vocab). At the limit the table is ~260k (word, cnt)
+    * rows — a few MB — and the pair-occurrence index it builds stays
+    * well under driver headroom; past it (the true 1e8-word regime) the
+    * partitioned placement runs. */
   val DriverWordsLimit: Int = 1 << 18
-
-  /** The classic in-memory BPE trainer with INCREMENTAL pair-count
-    * maintenance — what industrial single-node trainers do, and the
-    * r18-measured answer to the per-round recount: a merge (l, r)
-    * perturbs only pairs adjacent to its own occurrences, so each
-    * round updates the count table by the DELTAS of the words it
-    * touched (found via a pair → words index) instead of re-exploding
-    * every word. The argmax is a lazy-deletion heap ordered
-    * (cnt desc, left asc, right asc) — entries are (pair, count)
-    * snapshots pushed on every count change and validated against the
-    * live table on pop, so the popped maximum is exactly the
-    * sequential trainer's TakeOrdered argmax (symbols are [a-z0-9]
-    * strings, where Java code-unit order ≡ the engines' binary order).
-    * Each round then applies the same greedy-left fold as
-    * [[applyMerge]] to the affected words only. Result is bit-equal to
-    * [[trainBpeMerges]] by construction (same argmax, same fold, same
-    * exhaustion rule: stop when no pair remains); the spec pins
-    * list-equality to exhaustion and the q162 gate pins the chained-CTE
-    * oracle through this path. Cost: O(affected words · word length)
-    * per round + heap ops — sub-millisecond rounds at the 96k-word
-    * table where the distributed round paid 0.7 s of job overhead. */
-  private[operators] def trainBpeIncremental(
-      words: Array[(Array[String], Long)],
-      nMerges: Int): Seq[(Long, String, String, Long)] = {
-    import scala.collection.mutable
-    type P = (String, String)
-    val syms: Array[Array[String]] = words.map(_._1)
-    val cnts: Array[Long] = words.map(_._2)
-    val pc = mutable.HashMap.empty[P, Long]
-    val occ = mutable.HashMap.empty[P, mutable.Set[Int]]
-
-    def wordPairs(a: Array[String]): mutable.HashMap[P, Int] = {
-      val h = mutable.HashMap.empty[P, Int]
-      var i = 0
-      while (i + 1 < a.length) {
-        val p = (a(i), a(i + 1))
-        h.update(p, h.getOrElse(p, 0) + 1)
-        i += 1
-      }
-      h
-    }
-
-    final case class Entry(cnt: Long, l: String, r: String)
-    val pq = new java.util.PriorityQueue[Entry](11,
-      new java.util.Comparator[Entry] {
-        def compare(a: Entry, b: Entry): Int = {
-          val c = java.lang.Long.compare(b.cnt, a.cnt) // count desc
-          if (c != 0) c
-          else {
-            val lc = a.l.compareTo(b.l) // then (left, right) asc
-            if (lc != 0) lc else a.r.compareTo(b.r)
-          }
-        }
-      })
-
-    var wi = 0
-    while (wi < syms.length) {
-      val c = cnts(wi)
-      wordPairs(syms(wi)).foreach { case (p, k) =>
-        pc.update(p, pc.getOrElse(p, 0L) + k * c)
-        occ.getOrElseUpdate(p, mutable.Set.empty) += wi
-      }
-      wi += 1
-    }
-    pc.foreach { case ((l, r), c) => pq.add(Entry(c, l, r)) }
-
-    // exactly applyMerge's greedy-left fold; null = word untouched
-    def greedyMergeWord(a: Array[String], l: String, r: String,
-                        m: String): Array[String] = {
-      val out = new mutable.ArrayBuffer[String](a.length)
-      var changed = false
-      var i = 0
-      while (i < a.length) {
-        val x = a(i)
-        if (out.nonEmpty && out(out.length - 1) == l && x == r) {
-          out(out.length - 1) = m
-          changed = true
-        } else out += x
-        i += 1
-      }
-      if (changed) out.toArray else null
-    }
-
-    val res = mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    var exhausted = false
-    while (res.size < nMerges && !exhausted) {
-      var best: Entry = null
-      while (best == null && !pq.isEmpty) {
-        val e = pq.poll()
-        if (pc.getOrElse((e.l, e.r), 0L) == e.cnt) best = e // else stale
-      }
-      if (best == null) exhausted = true
-      else {
-        val (l, r, c) = (best.l, best.r, best.cnt)
-        res += ((res.size.toLong, l, r, c))
-        val m = l + r
-        val affected = occ.getOrElse((l, r), mutable.Set.empty).toArray
-        var j = 0
-        while (j < affected.length) {
-          val w = affected(j)
-          val nw = greedyMergeWord(syms(w), l, r, m)
-          if (nw != null) {
-            val c0 = cnts(w)
-            val before = wordPairs(syms(w))
-            val after = wordPairs(nw)
-            (before.keySet ++ after.keySet).foreach { p =>
-              val bk = before.getOrElse(p, 0)
-              val ak = after.getOrElse(p, 0)
-              if (ak != bk) {
-                val nv = pc.getOrElse(p, 0L) + (ak - bk).toLong * c0
-                if (nv <= 0L) pc.remove(p)
-                else { pc.update(p, nv); pq.add(Entry(nv, p._1, p._2)) }
-              }
-              if (bk > 0 && ak == 0) occ.get(p).foreach(_ -= w)
-              else if (bk == 0 && ak > 0)
-                occ.getOrElseUpdate(p, mutable.Set.empty) += w
-            }
-            syms(w) = nw
-          }
-          j += 1
-        }
-      }
-    }
-    res.toSeq
-  }
 
   /** Per-symbol unigram counts over a (word, cnt, syms) table:
     * (s, ucnt) — symbol-vocabulary sized. */
@@ -613,12 +511,15 @@ object TokenizerTrain {
     * verbatim with the oracle's HUGEINT arithmetic). */
   val WpScale = 1000000000000L // 10^12
 
-  /** Pair-count tables at or below this many rows collect WHOLE per
-    * round ([[trainBpeMergesBatched]]'s one-job fast path — ~6 MB of
-    * (l, r, cnt) rows at the limit). The pair vocabulary saturates with
-    * the word vocabulary, so even 1e8-word corpora usually sit under
-    * it; the limit+1 collect detects the exception and falls back to
-    * the distributed bound computation. */
+  /** The partitioned placement of [[trainBpeMergesBatched]] keeps its
+    * pair-count table on the driver, delta-maintained, while the table
+    * has at most this many pairs (~6 MB of (l, r, cnt) entries at the
+    * limit). The pair vocabulary saturates with the word vocabulary, so
+    * even 1e8-word corpora usually sit under it; over it, each round
+    * recounts the pairs over the word RDD and collects only the top
+    * candidates and the per-symbol bound maxima. The driver placement
+    * always keeps its table: its word table is already bounded by
+    * [[DriverWordsLimit]]. */
   val CollectPairsLimit: Int = 1 << 17
 
   /** WordPiece-objective training: per round the merged pair maximizes

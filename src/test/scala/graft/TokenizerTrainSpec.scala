@@ -107,6 +107,9 @@ class TokenizerTrainSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val (bat, _) = TokenizerTrain.trainBpeMergesBatched(wc, nMerges = 512,
       driverWords = 0, verifyDeltas = true)
     assert(bat == seq)
+    val (batD, _) = TokenizerTrain.trainBpeMergesBatched(wc, nMerges = 512,
+      verifyDeltas = true)
+    assert(batD == seq)
     val tricky = TokenizerTrain.wordCounts(
       corpus(Seq.fill(6)("xab").mkString(" "), Seq.fill(5)("cd").mkString(" "),
         "ab ab ab"), "text")
@@ -114,6 +117,9 @@ class TokenizerTrainSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val (batT, _) = TokenizerTrain.trainBpeMergesBatched(tricky, nMerges = 8,
       driverWords = 0, verifyDeltas = true)
     assert(batT == seqT)
+    val (batTD, _) = TokenizerTrain.trainBpeMergesBatched(tricky, nMerges = 8,
+      verifyDeltas = true)
+    assert(batTD == seqT)
     // a pair must VANISH from the maintained table when its count hits
     // zero: merging (a,a) on "aaaa" leaves [aa,aa] — (a,a) drops from 3
     // to 0 and (aa,aa) appears; exhaustion then walks the new pairs down
@@ -122,6 +128,9 @@ class TokenizerTrainSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val (batV, _) = TokenizerTrain.trainBpeMergesBatched(vanish, nMerges = 8,
       driverWords = 0, verifyDeltas = true)
     assert(batV == seqV)
+    val (batVD, _) = TokenizerTrain.trainBpeMergesBatched(vanish, nMerges = 8,
+      verifyDeltas = true)
+    assert(batVD == seqV)
   }
 
   test("trainWordPieceMerges: likelihood argmax differs from raw-count argmax") {
