@@ -1,10 +1,22 @@
 package graft
 
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+import java.util.concurrent.atomic.LongAdder
+
+import org.apache.spark.GraftListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Per-round benchmark: runs every SparkEntry query on SPARK_GRAFT_SF_DIR,
   * forcing full evaluation through the noop sink (a bare .count() would let
-  * Catalyst skip computing projected columns), and prints ONE JSON line. */
+  * Catalyst skip computing projected columns), and prints ONE JSON line.
+  * Every timed pass also carries a [[Profile]] (jobs, stages, tasks,
+  * shuffle/spill bytes, job vs driver time, planning time) under the
+  * line's "profile" key, so a regression can be traced to a layer from
+  * the artifact alone. */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -35,10 +47,7 @@ object Bench {
     //   stages back down: a fixed cores-sized count made big
     //   exact-distinct exchanges spill at 100×, while a flat wide
     //   constant taxed the small-sf suite (see Graft.tuneForScale).
-    val spark = Graft.tunedBuilder(sfDir, cpus.toInt)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .getOrCreate()
+    val spark = builder(sfDir, cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: run the full q01 pipeline once untimed so JIT/codegen/session
     // init don't land on whichever query sorts first.
@@ -79,26 +88,31 @@ object Bench {
     }
     val suite = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
-    val times = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Double]]
+    val profiles = scala.collection.mutable.Map.empty[String, scala.collection.mutable.ArrayBuffer[Profile]]
+    // each query's pass seconds, in pass order
+    def times(name: String): Seq[Double] =
+      profiles.get(name).fold(Seq.empty[Double])(_.map(_.wallMs / 1e3).toSeq)
     val failed0 = scala.collection.mutable.Set.empty[String]
+    val profiler = Profiler.attach(spark)
     for (pass <- 1 to repeat) {
       suite.foreach { case (name, fn) =>
         if (!failed0.contains(name)) {
-          val t0 = System.nanoTime()
-          val ok =
-            try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
-            catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); false }
-          val sec = (System.nanoTime() - t0) / 1e9
-          if (ok) times.getOrElseUpdate(name, scala.collection.mutable.ArrayBuffer.empty) += sec
-          else failed0 += name
+          try {
+            profiles.getOrElseUpdate(name, scala.collection.mutable.ArrayBuffer.empty) +=
+              profiler.measure(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
+          } catch { case e: Throwable =>
+            System.err.println(s"[bench] $name: $e")
+            failed0 += name
+          }
           purge() // untimed: the next query starts from a clean block store
         }
       }
       System.err.println(s"[bench] pass $pass/$repeat done")
     }
+    profiler.close()
     val results = suite.map { case (name, _) =>
       val ok = !failed0.contains(name)
-      val sorted = times.getOrElse(name, scala.collection.mutable.ArrayBuffer.empty).sorted
+      val sorted = times(name).sorted
       val sec = if (sorted.isEmpty) 0.0 else sorted(sorted.length / 2)
       System.err.println(f"[bench] $name%-22s $sec%8.2f s (median of ${sorted.length} interleaved)${if (ok) "" else " FAILED"}")
       (name, sec, ok)
@@ -111,8 +125,13 @@ object Bench {
     // but the spread is what separates a methodology change from
     // environment noise when rounds are compared
     val passes = results.map { case (k, _, _) =>
-      "\"" + k + "\":" + times.getOrElse(k, scala.collection.mutable.ArrayBuffer.empty[Double])
-        .map(t => f"$t%.3f").mkString("[", ",", "]")
+      "\"" + k + "\":" + times(k).map(t => f"$t%.3f").mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    // one execution profile per recorded pass, in pass order (the same
+    // samples as "passes"; failed queries have none)
+    val profile = results.map { case (k, _, _) =>
+      "\"" + k + "\":" + profiles.getOrElse(k, scala.collection.mutable.ArrayBuffer.empty[Profile])
+        .map(_.json).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val failed = results.filter(!_._3).map("\"" + _._1 + "\"").mkString("[", ",", "]")
     val total = results.filter(_._3).map(_._2).sum
@@ -121,19 +140,22 @@ object Bench {
     // artifact must carry, not one future readers infer. The runner sets
     // SPARK_GRAFT_ISOLATED=1 when nothing else shares the box.
     val isolated = sys.env.get("SPARK_GRAFT_ISOLATED").contains("1")
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","isolated":$isolated,"repeat":$repeat,"queries":$qs,"passes":$passes,"failed":$failed,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","isolated":$isolated,"repeat":$repeat,"queries":$qs,"passes":$passes,"failed":$failed,"sf":"$sfDir","profile":$profile}"""
     println(line)
     // The full line ALSO lands in a file: the driver's log-tail capture
     // truncates long stdout lines (r10's artifact kept only the tail,
     // "parsed": null), so the machine-readable per-query/per-pass map
     // must survive somewhere length-proof.
-    // default name carries the sf tag so concurrent runs (or runs at
-    // different scales) don't clobber one artifact
-    val sfTag = new java.io.File(sfDir).getName
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", s"BENCH_FULL_$sfTag.json")
-    try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable => System.err.println(s"[bench] write $outPath: $e") }
+    val outPath = artifactPath(sys.env.get("SPARK_GRAFT_BENCH_OUT"), sfDir, cpus, isolated,
+      p => java.nio.file.Files.exists(java.nio.file.Paths.get(p)))
+    // CREATE_NEW: a file that appeared since the name was chosen is
+    // still never replaced
+    try {
+      java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        java.nio.file.StandardOpenOption.CREATE_NEW)
+      System.err.println(s"[bench] wrote $outPath")
+    } catch { case e: Throwable => System.err.println(s"[bench] write $outPath: $e") }
     // Repeat the total on its own short line (distinct metric name so a
     // line-oriented consumer selecting on "total" matches exactly once):
     // round-5 artifact capture kept only the tail of long lines,
@@ -147,5 +169,122 @@ object Bench {
     }.mkString("{", ",", "}")
     println(s"""{"metric":"total_short","value":$total,"unit":"sec","n_queries":${results.size},"queries":$qsShort,"failed":$failed,"sf":"$sfDir"}""")
     spark.stop()
+  }
+
+  /** The session every query is timed in — the scale-tuned
+    * [[Graft.tunedBuilder]] plus the optimizer exclusion above.
+    * `Verify --plan` builds from it too, so the plan it prints is the
+    * plan the bench runs. */
+  private[graft] def builder(sfDir: String, cpus: Int): SparkSession.Builder =
+    Graft.tunedBuilder(sfDir, cpus)
+      .config("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
+
+  /** Where the full line lands: `explicit` (SPARK_GRAFT_BENCH_OUT) or
+    * `BENCH_FULL_<sf>_c<cpus>[_isolated].json`, so runs at another scale,
+    * core count or isolation never share a name. An existing file is
+    * never replaced: the first free `<stem>.<n>.json` is used instead. */
+  private[graft] def artifactPath(explicit: Option[String], sfDir: String, cpus: String,
+                                  isolated: Boolean, exists: String => Boolean): String = {
+    val sfTag = new java.io.File(sfDir).getName
+    val wanted = explicit.getOrElse(
+      s"BENCH_FULL_${sfTag}_c$cpus${if (isolated) "_isolated" else ""}.json")
+    val stem = wanted.stripSuffix(".json")
+    (Iterator.single(wanted) ++ Iterator.from(1).map(n => s"$stem.$n.json"))
+      .find(!exists(_)).get
+  }
+}
+
+/** What Spark did for one timed body. `task_ms`/`cpu_ms` sum executor
+  * run and CPU time over tasks; `job_ms` is the union of job intervals
+  * (concurrent jobs count once); `driver_gap_ms` is the wall time no
+  * job was running — planning, collects, sidecar IO, file listing;
+  * `planning_ms` sums the analysis, optimization and planning phases
+  * of every SQL execution. */
+private[graft] final case class Profile(
+    wallMs: Double, jobs: Int, stages: Long, tasks: Long, taskMs: Long, cpuMs: Long,
+    shuffleReadBytes: Long, shuffleWriteBytes: Long, spillBytes: Long,
+    jobMs: Long, planningMs: Long) {
+  def driverGapMs: Double = math.max(0.0, wallMs - jobMs)
+  def json: String =
+    f"""{"jobs":$jobs,"stages":$stages,"tasks":$tasks,"task_ms":$taskMs,"cpu_ms":$cpuMs,""" +
+    f""""shuffle_read_bytes":$shuffleReadBytes,"shuffle_write_bytes":$shuffleWriteBytes,""" +
+    f""""spill_bytes":$spillBytes,"job_ms":$jobMs,"driver_gap_ms":$driverGapMs%.1f,""" +
+    f""""planning_ms":$planningMs}"""
+}
+
+/** One [[SparkListener]] and one [[QueryExecutionListener]] on a
+  * session, summing what every job, stage, task and SQL execution
+  * between a [[measure]]'s start and end reports. Bodies must not
+  * overlap: events are attributed by time, not by caller. */
+private[graft] final class Profiler private (spark: SparkSession) {
+  private val sc = spark.sparkContext
+  private val jobStart = new ConcurrentHashMap[Int, java.lang.Long]()
+  private val jobSpans = new ConcurrentLinkedQueue[(Long, Long)]()
+  private val stages, tasks, taskMs, cpuNs, shuffleRead, shuffleWrite, spill, planningMs =
+    new LongAdder
+
+  private val jobListener = new SparkListener {
+    override def onJobStart(e: SparkListenerJobStart): Unit = jobStart.put(e.jobId, e.time)
+    override def onJobEnd(e: SparkListenerJobEnd): Unit =
+      Option(jobStart.remove(e.jobId)).foreach(t0 => jobSpans.add((t0.longValue, e.time)))
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.increment()
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = Option(e.taskMetrics).foreach { m =>
+      tasks.increment()
+      taskMs.add(m.executorRunTime)
+      cpuNs.add(m.executorCpuTime)
+      shuffleRead.add(m.shuffleReadMetrics.totalBytesRead)
+      shuffleWrite.add(m.shuffleWriteMetrics.bytesWritten)
+      spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
+    }
+  }
+  private val queryListener = new QueryExecutionListener {
+    private def planned(qe: QueryExecution): Unit = {
+      val ph = qe.tracker.phases
+      planningMs.add(Seq("analysis", "optimization", "planning")
+        .flatMap(ph.get).map(_.durationMs).sum)
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = planned(qe)
+    override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = planned(qe)
+  }
+
+  /** Listener events post asynchronously; waiting for the bus is the
+    * only way to read complete totals, and it happens outside the timer. */
+  private def drain(): Unit = GraftListenerBridge.waitUntilListenerBusEmpty(sc)
+
+  /** Runs `body` (rethrowing its failure) and profiles it. */
+  def measure(body: => Unit): Profile = {
+    drain()
+    jobStart.clear(); jobSpans.clear()
+    Seq(stages, tasks, taskMs, cpuNs, shuffleRead, shuffleWrite, spill, planningMs).foreach(_.reset())
+    val t0 = System.nanoTime()
+    body
+    val wallMs = (System.nanoTime() - t0) / 1e6
+    drain()
+    import scala.jdk.CollectionConverters._
+    val spans = jobSpans.asScala.toSeq
+    // union of [start, end] intervals: sweep in start order, adding only
+    // the part past the furthest end seen so far
+    val (covered, _) = spans.sortBy(_._1)
+      .foldLeft((0L, Long.MinValue)) { case ((sum, reach), (a, b)) =>
+        if (b <= reach) (sum, reach) else (sum + b - math.max(a, reach), b)
+      }
+    Profile(wallMs, spans.size, stages.sum, tasks.sum, taskMs.sum,
+      cpuNs.sum / 1000000L, shuffleRead.sum, shuffleWrite.sum, spill.sum, covered, planningMs.sum)
+  }
+
+  /** Removes both listeners. */
+  def close(): Unit = {
+    sc.removeSparkListener(jobListener)
+    spark.listenerManager.unregister(queryListener)
+  }
+}
+
+private[graft] object Profiler {
+  def attach(spark: SparkSession): Profiler = {
+    val p = new Profiler(spark)
+    spark.sparkContext.addSparkListener(p.jobListener)
+    spark.listenerManager.register(p.queryListener)
+    p
   }
 }

@@ -52,10 +52,10 @@ object Graft {
     *
     * BOTH knobs are gated on the input size, because both have a
     * measured small-input cost, not just a large-input win: a
-    * same-session A/B of the full 147-query suite (DriftProbe, round
-    * 14) put the widened threshold at +8.9% TOTAL at sf0.1 (17 MB —
-    * the per-partition candidate streams are small enough that the
-    * sort-based fallback's sequential merge beats the object hash
+    * same-session A/B of the full 147-query suite (round 14,
+    * DRIFT_AB_*.json) put the widened threshold at +8.9% TOTAL at
+    * sf0.1 (17 MB — the per-partition candidate streams are small
+    * enough that the sort-based fallback's sequential merge beats the object hash
     * map's per-update indirection, worst on the ANN clustering gates:
     * q120 1.34×, q119 1.32×), while the same cohort at 10× the data
     * (154 MB) already runs 13% FASTER widened — and 100× unwidened is
@@ -118,9 +118,8 @@ object Graft {
   }
 
   /** The scale-tuned local session builder shared by the measurement
-    * mains (Bench, ScaleProbe, StreamProbe — previously three copies of
-    * this block): `local[cpus]`, cores-sized shuffle partitions with
-    * AQE on, the data-GATED hash-agg fallback threshold
+    * mains (Bench, and through it `Verify --plan`; perfbench):
+    * `local[cpus]`, cores-sized shuffle partitions with AQE on, the data-GATED hash-agg fallback threshold
     * ([[fallbackThresholdFor]] — Spark's default below 64 MB of input,
     * the calibrated 128k above; see the Bench scaladoc and
     * [[tuneForScale]] for the two-sided measurements), a data-sized
@@ -128,8 +127,7 @@ object Graft {
     * [[dirBytes]] of the input directory), and the nanos-as-long
     * parquet compat the driver testdata needs. Returns the BUILDER so
     * callers can append their own configs (Bench's optimizer
-    * exclusion, StreamProbe's state store provider) before
-    * `getOrCreate()`. */
+    * exclusion) before `getOrCreate()`. */
   def tunedBuilder(sfDir: String, cpus: Int): SparkSession.Builder = {
     val bytes = dirBytes(sfDir)
     SparkSession.builder()

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions.col
 import graft.functions.K
 import graft.operators.Similarity
 
-/** Recall companion to `ScaleProbe`: the cost side of plane growth is
-  * measured there (fixed-constant vs auto-sized, 22–28× at 100×); this
+/** Recall side of ANN plane growth: the cost side is measured in
+  * SCALING.md (fixed-constant vs auto-sized, 22–28× at 100×); this
   * probe measures the RECALL side — what fraction of the exact mutual
   * kNN graph's edges the bucketed ANN candidate pass keeps as planes
   * grow, and how much of the loss the 1-flip multiprobe rule

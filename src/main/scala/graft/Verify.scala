@@ -6,8 +6,8 @@ import java.nio.file.{Files, Paths}
   *
   * Side modes (dev workflow, formerly tools/Scratch.scala):
   *   runMain graft.Verify --entry            flagship smoke (10 rows)
-  *   runMain graft.Verify --plan <query>     optimized plan + tokenizer
-  *                                           chain occurrence count
+  *   runMain graft.Verify --plan <q>[,<q>...]  optimized plan + tokenizer
+  *                                             chain occurrence count
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -68,16 +68,13 @@ object Verify {
     spark.stop()
   }
 
-  /** Plan/smoke inspection — configs aligned with the gate run so the
-    * audited plan is the plan that actually runs. */
+  /** Plan/smoke inspection in one session built like the bench's
+    * ([[Bench.builder]] at 8 cores), so the audited plan is the plan the
+    * bench runs. `--plan` takes a comma list and prints each plan under
+    * a `=== <name>` header. */
   private def inspect(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    val spark = Bench.builder(sfDir, 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args(0) match {
       case "--entry" =>
@@ -85,20 +82,22 @@ object Verify {
         println(s"=== entry rows: ${rows.length}")
         rows.take(10).foreach(r => println("=== " + r))
       case "--plan" if args.length < 2 =>
-        System.err.println("usage: Verify --plan <query_name>")
+        System.err.println("usage: Verify --plan <query_name>[,<query_name>...]")
         spark.stop()
         sys.exit(1)
       case "--plan" =>
-        val df = SparkEntry.queries(args(1))(spark,
-          sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001"))
-        if (sys.env.get("PLAN_MODE").contains("formatted")) df.explain("formatted")
-        else {
-          val plan = df.queryExecution.optimizedPlan.toString
-          println("=== occurrences of tokenizer chain (regexp_replace): " +
-            "regexp_replace".r.findAllIn(plan).length)
-          println("=== occurrences of ascii: " + "ascii".r.findAllIn(plan).length)
-          println("=== plan size chars: " + plan.length)
-          println(plan.take(Integer.parseInt(sys.env.getOrElse("PLAN_CHARS", "4000"))))
+        args(1).split(",").foreach { name =>
+          println(s"=== $name")
+          val df = SparkEntry.queries(name)(spark, sfDir)
+          if (sys.env.get("PLAN_MODE").contains("formatted")) df.explain("formatted")
+          else {
+            val plan = df.queryExecution.optimizedPlan.toString
+            println("=== occurrences of tokenizer chain (regexp_replace): " +
+              "regexp_replace".r.findAllIn(plan).length)
+            println("=== occurrences of ascii: " + "ascii".r.findAllIn(plan).length)
+            println("=== plan size chars: " + plan.length)
+            println(plan.take(Integer.parseInt(sys.env.getOrElse("PLAN_CHARS", "4000"))))
+          }
         }
       case other =>
         System.err.println(s"unknown mode $other (expected --entry or --plan)")

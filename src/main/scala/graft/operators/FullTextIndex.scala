@@ -197,28 +197,19 @@ object FullTextIndex {
         lit(gen).as("gen"))
       .repartition(col("token_id")).sortWithinPartitions("token_id")
       .write.parquet(s"$path/_append/postings")
-    // the postings write above materialized the toks and tf checkpoint
-    // blocks, so the three remaining staged writes are independent pure
-    // block reads — overlap them (guide §2.6) instead of paying three
-    // driver-sequenced job latencies per append/micro-batch. All four
-    // complete before READY commits, so the crash story is unchanged.
-    Par.run(Seq(
-      () =>
-        // the forward index clusters + sorts on doc_id for the same
-        // reason: a removal batch's id set pushes down as In(doc_id, ...)
-        toks.select(col("doc_id"), size(col("__tids")).cast("long").as("dl"),
-            array_distinct(col("__tids")).as("tids"), lit(gen).as("gen"))
-          .repartition(col("doc_id")).sortWithinPartitions("doc_id")
-          .write.parquet(s"$path/_append/docs"),
-      () =>
-        tf.groupBy(col("token_id")).agg(count(lit(1)).as("df"))
-          .write.parquet(s"$path/_append/df"),
-      () =>
-        toks
-          .agg(count(lit(1)).as("n_docs"),
-            sum(size(col("__tids")).cast("long")).as("total_len"))
-          .select(col("n_docs"), col("total_len"), lit(gen).as("gen"))
-          .coalesce(1).write.parquet(s"$path/_append/meta")))
+    // the forward index clusters + sorts on doc_id for the same reason:
+    // a removal batch's id set pushes down as In(doc_id, ...)
+    toks.select(col("doc_id"), size(col("__tids")).cast("long").as("dl"),
+        array_distinct(col("__tids")).as("tids"), lit(gen).as("gen"))
+      .repartition(col("doc_id")).sortWithinPartitions("doc_id")
+      .write.parquet(s"$path/_append/docs")
+    tf.groupBy(col("token_id")).agg(count(lit(1)).as("df"))
+      .write.parquet(s"$path/_append/df")
+    toks
+      .agg(count(lit(1)).as("n_docs"),
+        sum(size(col("__tids")).cast("long")).as("total_len"))
+      .select(col("n_docs"), col("total_len"), lit(gen).as("gen"))
+      .coalesce(1).write.parquet(s"$path/_append/meta")
     fs.create(new Path(ap, "READY"), true).close()
     applyAppend(spark, path)
   }
@@ -341,19 +332,13 @@ object FullTextIndex {
     victims.select(explode(col("tids")).as("token_id"))
       .groupBy(col("token_id")).agg((-count(lit(1))).as("df"))
       .coalesce(1).write.parquet(s"$path/_removal/df")
-    // the df write materialized the victims checkpoint; the remaining
-    // two staged writes are independent block reads — overlap them
-    // (guide §2.6; both land before READY, crash story unchanged)
-    Par.run(Seq(
-      () =>
-        victims
-          .agg((-count(lit(1))).as("n_docs"),
-            (-coalesce(sum(col("dl")), lit(0L))).as("total_len"))
-          .select(col("n_docs"), col("total_len"), lit(0L).as("gen"))
-          .coalesce(1).write.parquet(s"$path/_removal/meta"),
-      () =>
-        victims.select(col("doc_id"), lit(gen).as("gen"))
-          .coalesce(1).write.parquet(s"$path/_removal/tombstones")))
+    victims
+      .agg((-count(lit(1))).as("n_docs"),
+        (-coalesce(sum(col("dl")), lit(0L))).as("total_len"))
+      .select(col("n_docs"), col("total_len"), lit(0L).as("gen"))
+      .coalesce(1).write.parquet(s"$path/_removal/meta")
+    victims.select(col("doc_id"), lit(gen).as("gen"))
+      .coalesce(1).write.parquet(s"$path/_removal/tombstones")
     fs.create(new Path(rm, "READY"), true).close()
     applyRemoval(spark, path)
     // bounded-mask policy: under sustained removals the tombstone

@@ -443,8 +443,8 @@ object Similarity {
     * `vec − centroid[cell]` instead of the raw vector, and each query
     * compares in the residual frame of the PROBED cell — within a cell
     * only the residual energy remains for PQ to resolve, so the same m
-    * codes buy more ordering (the measured contrast is `IndexProbe`'s
-    * `index_recall_residual` leg vs `index_recall_firstk`). The
+    * codes buy more ordering (SCALING.md records the measured recall
+    * contrast, residual vs first-k codebook). The
     * codebook is the deterministic residuals of rows
     * [nCells, nCells+nCentsPq) — offset past the centroid-coincident
     * rows, whose residuals are zero (a trained book slots into the same
@@ -829,9 +829,8 @@ object Similarity {
     * of the first `p` planes adds back the pairs split by exactly one
     * probed plane — worth p·(θ/π)·(1−θ/π)^(nPlanes−1), i.e. the
     * recovery grows linearly in p while candidate cost grows as
-    * (p+1)·n·targetBucket — still linear in n (ScaleProbe's
-    * fixed_q120/auto_q120 legs exercise the probed composition
-    * end-to-end at every scale point). MEASUREMENT-BACKED
+    * (p+1)·n·targetBucket — still linear in n (SCALING.md measures
+    * the probed composition end-to-end at every scale point). MEASUREMENT-BACKED
     * (RecallProbe, planted cos ≈ 0.95 pairs at 7 auto planes): the
     * model predicts 47.4% same-bucket / 63% at 3 probes / 85% at 7;
     * measured 48.4% / 62.5% / 82.2%.
@@ -933,7 +932,7 @@ object Similarity {
     * the exact candidate set; production callers growing past the
     * small-corpus regime should pass
     * `probes = Similarity.probesFor(nPlanesFor(n))` (half the planes —
-    * see [[probesFor]] for the recovery-vs-cost arithmetic; ScaleProbe
+    * see [[probesFor]] for the recovery-vs-cost arithmetic; SCALING.md
     * measures the auto-sized composition at 22–28× under the carried
     * fixed constant at 100× even before probing). When a persisted
     * IVF-PQ index with stored vectors already exists (the serving

@@ -46,7 +46,7 @@ import org.apache.spark.sql.functions._
   * accumulation, same partial top-k tie-breaks) — gated by q123/q123b
   * against the q49b oracle and by IvfPqIndexSpec.
   *
-  * Measured (`IndexProbe`, SCALING.md): steady-state per-batch search is
+  * Measured (SCALING.md, persisted IVF-PQ index): steady-state per-batch search is
   * FLAT across a 100× corpus growth (0.37–0.55 s) while the one-shot
   * form grows with N — 3.1× at 100× reading 8% of cells; serving
   * sessions must hold a [[load]] handle (sidecars + partition listing
@@ -335,16 +335,9 @@ object VectorIndex {
        else codes.join(tombs, Seq("id")).select(col("cell").cast("long")))
         .distinct().collect().map(_.getLong(0)).sorted
     if (affected.nonEmpty) {
-      // the codes and vecs rewrites read disjoint tables — overlap them
-      // (guide §2.6). The affected-cells collect above already
-      // materialized nothing shared; tombs re-evaluates per leg but is
-      // O(deletes). Each leg's stage-then-swap stays self-contained.
-      val vecsDir = new org.apache.hadoop.fs.Path(s"$path/vecs")
-      val legs = Seq(() => rewriteCells(spark, s"$path/codes", affected, tombs)) ++
-        (if (fs.exists(vecsDir))
-          Seq(() => rewriteCells(spark, s"$path/vecs", affected, tombs))
-         else Seq.empty)
-      Par.run(legs)
+      rewriteCells(spark, s"$path/codes", affected, tombs)
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/vecs")))
+        rewriteCells(spark, s"$path/vecs", affected, tombs)
     }
     if (hasTombs) fs.delete(tombDir, true)
   }
