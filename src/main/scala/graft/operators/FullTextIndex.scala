@@ -300,7 +300,7 @@ object FullTextIndex {
     * deltas and subtracts nothing. Contract: every id was ingested at
     * most once per generation (ids are permanent identities). */
   def removeDocs(spark: SparkSession, ids: DataFrame, idCol: String,
-                 path: String, autoCompact: Boolean = true): Unit = {
+                 path: String): Unit = {
     conf(spark, path) // format gate — refuse a stale layout up front
     reconcile(spark, path)
     val fs = hfs(spark, path)
@@ -344,9 +344,7 @@ object FullTextIndex {
     // bounded-mask policy: under sustained removals the tombstone
     // broadcast must not grow without an operator remembering to call
     // compactPostings — the trigger fires here, after the removal lands
-    // (autoCompact=false is the probe's no-policy contrast, not a
-    // production setting)
-    if (autoCompact) maybeCompact(spark, path)
+    maybeCompact(spark, path)
   }
 
   /** Roll a READY removal forward: move the staged delta and tombstone

@@ -74,7 +74,15 @@ object SidecarIO {
     * The file is Spark-readable (standard 3-level lists, snappy) and
     * named `part-*.parquet` so [[readGroups]] and `spark.read` both
     * pick it up. Same scope guard as the reads: driver-small tables
-    * ONLY — corpus-shaped tables stay behind Spark writes. */
+    * ONLY — corpus-shaped tables stay behind Spark writes.
+    *
+    * Measured against the `coalesce(1).write.parquet` form on the
+    * perfbench `ingest` workload (4-core VM, ten alternating pairs; each
+    * build writes four sidecars): `setup_s` median 8.08 s here vs 8.82 s
+    * with Spark writes, 9 of 10 pairs won, and a median gap (0.75 s)
+    * wider than the interquartile range of its own runs (0.70 s).
+    * Indexes written by older binaries (Spark sidecars) read through
+    * [[readGroups]] unchanged. */
   def writeGroups(hconf: Configuration, dir: String, schema: MessageType,
                   fill: SimpleGroupFactory => Seq[Group]): Unit = {
     val d = new Path(dir)

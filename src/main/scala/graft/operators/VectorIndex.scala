@@ -244,7 +244,6 @@ object VectorIndex {
     // bounded-mask policy (FullTextIndex.maybeCompact's twin): the
     // query-time tombstone anti-join must stay bounded under sustained
     // deletes without an operator remembering the maintenance window
-    // (autoCompact=false is the probe's no-policy contrast)
     if (autoCompact) maybeCompact(spark, path)
   }
 
@@ -298,19 +297,7 @@ object VectorIndex {
     * `mergeAll = true` additionally rewrites every cell (file-merge-only
     * compaction for an index that accumulated many appends). */
   def compact(spark: SparkSession, path: String,
-              mergeAll: Boolean = false): Unit =
-    compactWith(spark, path, None, mergeAll)
-
-  /** [[compact]] with an optional in-memory set of EXTRA ids to drop —
-    * [[upsert]]'s fused first leg: writing the batch's ids to the
-    * tombstone table only for the very next statement to read and clear
-    * them was a pure disk round-trip (one distinct+write job plus the
-    * read-back, per upsert/micro-batch). The pending on-disk tombstones
-    * still fold in and still clear, so the final state is identical to
-    * delete-then-compact. */
-  private def compactWith(spark: SparkSession, path: String,
-                          extraIds: Option[DataFrame],
-                          mergeAll: Boolean): Unit = {
+              mergeAll: Boolean = false): Unit = {
     val hconf = spark.sparkContext.hadoopConfiguration
     val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val fs = tombDir.getFileSystem(hconf)
@@ -321,13 +308,11 @@ object VectorIndex {
     reconcile(fs, s"$path/codes")
     reconcile(fs, s"$path/vecs")
     val hasTombs = fs.exists(tombDir)
-    if (!hasTombs && !mergeAll && extraIds.isEmpty) return
+    if (!hasTombs && !mergeAll) return
     import spark.implicits._
-    val pending =
-      if (hasTombs) spark.read.parquet(s"$path/tombstones").select(col("id"))
+    val tombs =
+      if (hasTombs) spark.read.parquet(s"$path/tombstones").select(col("id")).distinct()
       else spark.emptyDataset[Long].toDF("id")
-    val tombs = extraIds.fold(pending)(e =>
-      pending.unionByName(e.select(col("id")))).distinct()
     val codes = spark.read.parquet(s"$path/codes")
     // bounded by nCells (the partition-column cardinality), never by data
     val affected =
@@ -408,29 +393,29 @@ object VectorIndex {
   /** Upsert: replace the indexed vectors for `batch`'s ids with the
     * batch's vectors — the document-UPDATE path ([[append]] covers
     * inserts, [[delete]] removals; real corpora also re-crawl and
-    * re-embed). Compacts the batch's ids out of their cells (the fused
-    * form of delete-then-compact — r20: the tombstone table was written
-    * only for the very next statement to read and clear, one
-    * distinct+write job of pure disk round-trip per upsert), then
-    * [[append]]s the new encodings with the SAVED quantizers. Any
-    * pending tombstones from earlier [[delete]]s fold into the same
-    * rewrite and clear, exactly as delete-then-compact did.
+    * re-embed). Composes the existing legs in the only order the
+    * tombstone contract allows: [[delete]] the ids (with
+    * `autoCompact = false`, per the Rule on [[delete]]), [[compact]] the
+    * affected cells (clearing the tombstones — a re-append under a
+    * live tombstone would stay suppressed), then [[append]] the new
+    * encodings with the SAVED quantizers. Pending tombstones from
+    * earlier [[delete]]s fold into the same rewrite and clear.
     *
-    * Replay-idempotent with no marker protocol, as before: a crashed
-    * attempt leaves the pre-upsert state (stale versions still serving
-    * — what was being served before the upsert began), a compacted-out
-    * state, or the full result; the redelivered batch's compact sweeps
+    * Replay-idempotent with no marker protocol: a crashed attempt leaves
+    * the batch's ids tombstoned (masked from search), compacted out, or
+    * the full result; the redelivered batch's delete + compact sweeps
     * whatever version is present before the single live append.
     *
-    * Cost at 100 TB: a rewrite of only the cells the stale rows live in
-    * + one narrow encode pass over the batch — never a corpus pass. Ids
-    * absent from the index upsert as plain inserts (they match no codes
-    * row, so compaction of their cells is skipped). */
+    * Cost at 100 TB: O(batch) tombstone write + a rewrite of only the
+    * cells the stale rows live in + one narrow encode pass over the
+    * batch — never a corpus pass. Ids absent from the index upsert as
+    * plain inserts (their tombstones prune nothing and compaction of
+    * their cells is skipped). */
   def upsert(batch: DataFrame, idCol: String, vecCol: String,
              path: String): Unit = {
     val spark = batch.sparkSession
-    compactWith(spark, path,
-      Some(batch.select(col(idCol).cast("long").as("id"))), mergeAll = false)
+    delete(spark, path, batch.select(col(idCol)), idCol, autoCompact = false)
+    compact(spark, path)
     append(batch, idCol, vecCol, path)
   }
 

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
@@ -295,46 +295,64 @@ object StreamingOps {
     * sink config, exactly as for any streaming sink). */
   def ivfPqAppendSink(stream: DataFrame, idCol: String, vecCol: String,
                       indexPath: String): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          idempotentAppend(batch.toDF(), idCol, vecCol, indexPath, batchId)
+    nonEmptyBatches(stream) { (batch, batchId) =>
+      idempotentAppend(batch, idCol, vecCol, indexPath, batchId)
     }
 
-  /** The replay-safe per-batch body of [[ivfPqAppendSink]]. foreachBatch
-    * is at-least-once: a batch whose append COMMITTED but whose
-    * checkpoint offset didn't is redelivered on restart, and a naive
-    * re-append would put every row in the index twice (two of k top-k
-    * slots per duplicate). The started/done marker protocol makes the
-    * replay effectively exactly-once:
+  /** The one `foreachBatch` wrapper behind every sink here: hands each
+    * non-empty micro-batch (as a DataFrame) and its id to `body`. */
+  private def nonEmptyBatches(stream: DataFrame)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    stream.writeStream.outputMode("append").foreachBatch {
+      (rows: Dataset[Row], batchId: Long) =>
+        val batch = rows.toDF()
+        if (!batch.isEmpty) body(batch, batchId)
+    }
+
+  /** The started/done replay-marker protocol shared by the four
+    * marker-logged per-batch bodies ([[idempotentAppend]],
+    * [[bm25IngestBatch]], [[semanticIngestBatch]], [[dedupIngestBatch]]).
+    * foreachBatch is at-least-once: a batch whose writes COMMITTED but
+    * whose checkpoint offset didn't is redelivered on restart, and a
+    * naive re-run would land every row twice. The markers under `logDir`
+    * make the replay effectively exactly-once:
     *
-    *  - `done-<batchId>` exists → this batch fully landed: skip.
+    *  - `done-<batchId>` exists → the batch fully landed: skip.
     *  - `started-<batchId>` without done → a previous attempt crashed
-    *    mid-append: tombstone THIS batch's ids and compact (physically
-    *    removing whatever partial copy landed — ingest ids are new by
-    *    contract, so the cleanup cannot touch other rows), then append
-    *    fresh.
-    *  - neither → first attempt: mark started, append, mark done.
-    *
-    * The markers live inside the index layout (`ingest_log/`), so they
-    * travel with it. */
-  def idempotentAppend(batch: DataFrame, idCol: String, vecCol: String,
-                       indexPath: String, batchId: Long): Unit = {
-    val spark = batch.sparkSession
-    val log = new org.apache.hadoop.fs.Path(s"$indexPath/ingest_log")
+    *    somewhere between its first write and the done marker: run
+    *    `scrub` (remove THIS batch's ids from the target — ingest ids
+    *    are new by contract, so the scrub cannot touch other rows), then
+    *    re-run fresh.
+    *  - neither → first attempt: mark started, run `body`, mark done. */
+  private def replayMarked(spark: SparkSession, logDir: String,
+                           batchId: Long)(scrub: => Unit)(body: => Unit): Unit = {
+    val log = new org.apache.hadoop.fs.Path(logDir)
     val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val done = new org.apache.hadoop.fs.Path(log, s"done-$batchId")
     if (fs.exists(done)) return
     val started = new org.apache.hadoop.fs.Path(log, s"started-$batchId")
-    if (fs.exists(started)) {
-      VectorIndex.delete(spark, indexPath,
-        batch.select(org.apache.spark.sql.functions.col(idCol)), idCol)
-      VectorIndex.compact(spark, indexPath)
-    }
+    if (fs.exists(started)) scrub
     fs.mkdirs(log)
     fs.create(started, true).close()
-    VectorIndex.append(batch, idCol, vecCol, indexPath)
+    body
     fs.create(done, true).close()
+  }
+
+  /** The replay-safe per-batch body of [[ivfPqAppendSink]]: a naive
+    * re-append would put every row in the index twice (two of k top-k
+    * slots per duplicate), so it runs under [[replayMarked]]. The scrub
+    * tombstones the batch's ids and compacts, physically removing
+    * whatever partial copy landed. The markers live inside the index
+    * layout (`ingest_log/`), so they travel with it. */
+  def idempotentAppend(batch: DataFrame, idCol: String, vecCol: String,
+                       indexPath: String, batchId: Long): Unit = {
+    val spark = batch.sparkSession
+    replayMarked(spark, s"$indexPath/ingest_log", batchId) {
+      VectorIndex.delete(spark, indexPath, batch.select(col(idCol)), idCol)
+      VectorIndex.compact(spark, indexPath)
+    } {
+      VectorIndex.append(batch, idCol, vecCol, indexPath)
+    }
   }
 
   /** Continuous re-embed maintenance: each micro-batch of (id, NEW
@@ -349,10 +367,8 @@ object StreamingOps {
     * one narrow encode pass. */
   def ivfPqUpsertSink(stream: DataFrame, idCol: String, vecCol: String,
                       indexPath: String): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.VectorIndex.upsert(batch.toDF(), idCol, vecCol, indexPath)
+    nonEmptyBatches(stream) { (batch, _) =>
+      VectorIndex.upsert(batch, idCol, vecCol, indexPath)
     }
 
   /** The lexical twin: micro-batches of re-crawled (id, text) docs
@@ -366,11 +382,8 @@ object StreamingOps {
     * periodically to drop the masked rows physically. */
   def bm25UpsertSink(stream: DataFrame, idCol: String, textCol: String,
                      indexPath: String): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.FullTextIndex.upsertBatch(
-            batch.sparkSession, batch.toDF(), idCol, textCol, indexPath)
+    nonEmptyBatches(stream) { (batch, _) =>
+      FullTextIndex.upsertBatch(batch.sparkSession, batch, idCol, textCol, indexPath)
     }
 
   /** Continuous statistics maintenance: each micro-batch folds its own
@@ -394,12 +407,9 @@ object StreamingOps {
     * everything ingested so far. */
   def cmsIngestSink(stream: DataFrame, textCol: String, storePath: String,
                     streamId: String): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (batch: Dataset[Row], batchId: Long) =>
-        if (!batch.isEmpty)
-          graft.operators.SketchStore.appendCmsBatch(
-            batch.toDF(), textCol, storePath,
-            graft.operators.SketchStore.streamLabel(streamId, batchId))
+    nonEmptyBatches(stream) { (batch, batchId) =>
+      graft.operators.SketchStore.appendCmsBatch(batch, textCol, storePath,
+        graft.operators.SketchStore.streamLabel(streamId, batchId))
     }
 
   /** Continuous lexical-index maintenance: each micro-batch of
@@ -409,15 +419,12 @@ object StreamingOps {
     * immediately). Per-batch cost is O(batch), never O(corpus). */
   def bm25IngestSink(stream: DataFrame, idCol: String, textCol: String,
                      indexPath: String, logPath: String): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (rows: Dataset[Row], batchId: Long) =>
-        val batch = rows.toDF()
-        if (!batch.isEmpty)
-          bm25IngestBatch(batch, batchId, idCol, textCol, indexPath, logPath)
+    nonEmptyBatches(stream) { (batch, batchId) =>
+      bm25IngestBatch(batch, batchId, idCol, textCol, indexPath, logPath)
     }
 
   /** The replay-safe per-batch body of [[bm25IngestSink]] — the
-    * started/done discipline; the crash-recovery scrub is
+    * [[replayMarked]] discipline; the crash-recovery scrub is
     * [[graft.operators.FullTextIndex.removeDocs]] (O(batch) tombstones
     * + negative stat deltas), so a half-landed batch can never double
     * its term frequencies OR its df/avgdl contributions. The scrub is
@@ -431,17 +438,11 @@ object StreamingOps {
                       textCol: String, indexPath: String,
                       logPath: String): Unit = {
     val spark = batch.sparkSession
-    val log = new org.apache.hadoop.fs.Path(logPath)
-    val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(log, s"done-$batchId")
-    if (fs.exists(done)) return
-    val started = new org.apache.hadoop.fs.Path(log, s"started-$batchId")
-    if (fs.exists(started))
+    replayMarked(spark, logPath, batchId) {
       FullTextIndex.removeDocs(spark, batch.select(col(idCol)), idCol, indexPath)
-    fs.mkdirs(log)
-    fs.create(started, true).close()
-    FullTextIndex.appendBatch(spark, batch, idCol, textCol, indexPath)
-    fs.create(done, true).close()
+    } {
+      FullTextIndex.appendBatch(spark, batch, idCol, textCol, indexPath)
+    }
   }
 
   /** Streaming ingest dedup against the persisted MinHash index
@@ -465,12 +466,9 @@ object StreamingOps {
                       table: String, threshold: Double, dupsPath: String,
                       n: Int = 3, numHashes: Int = 16, bands: Int = 4,
                       numBuckets: Int = 32): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (rows: Dataset[Row], batchId: Long) =>
-        val batch = rows.toDF()
-        if (!batch.isEmpty)
-          dedupIngestBatch(batch, batchId, idCol, textCol, table, threshold,
-            dupsPath, n, numHashes, bands, numBuckets)
+    nonEmptyBatches(stream) { (batch, batchId) =>
+      dedupIngestBatch(batch, batchId, idCol, textCol, table, threshold,
+        dupsPath, n, numHashes, bands, numBuckets)
     }
 
   /** Streaming SEMANTIC ingest dedup against the persisted IVF-PQ index
@@ -493,74 +491,58 @@ object StreamingOps {
                          indexPath: String, dim: Int, threshold: Double,
                          dupsPath: String, nPlanes: Int = 16,
                          nProbe: Int = 4, k: Int = 5): DataStreamWriter[Row] =
-    stream.writeStream.outputMode("append").foreachBatch {
-      (rows: Dataset[Row], batchId: Long) =>
-        val batch = rows.toDF()
-        if (!batch.isEmpty)
-          semanticIngestBatch(batch, batchId, idCol, vecCol, indexPath, dim,
-            threshold, dupsPath, nPlanes, nProbe, k)
+    nonEmptyBatches(stream) { (batch, batchId) =>
+      semanticIngestBatch(batch, batchId, idCol, vecCol, indexPath, dim,
+        threshold, dupsPath, nPlanes, nProbe, k)
     }
 
-  /** The replay-safe per-batch body of [[semanticIngestSink]] — the same
-    * started/done discipline as [[dedupIngestBatch]]; the crash-recovery
-    * scrub here is the index's own tombstone path (delete the batch's
-    * ids, compact the affected cells) before re-running. */
+  /** The replay-safe per-batch body of [[semanticIngestSink]] — the
+    * [[replayMarked]] discipline, logged under `<dupsPath>_ingest_log`;
+    * the crash-recovery scrub here is the index's own tombstone path
+    * (delete the batch's ids, compact the affected cells) before
+    * re-running. */
   def semanticIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
                           vecCol: String, indexPath: String, dim: Int,
                           threshold: Double, dupsPath: String,
                           nPlanes: Int = 16, nProbe: Int = 4,
                           k: Int = 5): Unit = {
     val spark = batch.sparkSession
-    val log = new org.apache.hadoop.fs.Path(s"${dupsPath}_ingest_log")
-    val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(log, s"done-$batchId")
-    if (fs.exists(done)) return
-    val started = new org.apache.hadoop.fs.Path(log, s"started-$batchId")
-    if (fs.exists(started)) {
+    replayMarked(spark, s"${dupsPath}_ingest_log", batchId) {
       VectorIndex.delete(spark, indexPath, batch.select(col(idCol)), idCol)
       VectorIndex.compact(spark, indexPath)
+    } {
+      val inBatch = Dedup.embeddingNearDups(batch, idCol, vecCol, dim,
+          nPlanes, threshold)
+        .localCheckpoint(false)
+      val localClean = batch.join(
+        inBatch.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
+      // fresh load per batch: rows admitted at batch N-1 must be corpus
+      // for batch N (the sidecars are k-sized; the listing covers only the
+      // probed cells)
+      val idx = VectorIndex.load(spark, indexPath)
+      val corpusPairs = VectorIndex.semanticDups(spark, localClean, idCol,
+          vecCol, idx, nProbe, k, threshold)
+        .localCheckpoint(false)
+      inBatch
+        .select(col("id_b").as(idCol), col("id_a").as("dup_of"),
+          col("cosine").as("similarity"), lit("batch").as("scope"))
+        .unionByName(corpusPairs
+          .select(col(idCol), col("corpus_id").as("dup_of"),
+            col("cosine").as("similarity"), lit("corpus").as("scope")))
+        .write.mode("append").parquet(dupsPath)
+      val clean = localClean.join(
+        corpusPairs.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
+      VectorIndex.append(clean, idCol, vecCol, indexPath)
     }
-    fs.mkdirs(log)
-    fs.create(started, true).close()
-    val inBatch = Dedup.embeddingNearDups(batch, idCol, vecCol, dim,
-        nPlanes, threshold)
-      .localCheckpoint(false)
-    val localClean = batch.join(
-      inBatch.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
-    // fresh load per batch: rows admitted at batch N-1 must be corpus
-    // for batch N (the sidecars are k-sized; the listing covers only the
-    // probed cells)
-    val idx = VectorIndex.load(spark, indexPath)
-    val corpusPairs = VectorIndex.semanticDups(spark, localClean, idCol,
-        vecCol, idx, nProbe, k, threshold)
-      .localCheckpoint(false)
-    inBatch
-      .select(col("id_b").as(idCol), col("id_a").as("dup_of"),
-        col("cosine").as("similarity"), lit("batch").as("scope"))
-      .unionByName(corpusPairs
-        .select(col(idCol), col("corpus_id").as("dup_of"),
-          col("cosine").as("similarity"), lit("corpus").as("scope")))
-      .write.mode("append").parquet(dupsPath)
-    val clean = localClean.join(
-      corpusPairs.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-    VectorIndex.append(clean, idCol, vecCol, indexPath)
-    fs.create(done, true).close()
   }
 
   /** The replay-safe per-batch body of [[dedupIngestSink]] — the
-    * started/done discipline [[idempotentAppend]] uses (foreachBatch is
-    * at-least-once):
-    *
-    *  - `done-<batchId>` exists → the batch fully landed: skip.
-    *  - `started-` without done → a previous attempt crashed somewhere
-    *    between the first index write and the marker: scrub THIS batch's
-    *    ids from the index ([[DedupIndex.removeIds]] — ingest ids are
-    *    new by contract, so the scrub cannot touch other rows), then
-    *    re-run fresh. Without the scrub every already-appended doc would
-    *    match its own corpus signature (est_jaccard = 1.0) and the whole
-    *    batch would be re-audited as corpus duplicates of themselves —
-    *    audit consumers filtering "clean" docs would wrongly drop it all.
-    *  - neither → first attempt: mark started, run, mark done.
+    * [[replayMarked]] discipline, logged under `<dupsPath>_ingest_log`.
+    * The scrub removes THIS batch's ids from the index
+    * ([[DedupIndex.removeIds]]). Without it every already-appended doc
+    * would match its own corpus signature (est_jaccard = 1.0) and the
+    * whole batch would be re-audited as corpus duplicates of themselves
+    * — audit consumers filtering "clean" docs would wrongly drop it all.
     *
     * Audit rows in dupsPath can still double on replay (parquet append
     * is not transactional with the marker) — those are value-identical
@@ -570,45 +552,39 @@ object StreamingOps {
                        dupsPath: String, n: Int = 3, numHashes: Int = 16,
                        bands: Int = 4, numBuckets: Int = 32): Unit = {
     val spark = batch.sparkSession
-    val log = new org.apache.hadoop.fs.Path(s"${dupsPath}_ingest_log")
-    val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val done = new org.apache.hadoop.fs.Path(log, s"done-$batchId")
-    if (fs.exists(done)) return
-    val started = new org.apache.hadoop.fs.Path(log, s"started-$batchId")
-    if (fs.exists(started))
+    replayMarked(spark, s"${dupsPath}_ingest_log", batchId) {
       DedupIndex.removeIds(spark, table, batch.select(col(idCol)),
         idCol, numBuckets)
-    fs.mkdirs(log)
-    fs.create(started, true).close()
-    // the in-batch pass signs internally (its exact-Jaccard verify needs
-    // the shingles anyway); the index-side check and the append share
-    // ONE further signing pass
-    val inBatch = Dedup.minhashNearDups(batch, idCol, textCol,
-        threshold, n, numHashes, bands)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-      .localCheckpoint(false)
-    val bSigs = DedupIndex.sign(batch, idCol, textCol, n, numHashes)
-      .localCheckpoint(false)
-    val localCleanSigs = bSigs.join(
-      inBatch.select(col("id_b").as(idCol)).distinct(),
-      Seq(idCol), "left_anti")
-    // self-pair guard (defense in depth behind the scrub): a doc must
-    // never count as a corpus duplicate of itself
-    val corpusPairs = DedupIndex.nearDupsAgainstSigned(spark,
-        localCleanSigs, idCol, table, threshold, numHashes, bands)
-      .filter(col(idCol) =!= col("corpus_id"))
-      .localCheckpoint(false)
-    inBatch
-      .select(col("id_b").as(idCol), col("id_a").as("dup_of"),
-        col("jaccard").as("similarity"), lit("batch").as("scope"))
-      .unionByName(corpusPairs
-        .select(col(idCol), col("corpus_id").as("dup_of"),
-          col("est_jaccard").as("similarity"), lit("corpus").as("scope")))
-      .write.mode("append").parquet(dupsPath)
-    val cleanSigs = localCleanSigs.join(
-      corpusPairs.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-    DedupIndex.appendSigned(spark, cleanSigs, idCol, table,
-      numHashes, bands, numBuckets)
-    fs.create(done, true).close()
+    } {
+      // the in-batch pass signs internally (its exact-Jaccard verify needs
+      // the shingles anyway); the index-side check and the append share
+      // ONE further signing pass
+      val inBatch = Dedup.minhashNearDups(batch, idCol, textCol,
+          threshold, n, numHashes, bands)
+        .select(col("id_a"), col("id_b"), col("jaccard"))
+        .localCheckpoint(false)
+      val bSigs = DedupIndex.sign(batch, idCol, textCol, n, numHashes)
+        .localCheckpoint(false)
+      val localCleanSigs = bSigs.join(
+        inBatch.select(col("id_b").as(idCol)).distinct(),
+        Seq(idCol), "left_anti")
+      // self-pair guard (defense in depth behind the scrub): a doc must
+      // never count as a corpus duplicate of itself
+      val corpusPairs = DedupIndex.nearDupsAgainstSigned(spark,
+          localCleanSigs, idCol, table, threshold, numHashes, bands)
+        .filter(col(idCol) =!= col("corpus_id"))
+        .localCheckpoint(false)
+      inBatch
+        .select(col("id_b").as(idCol), col("id_a").as("dup_of"),
+          col("jaccard").as("similarity"), lit("batch").as("scope"))
+        .unionByName(corpusPairs
+          .select(col(idCol), col("corpus_id").as("dup_of"),
+            col("est_jaccard").as("similarity"), lit("corpus").as("scope")))
+        .write.mode("append").parquet(dupsPath)
+      val cleanSigs = localCleanSigs.join(
+        corpusPairs.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
+      DedupIndex.appendSigned(spark, cleanSigs, idCol, table,
+        numHashes, bands, numBuckets)
+    }
   }
 }

@@ -3,7 +3,8 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.functions.K
-import graft.operators.{Similarity, VectorIndex}
+import org.apache.parquet.schema.Type
+import graft.operators.{FullTextIndex, SidecarIO, Similarity, VectorIndex}
 
 /** Persisted IVF-PQ index: build-once/query-many must equal the in-plan
   * one-shot form, appends must equal a full rebuild, and search must
@@ -669,5 +670,70 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkSessionTestWrapper {
     val before = snapshot()
     VectorIndex.compact(spark, path) // mask is clear — must be a cheap no-op
     assert(snapshot() == before, "a clear-mask compact must not rewrite any cell")
+  }
+
+  /** Replace one sidecar table with the encoding binaries before r20
+    * wrote: a Spark `coalesce(1)` write, primitive columns required, with
+    * Spark row metadata. Indexes written by those binaries must keep
+    * loading through the driver-side reads. */
+  private def writeSparkSidecar(df: org.apache.spark.sql.DataFrame, dir: String): Unit =
+    df.coalesce(1).write.mode("overwrite").parquet(dir)
+
+  private def repetition(dir: String, field: String): Type.Repetition =
+    SidecarIO.readGroups(spark.sparkContext.hadoopConfiguration, dir)
+      .head.getType.getType(field).getRepetition
+
+  test("IVF-PQ sidecars in the pre-r20 Spark-written encoding load like driver-written ones") {
+    import spark.implicits._
+    val path = tmp("graft_ivfpq_sparksc")
+    VectorIndex.writeIvfPq(e, "vec_id", "embedding", 16, 8, 16, path,
+      storeVectors = true, residual = true)
+    val (cents, books) = VectorIndex.loadQuantizers(spark, path)
+    val baseline = VectorIndex.loadBaseline(spark, path)
+    val hits = asSet(VectorIndex.search(spark, q, "qid", "qv", path, 4, 5))
+    val meta = spark.read.parquet(s"$path/meta").head()
+    assert(repetition(s"$path/meta", "dim") == Type.Repetition.OPTIONAL)
+    writeSparkSidecar(Seq((meta.getAs[Int]("dim"), meta.getAs[Int]("m"),
+        meta.getAs[Int]("n_cells"), meta.getAs[Int]("k_pq"),
+        meta.getAs[Double]("mean_cell_dist"), meta.getAs[Boolean]("residual")))
+      .toDF("dim", "m", "n_cells", "k_pq", "mean_cell_dist", "residual"), s"$path/meta")
+    writeSparkSidecar(cents.toSeq.map { case (c, v) => (c, v.toSeq) }.toDF("cell", "vec"),
+      s"$path/centroids")
+    writeSparkSidecar(books.zipWithIndex.toSeq.flatMap { case (book, j) =>
+      book.zipWithIndex.map { case (v, code) => (j, code, v.toSeq) }
+    }.toDF("j", "code", "vec"), s"$path/books")
+    assert(repetition(s"$path/meta", "dim") == Type.Repetition.REQUIRED,
+      "the rewrite must really change the encoding")
+    val (c2, b2) = VectorIndex.loadQuantizers(spark, path)
+    assert(c2.map(_._1).toSeq == cents.map(_._1).toSeq)
+    assert(c2.zip(cents).forall { case ((_, a), (_, b)) => a.sameElements(b) })
+    assert(b2.length == books.length && b2.zip(books).forall { case (ba, bb) =>
+      ba.length == bb.length && ba.zip(bb).forall { case (x, y) => x.sameElements(y) } })
+    assert(VectorIndex.isResidual(spark, path))
+    assert(VectorIndex.loadBaseline(spark, path) == baseline)
+    assert(asSet(VectorIndex.search(spark, q, "qid", "qv", path, 4, 5)) == hits)
+    assert(hits.nonEmpty)
+  }
+
+  test("a BM25 conf in the pre-r20 Spark-written encoding serves like a driver-written one") {
+    import spark.implicits._
+    val d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select(col("doc_id"), col("text"))
+    val qs = d.filter(col("doc_id") < 4)
+      .select(col("doc_id").as("qid"), col("text").as("qtext"))
+    val path = tmp("graft_ftidx_sparkconf")
+    // a non-default max_length, so a misread conf would change the hits
+    FullTextIndex.write(d, "doc_id", "text", path, maxLength = 16)
+    def hits = FullTextIndex.searchTopK(spark, qs, "qid", "qtext", path, k = 5)
+      .select(col("qid"), col("doc_id"), col("rank"), col("score"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSet
+    val before = hits
+    val c = spark.read.parquet(s"$path/conf").head()
+    assert(c.getAs[Int]("max_length") == 16)
+    writeSparkSidecar(Seq((c.getAs[Int]("max_length"), c.getAs[Int]("format_version")))
+      .toDF("max_length", "format_version"), s"$path/conf")
+    assert(repetition(s"$path/conf", "max_length") == Type.Repetition.REQUIRED)
+    assert(hits == before)
+    assert(before.nonEmpty)
   }
 }

@@ -732,4 +732,77 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
       assert(rows == Set((2L, 5L, 2L, 3L), (1L, 1L, 1L, 1L)))
     } finally q.stop()
   }
+
+  test("a completed batch id replays as a no-op through all four marker-logged bodies") {
+    def tmp(prefix: String) = java.nio.file.Files.createTempDirectory(prefix).toString
+    val e = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    val text = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six")).toDF("doc_id", "text")
+    // doc 10 duplicates corpus doc 1 and vector 10 nearly copies corpus
+    // vector 0, so both audit outputs are non-empty after the first run
+    val textBatch = Seq(
+      (10L, "alpha beta gamma delta epsilon zeta"),
+      (11L, "cat dog bird fish mouse horse")).toDF("doc_id", "text")
+    val vecCorpus = Seq(
+      (0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)),
+      (2L, Seq(0.8f, 0.6f, 0f, 0f)), (3L, Seq(0.6f, 0.8f, 0f, 0f)))
+      .toDF("vec_id", "embedding")
+    val vecBatch = Seq(
+      (10L, Seq(1f, 0.01f, 0f, 0f)), (11L, Seq(0f, 0f, 1f, 0f)))
+      .toDF("vec_id", "embedding")
+
+    val pAppend = tmp("graft_noop_ivf")
+    graft.operators.VectorIndex.writeIvfPq(e.filter($"vec_id" < 400),
+      "vec_id", "embedding", 16, 8, 16, pAppend)
+    val pBm25 = tmp("graft_noop_bm25")
+    val bm25Log = tmp("graft_noop_bm25_log")
+    graft.operators.FullTextIndex.write(text, "doc_id", "text", pBm25)
+    val table = "graft_stream_noop_replay"
+    val dedupDups = tmp("graft_noop_dedup") + "/pairs"
+    graft.operators.DedupIndex.writeMinhash(text, "doc_id", "text",
+      table = table, numBuckets = 4)
+    val pSem = tmp("graft_noop_sem")
+    val semDups = tmp("graft_noop_semdups") + "/pairs"
+    graft.operators.VectorIndex.writeIvfPq(vecCorpus, "vec_id", "embedding",
+      nCells = 2, m = 2, nCentsPq = 2, path = pSem, storeVectors = true)
+
+    def runBatch3(): Unit = {
+      StreamingOps.idempotentAppend(e.filter($"vec_id" >= 400),
+        "vec_id", "embedding", pAppend, 3L)
+      StreamingOps.bm25IngestBatch(textBatch, 3L, "doc_id", "text", pBm25, bm25Log)
+      StreamingOps.dedupIngestBatch(textBatch, 3L, "doc_id", "text", table,
+        threshold = 0.5, dupsPath = dedupDups, numBuckets = 4)
+      StreamingOps.semanticIngestBatch(vecBatch, 3L, "vec_id", "embedding", pSem,
+        dim = 4, threshold = 0.95, dupsPath = semDups, nPlanes = 0,
+        nProbe = 2, k = 8)
+    }
+    val wh = spark.conf.get("spark.sql.warehouse.dir")
+    val dirs = Seq(pAppend, pBm25, pSem, dedupDups, semDups) ++
+      Seq("sigs", "bands", "meta").map(t => s"$wh/${table}_$t")
+    // every file of every index and audit output: name, size, mtime
+    def files(): Map[String, Set[(String, Long, Long)]] = dirs.map { d =>
+      val root = new org.apache.hadoop.fs.Path(d)
+      val it = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .listFiles(root, true)
+      val out = Set.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        out += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      d -> out.result()
+    }.toMap
+    def rows(): Seq[Set[String]] = Seq(
+      spark.read.parquet(s"$pAppend/codes"), spark.read.parquet(s"$pSem/codes"),
+      spark.read.parquet(s"$pBm25/postings"), spark.read.parquet(s"$pBm25/meta"),
+      spark.table(s"${table}_sigs"), spark.read.parquet(dedupDups),
+      spark.read.parquet(semDups)).map(_.collect().map(_.toString).toSet)
+
+    runBatch3()
+    val (files1, rows1) = (files(), rows())
+    assert(rows1(5).nonEmpty && rows1(6).nonEmpty, "both audits must hold a duplicate")
+    runBatch3() // the same batch id again: every done-<3> marker exists
+    assert(files() == files1, "a completed replay must not touch any file")
+    assert(rows() == rows1)
+  }
 }
