@@ -186,11 +186,31 @@ object Dedup {
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
                       threshold: Double, n: Int = 3, numHashes: Int = 16,
                       bands: Int = 4,
-                      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame = {
+                      maxBucketSize: Int = DefaultMaxBucketSize): DataFrame =
+    minhashNearDupsSigned(signedTokens(df, idCol, textCol, n, numHashes), idCol,
+      threshold, n, numHashes, bands, maxBucketSize, _.localCheckpoint(false))
+
+  /** (idCol, `__tids`, `__sig`) for every row with at least `n` tokens:
+    * the one tokenize + MinHash signing pass behind [[minhashNearDups]],
+    * [[DedupIndex.sign]] and the streaming ingest dedup. */
+  private[graft] def signedTokens(df: DataFrame, idCol: String, textCol: String,
+                                  n: Int, numHashes: Int): DataFrame =
+    withSigArray(
+      df.select(col(idCol), Kernel.tokenIds(col(textCol), K.MaxLength).as("__tids"))
+        .filter(size(col("__tids")) >= n),
+      n, numHashes)
+
+  /** [[minhashNearDups]] over a [[signedTokens]] frame. `cut` breaks the
+    * lineage of the two frames the verification reads more than once:
+    * a lazy `localCheckpoint` for the one-shot operator, a batch-scoped
+    * cut ([[BatchScope]]) for a per-batch body. */
+  private[graft] def minhashNearDupsSigned(signed: DataFrame, idCol: String,
+                                           threshold: Double, n: Int,
+                                           numHashes: Int, bands: Int,
+                                           maxBucketSize: Int,
+                                           cut: DataFrame => DataFrame): DataFrame = {
     val rpb = numHashes / bands
-    val base = df.select(col(idCol), Kernel.tokenIds(col(textCol)).as("__tids"))
-      .filter(size(col("__tids")) >= n)
-    val sigs = withSigArray(base, n, numHashes).select(col(idCol), col("__sig"))
+    val sigs = signed.select(col(idCol), col("__sig"))
     // band key: the shared fold, over sig-array elements here
     val bandKey: Int => Column = b =>
       bandKeyFold((b * rpb until (b + 1) * rpb).map(i => element_at(col("__sig"), i + 1)))
@@ -206,27 +226,24 @@ object Dedup {
     val guarded = capBuckets(banded, maxBucketSize)
     val l = guarded.select(col(idCol).as("id_a"), col("band"), col("key"))
     val r = guarded.select(col(idCol).as("id_b"), col("band"), col("key"))
-    // LAZY localCheckpoint: the candidate set is referenced by the
-    // verification join AND (twice, via the id semi-join) by the
-    // candidate-shingle build — without a lineage cut the band self-join
-    // would re-run once per reference. Lazy = materialized on the first
-    // action, no eager job at plan-build time; candidates are pair-rare
-    // by construction, so the materialized set stays tiny at any scale.
-    val cands = l.join(r, Seq("band", "key"))
+    // cut (lazy): the candidate set is referenced by the verification
+    // join AND (twice, via the id semi-join) by the candidate-shingle
+    // build — without a lineage cut the band self-join would re-run once
+    // per reference. Candidates are pair-rare by construction, so the
+    // materialized set stays tiny at any scale.
+    val cands = cut(l.join(r, Seq("band", "key"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
-      .distinct()
-      .localCheckpoint(false)
+      .distinct())
     // verification shingles: candidate docs only (semi join), per-row
     // distinct (array_distinct) so no corpus-wide distinct shuffle;
-    // checkpointed for the same reason (3 references in jaccardOnPairs)
+    // cut for the same reason (3 references in jaccardOnPairs)
     val candIds = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol)))
       .distinct()
-    val shCand = base.join(candIds, Seq(idCol), "left_semi")
+    val shCand = cut(signed.join(candIds, Seq(idCol), "left_semi")
       .select(col(idCol),
-        explode(array_distinct(shingles(col("__tids"), n))).as("shingle"))
-      .localCheckpoint(false)
+        explode(array_distinct(shingles(col("__tids"), n))).as("shingle")))
     jaccardOnPairs(cands, shCand, idCol, threshold)
   }
 

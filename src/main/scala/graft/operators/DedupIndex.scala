@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{K, Kernel}
 
 /** Persisted MinHash dedup index — incremental near-dup detection for a
   * growing corpus (signature semantics per
@@ -62,7 +61,7 @@ object DedupIndex {
     // written sigs table (signatures are the small per-doc residue; the
     // expensive tokenize+shingle+MinHash pass must not run twice over a
     // 100 TB corpus — exactly the recap trick, applied at build)
-    signed(corpus, idCol, textCol, n, numHashes)
+    Dedup.signedTokens(corpus, idCol, textCol, n, numHashes)
       .select(col(idCol), col("__sig").as("sig"))
       .write.mode("overwrite").format("parquet")
       .saveAsTable(s"${table}_sigs")
@@ -128,7 +127,7 @@ object DedupIndex {
     * same batch sign it once and feed both calls. */
   def sign(df: DataFrame, idCol: String, textCol: String, n: Int = 3,
            numHashes: Int = 16): DataFrame =
-    signed(df, idCol, textCol, n, numHashes)
+    Dedup.signedTokens(df, idCol, textCol, n, numHashes)
       .select(col(idCol), col("__sig").as("sig"))
 
   /** [[nearDupsAgainst]] over a pre-signed batch ((idCol, sig) rows, as
@@ -138,17 +137,18 @@ object DedupIndex {
                             numHashes: Int = 16, bands: Int = 4): DataFrame = {
     requireParams(spark, table, numHashes, bands)
     reconcile(spark, table)
-    val bSigs = sigs.select(col(idCol), col("sig").as("__sig"))
-    val bBands = banded(bSigs, idCol, numHashes, bands)
-      .select(col(idCol).as("__bid"), col("band"), col("key"))
+    // the batch's banded keys carry its signature through the candidate
+    // join, so verification needs no second join against the batch
+    val bBands = banded(sigs.select(col(idCol), col("sig").as("__sig")), idCol,
+        numHashes, bands, col("__sig"))
+      .select(col(idCol).as("__bid"), col("__sig").as("sig_a"), col("band"), col("key"))
     val cBands = spark.table(s"${table}_bands")
       .select(col(idCol).as("corpus_id"), col("band"), col("key"))
     val cands = cBands.join(bBands, Seq("band", "key"))
-      .select(col("__bid"), col("corpus_id"))
+      .select(col("__bid"), col("corpus_id"), col("sig_a"))
       .distinct()
     val est = estJaccard(col("sig_a"), col("sig_b"), numHashes)
     cands
-      .join(bSigs.select(col(idCol).as("__bid"), col("__sig").as("sig_a")), Seq("__bid"))
       .join(spark.table(s"${table}_sigs")
         .select(col(idCol).as("corpus_id"), col("sig").as("sig_b")), Seq("corpus_id"))
       .select(col("__bid").as(idCol), col("corpus_id"),
@@ -315,21 +315,14 @@ object DedupIndex {
       .map(i => when(element_at(a, i + 1) === element_at(b, i + 1), 1).otherwise(0))
       .reduce(_ + _).cast("double") / lit(numHashes.toDouble)
 
-  private def signed(df: DataFrame, idCol: String, textCol: String,
-                     n: Int, numHashes: Int): DataFrame =
-    Dedup.withSigArray(
-      df.select(col(idCol), Kernel.tokenIds(col(textCol), K.MaxLength).as("__tids"))
-        .filter(size(col("__tids")) >= n),
-      n, numHashes)
-
+  /** (idCol, `carry`..., band, key) per band of each `__sig`. */
   private def banded(sigs: DataFrame, idCol: String,
-                     numHashes: Int, bands: Int): DataFrame = {
+                     numHashes: Int, bands: Int, carry: Column*): DataFrame = {
     val rpb = numHashes / bands
     val bandKey: Int => Column = b =>
       Dedup.bandKeyFold((b * rpb until (b + 1) * rpb)
         .map(i => element_at(col("__sig"), i + 1)))
-    sigs.select(
-      col(idCol),
-      posexplode(array((0 until bands).map(bandKey): _*)).as(Seq("band", "key")))
+    sigs.select((col(idCol) +: carry) :+
+      posexplode(array((0 until bands).map(bandKey): _*)).as(Seq("band", "key")): _*)
   }
 }

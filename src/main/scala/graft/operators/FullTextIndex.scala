@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path}
 import graft.functions.{K, Kernel}
 
@@ -114,7 +115,7 @@ object FullTextIndex {
     import spark.implicits._
     val fs = hfs(spark, path)
     fs.delete(new Path(path), true)
-    appendInto(spark, corpus, idCol, textCol, path, maxLength)
+    appendInto(spark, corpus, idCol, textCol, path, maxLength, gen = 1L)
     // driver-side 1-row conf write (SidecarIO) — the commit marker is
     // two ints; a coalesce(1) Spark write paid a full job for it
     SidecarIO.writeGroups(spark.sparkContext.hadoopConfiguration,
@@ -127,11 +128,16 @@ object FullTextIndex {
 
   /** Grow the index with an ingest batch (new ids by contract): one
     * tokenize pass over JUST the batch — postings/docs rows append as
-    * new files, df/meta partials stack for the query-time sum. */
+    * new files, df/meta partials stack for the query-time sum.
+    * Per-batch cost: one exchange each for the forward rows and the
+    * postings, one write per staged table, and no job before the first
+    * write (driver-side gate and generation reads, pinned schemas) — 6
+    * jobs for a micro-batch whose shuffles land in one partition. */
   def appendBatch(spark: SparkSession, batch: DataFrame, idCol: String,
                   textCol: String, path: String): Unit = {
     reconcile(spark, path)
-    appendInto(spark, batch, idCol, textCol, path, conf(spark, path))
+    appendInto(spark, batch, idCol, textCol, path, conf(spark, path),
+      maxGen(spark, path) + 1L)
   }
 
   /** Upsert: replace the indexed postings (and their df/avgdl
@@ -146,11 +152,16 @@ object FullTextIndex {
     * upsert re-removes whatever LIVE version is present (old, new, or
     * none — removal derives its deltas from the unmasked forward rows)
     * before appending exactly once. Cost: O(batch) staging + one
-    * batch-sized tokenize/append — never an inverted-file rewrite. */
+    * batch-sized tokenize/append — never an inverted-file rewrite; the
+    * format gate, reconcile and generation read run once for both legs
+    * (the removal tombstones at gen g, the append writes g + 1). */
   def upsertBatch(spark: SparkSession, batch: DataFrame, idCol: String,
                   textCol: String, path: String): Unit = {
-    removeDocs(spark, batch.select(col(idCol)), idCol, path)
-    appendBatch(spark, batch, idCol, textCol, path)
+    val maxLength = conf(spark, path)
+    reconcile(spark, path)
+    val gen = maxGen(spark, path)
+    removeAt(spark, batch.select(col(idCol)), idCol, path, gen)
+    appendInto(spark, batch, idCol, textCol, path, maxLength, gen + 1L)
   }
 
   /** One atomic append: postings + docs + df + meta land together or
@@ -169,47 +180,48 @@ object FullTextIndex {
     * batch's statistics permanently under-counted. */
   private def appendInto(spark: SparkSession, batch: DataFrame,
                          idCol: String, textCol: String, path: String,
-                         maxLength: Int): Unit = {
+                         maxLength: Int, gen: Long): Unit = {
     val fs = hfs(spark, path)
     val ap = new Path(s"$path/_append")
     fs.delete(ap, true)
-    val gen = maxGen(spark, path) + 1L
     // the exact tf/dl/stats derivation of FullText.bm25DocWeightsTokens
-    // — one tokenize pass shared by all four tables via the lazy
-    // lineage cut; n_docs/total_len count EVERY doc (a zero-token doc
-    // contributes no posting but still lowers avgdl — the batch operator
-    // counts it, so the index must too or the weights diverge), and the
-    // forward docs table records every doc for the same reason: removal
-    // must be able to subtract a zero-token doc's n_docs contribution
-    val toks = batch
-      .select(col(idCol).cast("long").as("doc_id"),
-        Kernel.tokenIds(col(textCol), maxLength).as("__tids"))
-      .localCheckpoint(false)
-    val tf = toks
-      .select(col("doc_id"), size(col("__tids")).cast("long").as("__dl"),
-        explode(col("__tids")).as("token_id"))
-      .groupBy(col("doc_id"), col("token_id"))
-      .agg(count(lit(1)).as("tf"), max(col("__dl")).as("dl"))
-      .localCheckpoint(false)
-    // cluster + sort by token so parquet row-group stats carry the
-    // pushed-down IN (the same discipline as VectorIndex's cell files)
-    tf.select(col("token_id"), col("doc_id"), col("tf"), col("dl"),
-        lit(gen).as("gen"))
-      .repartition(col("token_id")).sortWithinPartitions("token_id")
-      .write.parquet(s"$path/_append/postings")
-    // the forward index clusters + sorts on doc_id for the same reason:
-    // a removal batch's id set pushes down as In(doc_id, ...)
-    toks.select(col("doc_id"), size(col("__tids")).cast("long").as("dl"),
-        array_distinct(col("__tids")).as("tids"), lit(gen).as("gen"))
-      .repartition(col("doc_id")).sortWithinPartitions("doc_id")
-      .write.parquet(s"$path/_append/docs")
-    tf.groupBy(col("token_id")).agg(count(lit(1)).as("df"))
-      .write.parquet(s"$path/_append/df")
-    toks
-      .agg(count(lit(1)).as("n_docs"),
-        sum(size(col("__tids")).cast("long")).as("total_len"))
-      .select(col("n_docs"), col("total_len"), lit(gen).as("gen"))
-      .coalesce(1).write.parquet(s"$path/_append/meta")
+    // — one tokenize pass shared by all four tables; n_docs/total_len
+    // count EVERY doc (a zero-token doc contributes no posting but still
+    // lowers avgdl — the batch operator counts it, so the index must too
+    // or the weights diverge), and the forward docs table records every
+    // doc for the same reason: removal must be able to subtract a
+    // zero-token doc's n_docs contribution.
+    //
+    // Two batch-scoped cuts feed the four staged writes, one exchange
+    // each: the forward rows clustered + sorted on doc_id (a removal
+    // batch's id set pushes down as In(doc_id, ...)), and the postings
+    // clustered + sorted on token_id (row-group stats carry the query's
+    // pushed-down IN — the same discipline as VectorIndex's cell files).
+    // tf groups inside the token_id clusters; df and meta aggregate the
+    // cuts (in place when a batch-sized cut lands in one partition).
+    BatchScope { scope =>
+      val docs = scope.keep(batch
+        .select(col(idCol).cast("long").as("doc_id"),
+          Kernel.tokenIds(col(textCol), maxLength).as("__tids"))
+        .select(col("doc_id"), size(col("__tids")).cast("long").as("dl"), col("__tids"))
+        .repartition(col("doc_id")).sortWithinPartitions("doc_id"))
+      docs.select(col("doc_id"), col("dl"), array_distinct(col("__tids")).as("tids"),
+          lit(gen).as("gen"))
+        .write.parquet(s"$path/_append/docs")
+      val postings = scope.keep(docs
+        .select(col("doc_id"), col("dl"), explode(col("__tids")).as("token_id"))
+        .repartition(col("token_id"))
+        .groupBy(col("doc_id"), col("token_id"))
+        .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
+        .select(col("token_id"), col("doc_id"), col("tf"), col("dl"), lit(gen).as("gen"))
+        .sortWithinPartitions("token_id"))
+      postings.write.parquet(s"$path/_append/postings")
+      postings.groupBy(col("token_id")).agg(count(lit(1)).as("df"))
+        .write.parquet(s"$path/_append/df")
+      docs.agg(count(lit(1)).as("n_docs"), sum(col("dl")).as("total_len"))
+        .select(col("n_docs"), col("total_len"), lit(gen).as("gen"))
+        .coalesce(1).write.parquet(s"$path/_append/meta")
+    }
     fs.create(new Path(ap, "READY"), true).close()
     applyAppend(spark, path)
   }
@@ -252,10 +264,10 @@ object FullTextIndex {
     def prune(t: DataFrame): DataFrame =
       if (ids.length <= PushdownTermLimit) t.filter(col("token_id").isin(ids: _*))
       else t.join(broadcast(termIds), Seq("token_id"), "left_semi")
-    val post = liveRows(spark, path, prune(spark.read.parquet(s"$path/postings")))
-    val dfNow = prune(spark.read.parquet(s"$path/df"))
+    val post = liveRows(spark, path, prune(read(spark, path, "postings")))
+    val dfNow = prune(read(spark, path, "df"))
       .groupBy(col("token_id")).agg(sum(col("df")).as("df"))
-    val nd = spark.read.parquet(s"$path/meta")
+    val nd = read(spark, path, "meta")
       .agg(sum(col("n_docs")).as("__n_docs"), sum(col("total_len")).as("__total_len"))
     val weights = post
       .join(broadcast(dfNow), "token_id")
@@ -298,47 +310,59 @@ object FullTextIndex {
     * Idempotent against redelivery with no extra machinery: a replayed
     * removal finds its victims already masked, so it stages empty
     * deltas and subtracts nothing. Contract: every id was ingested at
-    * most once per generation (ids are permanent identities). */
+    * most once per generation (ids are permanent identities).
+    *
+    * Per-batch cost: the id collect, the tombstone mask's broadcast
+    * (when tombstones exist) and the three staged writes — 5 jobs in
+    * `IngestJobCountSpec`. */
   def removeDocs(spark: SparkSession, ids: DataFrame, idCol: String,
                  path: String): Unit = {
     conf(spark, path) // format gate — refuse a stale layout up front
     reconcile(spark, path)
+    removeAt(spark, ids, idCol, path, maxGen(spark, path))
+  }
+
+  /** [[removeDocs]] after its format gate and reconcile, tombstoning at
+    * generation `gen` (the current counter). */
+  private def removeAt(spark: SparkSession, ids: DataFrame, idCol: String,
+                       path: String, gen: Long): Unit = {
     val fs = hfs(spark, path)
     val rm = new Path(s"$path/_removal")
     fs.delete(rm, true)
-    val gen = maxGen(spark, path)
-    // LAZY cuts here and on victims below (r20): eager checkpoints cost
-    // one driver-sequenced job each; lazy ones materialize inside the
-    // next action (the limit+1 collect / the first staged write), which
-    // all complete before READY commits the removal — same crash story
-    val drop = ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .localCheckpoint(false)
-    // batch-bounded id set → In(doc_id, ...) reaches the forward scan
-    // (row-group skipping on the sorted doc column); wide batches fall
-    // back to the broadcast semi join. limit+1 decides the path, so a
-    // huge removal batch never round-trips its full id set through the
-    // driver just to learn it won't fit the IN pushdown
-    val idArr = drop.limit(PushdownTermLimit + 1).collect()
-      .map(_.getLong(0)).sorted
-    def pruneDocs(t: DataFrame): DataFrame =
-      if (idArr.length <= PushdownTermLimit) t.filter(col("doc_id").isin(idArr: _*))
-      else t.join(broadcast(drop), Seq("doc_id"), "left_semi")
-    val victims = liveRows(spark, path,
-        pruneDocs(spark.read.parquet(s"$path/docs")))
-      .localCheckpoint(false)
-    // stage EVERYTHING the apply step will do, deltas included, BEFORE
-    // touching any live table — after READY the removal is decided and
-    // every later step is a rename
-    victims.select(explode(col("tids")).as("token_id"))
-      .groupBy(col("token_id")).agg((-count(lit(1))).as("df"))
-      .coalesce(1).write.parquet(s"$path/_removal/df")
-    victims
-      .agg((-count(lit(1))).as("n_docs"),
-        (-coalesce(sum(col("dl")), lit(0L))).as("total_len"))
-      .select(col("n_docs"), col("total_len"), lit(0L).as("gen"))
-      .coalesce(1).write.parquet(s"$path/_removal/meta")
-    victims.select(col("doc_id"), lit(gen).as("gen"))
-      .coalesce(1).write.parquet(s"$path/_removal/tombstones")
+    BatchScope { scope =>
+      // the removal's id set and its victims live in ONE partition: the
+      // three staged tables are single files, so each delta aggregates
+      // in place instead of shuffling and coalescing per write. Both
+      // frames are batch-scoped; every write completes before READY
+      // commits the removal
+      val drop = scope.keepInOne(ids.select(col(idCol).cast("long").as("doc_id"))
+        .coalesce(1).distinct())
+      // batch-bounded id set → In(doc_id, ...) reaches the forward scan
+      // (row-group skipping on the sorted doc column); wide batches fall
+      // back to the broadcast semi join. limit+1 decides the path, so a
+      // huge removal batch never round-trips its full id set through the
+      // driver just to learn it won't fit the IN pushdown
+      val idArr = drop.limit(PushdownTermLimit + 1).collect()
+        .map(_.getLong(0)).sorted
+      def pruneDocs(t: DataFrame): DataFrame =
+        if (idArr.length <= PushdownTermLimit) t.filter(col("doc_id").isin(idArr: _*))
+        else t.join(broadcast(drop), Seq("doc_id"), "left_semi")
+      val victims = scope.keepInOne(
+        liveRows(spark, path, pruneDocs(read(spark, path, "docs"))))
+      // stage EVERYTHING the apply step will do, deltas included, BEFORE
+      // touching any live table — after READY the removal is decided and
+      // every later step is a rename
+      victims.select(explode(col("tids")).as("token_id"))
+        .groupBy(col("token_id")).agg((-count(lit(1))).as("df"))
+        .coalesce(1).write.parquet(s"$path/_removal/df")
+      victims
+        .agg((-count(lit(1))).as("n_docs"),
+          (-coalesce(sum(col("dl")), lit(0L))).as("total_len"))
+        .select(col("n_docs"), col("total_len"), lit(0L).as("gen"))
+        .coalesce(1).write.parquet(s"$path/_removal/meta")
+      victims.select(col("doc_id"), lit(gen).as("gen"))
+        .coalesce(1).write.parquet(s"$path/_removal/tombstones")
+    }
     fs.create(new Path(rm, "READY"), true).close()
     applyRemoval(spark, path)
     // bounded-mask policy: under sustained removals the tombstone
@@ -377,26 +401,29 @@ object FullTextIndex {
     reconcile(spark, path)
     val fs = hfs(spark, path)
     if (!fs.exists(new Path(s"$path/tombstones"))) return
-    val snap = tombstoneMax(spark, path).localCheckpoint(true)
-    if (snap.isEmpty) return
-    def rewrite(sub: String, sortCol: String): Unit = {
-      val staged = new Path(s"$path/_${sub}_new")
-      fs.delete(staged, true)
-      maskBy(spark.read.parquet(s"$path/$sub"), snap)
-        .repartition(col(sortCol)).sortWithinPartitions(sortCol)
-        .write.parquet(staged.toString)
-      swapDir(fs, s"$path/$sub", staged.toString)
+    BatchScope { scope =>
+      val snap = scope.keep(tombstoneMax(spark, path))
+      if (!snap.isEmpty) {
+        def rewrite(sub: String, sortCol: String): Unit = {
+          val staged = new Path(s"$path/_${sub}_new")
+          fs.delete(staged, true)
+          maskBy(read(spark, path, sub), snap)
+            .repartition(col(sortCol)).sortWithinPartitions(sortCol)
+            .write.parquet(staged.toString)
+          swapDir(fs, s"$path/$sub", staged.toString)
+        }
+        rewrite("postings", "token_id")
+        rewrite("docs", "doc_id")
+        // last: clear exactly the tombstones the rewrites covered — any
+        // landed later (single-writer, so only via a crash-resumed
+        // caller) stay and keep masking
+        val staged = new Path(s"$path/_tombstones_new")
+        fs.delete(staged, true)
+        maskBy(read(spark, path, "tombstones"), snap)
+          .coalesce(1).write.parquet(staged.toString)
+        swapDir(fs, s"$path/tombstones", staged.toString)
+      }
     }
-    rewrite("postings", "token_id")
-    rewrite("docs", "doc_id")
-    // last: clear exactly the tombstones the rewrites covered — any
-    // landed later (single-writer, so only via a crash-resumed caller)
-    // stay and keep masking
-    val staged = new Path(s"$path/_tombstones_new")
-    fs.delete(staged, true)
-    maskBy(spark.read.parquet(s"$path/tombstones"), snap)
-      .coalesce(1).write.parquet(staged.toString)
-    swapDir(fs, s"$path/tombstones", staged.toString)
   }
 
   /** The auto-compaction trigger — decide-then-act, the same shape as
@@ -425,7 +452,7 @@ object FullTextIndex {
     if (footerRowCount(spark, fs, s"$path/tombstones") < minTombstones) return false
     val pending = tombstoneMax(spark, path).count()
     if (pending < minTombstones) return false
-    val live = spark.read.parquet(s"$path/meta")
+    val live = read(spark, path, "meta")
       .agg(coalesce(sum(col("n_docs")), lit(0L))).collect()(0).getLong(0)
     if (pending.toDouble < frac * live) return false
     compactPostings(spark, path)
@@ -458,7 +485,7 @@ object FullTextIndex {
     def fold(sub: String, agg: DataFrame => DataFrame): Unit = {
       val staged = new Path(s"$path/_${sub}_new")
       fs.delete(staged, true)
-      agg(spark.read.parquet(s"$path/$sub"))
+      agg(read(spark, path, sub))
         .coalesce(1).write.parquet(staged.toString)
       swapDir(fs, s"$path/$sub", staged.toString)
     }
@@ -477,16 +504,7 @@ object FullTextIndex {
   def reconcile(spark: SparkSession, path: String): Unit = {
     val fs = hfs(spark, path)
     Seq("postings", "docs", "df", "meta", "tombstones").foreach { sub =>
-      val old = new Path(s"$path/${sub}_old")
-      if (fs.exists(old)) {
-        val live = new Path(s"$path/$sub")
-        // live missing → crashed between park and rename-in: restore
-        if (!fs.exists(live)) fs.rename(old, live)
-        else fs.delete(old, true)
-      }
-      // a staged rewrite that never swapped is garbage — the op reruns
-      val staged = new Path(s"$path/_${sub}_new")
-      if (fs.exists(staged)) fs.delete(staged, true)
+      reconcileSwap(fs, s"$path/$sub", s"$path/_${sub}_new")
     }
     // an interrupted append resolves BEFORE any removal: a READY append
     // is committed (roll it in so a staged removal's tombstones mask
@@ -509,27 +527,33 @@ object FullTextIndex {
     * gen) outlive the mask. */
   private def maxGen(spark: SparkSession, path: String): Long = {
     val fs = hfs(spark, path)
+    // driver-side read of the meta partials (SidecarIO): one row per
+    // append or removal, where a Spark aggregate would cost two jobs per
+    // append, removal and upsert
     if (!fs.exists(new Path(s"$path/meta"))) 0L
-    else spark.read.parquet(s"$path/meta")
-      .agg(coalesce(max(col("gen")), lit(0L)).as("g"))
-      .collect()(0).getLong(0)
+    else SidecarIO.readGroups(spark.sparkContext.hadoopConfiguration, s"$path/meta")
+      .map(_.getLong("gen", 0)).foldLeft(0L)(math.max)
   }
 
   /** The folded tombstone set: one (doc_id, gen=max) row per removed
-    * doc — O(removals since compaction), broadcast at the join sites. */
+    * doc — the snapshot compaction clears and the count its trigger
+    * reads. */
   private def tombstoneMax(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(s"$path/tombstones")
+    read(spark, path, "tombstones")
       .groupBy(col("doc_id")).agg(max(col("gen")).as("gen"))
 
   /** Mask `rows` (any table with doc_id + gen columns) against the
     * index's tombstones: a row is dead iff a tombstone with its doc_id
-    * has gen ≥ the row's. No tombstone table → nothing ever removed →
+    * has gen ≥ the row's. The raw tombstone rows mask exactly like the
+    * folded ones (some tombstone's gen ≥ g iff the max is), so the mask
+    * broadcasts them as stored — O(removals since compaction), no
+    * aggregation shuffle. No tombstone table → nothing ever removed →
     * pass-through. */
   private def liveRows(spark: SparkSession, path: String,
                        rows: DataFrame): DataFrame = {
     val fs = hfs(spark, path)
     if (!fs.exists(new Path(s"$path/tombstones"))) rows
-    else maskBy(rows, tombstoneMax(spark, path))
+    else maskBy(rows, read(spark, path, "tombstones"))
   }
 
   /** The broadcast anti-join masking dead rows: drop every row whose
@@ -544,7 +568,7 @@ object FullTextIndex {
   /** Park-and-swap a live dir with its staged replacement: live →
     * live_old, staged → live, drop the parked copy only after the swap
     * lands. [[reconcile]] resolves every interruption point. */
-  private def swapDir(fs: FileSystem, live: String, staged: String): Unit = {
+  private[graft] def swapDir(fs: FileSystem, live: String, staged: String): Unit = {
     val livePath = new Path(live)
     val old = new Path(s"${live}_old")
     fs.delete(old, true)
@@ -552,6 +576,36 @@ object FullTextIndex {
     fs.rename(new Path(staged), livePath)
     fs.delete(old, true)
   }
+
+  /** Resolve an interrupted [[swapDir]] of `live`: a parked copy whose
+    * live dir is missing crashed between park and rename-in — restore
+    * it; a parked copy beside a live dir is stale — drop it. A staged
+    * replacement that never swapped is garbage (the op reruns). */
+  private[graft] def reconcileSwap(fs: FileSystem, live: String,
+                                   staged: String): Unit = {
+    val old = new Path(s"${live}_old")
+    if (fs.exists(old)) {
+      if (!fs.exists(new Path(live))) fs.rename(old, new Path(live))
+      else fs.delete(old, true)
+    }
+    val st = new Path(staged)
+    if (fs.exists(st)) fs.delete(st, true)
+  }
+
+  /** The pinned schemas of the index tables (every writer above stores
+    * exactly these types): reading with them skips the schema-inference
+    * job a bare `spark.read.parquet` runs per table read — per append,
+    * removal and search. */
+  private val Schemas: Map[String, StructType] = Map(
+    "postings" -> "token_id BIGINT, doc_id BIGINT, tf BIGINT, dl BIGINT, gen BIGINT",
+    "docs" -> "doc_id BIGINT, dl BIGINT, tids ARRAY<BIGINT>, gen BIGINT",
+    "df" -> "token_id BIGINT, df BIGINT",
+    "meta" -> "n_docs BIGINT, total_len BIGINT, gen BIGINT",
+    "tombstones" -> "doc_id BIGINT, gen BIGINT"
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
+  private def read(spark: SparkSession, path: String, sub: String): DataFrame =
+    spark.read.schema(Schemas(sub)).parquet(s"$path/$sub")
 
   /** Move every parquet part of `src` into `dst` — rename-based, so a
     * replay moves only what is still left (exactly-once application). */

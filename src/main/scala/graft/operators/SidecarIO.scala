@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side parquet reads for the K-SIZED index sidecars (IVF-PQ
   * meta/centroids/books, BM25 conf) — guide §1.2 "per-task work" at the
@@ -21,9 +22,11 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   * byte-identical — the same decoder Spark's scan uses underneath.
   *
   * Scope guard: ONLY for quantizer/conf-sized tables (rows bounded by
-  * nCells/k/m — never data-sized). Corpus-shaped tables (codes, vecs,
+  * nCells/k/m — never data-sized) and tables that are driver-small by
+  * construction (the BM25 `meta` partials: one row per append or
+  * removal, folded by `recapStats`). Corpus-shaped tables (codes, vecs,
   * postings, tombstones) stay behind Spark scans where pruning and
-  * parallelism matter. */
+  * parallelism matter; [[sparkSchema]] only reads one of their footers. */
 object SidecarIO {
 
   /** Every record of the parquet table at `dir`, read on the driver.
@@ -64,6 +67,28 @@ object SidecarIO {
   }
 
   def has(g: Group, field: String): Boolean = g.getType.containsField(field)
+
+  /** The Spark schema that Spark's writer stored in the footer of the
+    * first part file under `dir` (searched recursively, so partitioned
+    * tables work; partition columns are not in the files). One footer
+    * read on the driver, where `spark.read.parquet(dir)` without a schema
+    * runs a schema-inference job. */
+  def sparkSchema(hconf: Configuration, dir: String): StructType = {
+    val d = new Path(dir)
+    val it = d.getFileSystem(hconf).listFiles(d, true)
+    var file: Option[Path] = None
+    while (file.isEmpty && it.hasNext) {
+      val p = it.next().getPath
+      if (p.getName.startsWith("part-") && p.getName.endsWith(".parquet")) file = Some(p)
+    }
+    val f = file.getOrElse(throw new IllegalStateException(s"no parquet part file under $dir"))
+    val rdr = ParquetFileReader.open(HadoopInputFile.fromPath(f, hconf))
+    val json = try rdr.getFooter.getFileMetaData.getKeyValueMetaData
+      .get("org.apache.spark.sql.parquet.row.metadata")
+    finally rdr.close()
+    require(json != null, s"$f carries no Spark schema (not written by Spark)")
+    DataType.fromJson(json).asInstanceOf[StructType]
+  }
 
   /** Write driver-resident rows as ONE part file under `dir` (replacing
     * the directory) — the write-side twin of [[readGroups]], for the

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Persisted IVF-PQ vector index — the build-once / query-many serving
   * shape for a 100 TB corpus (semantics per the reference's flat search,
@@ -239,8 +240,10 @@ object VectorIndex {
     * just not free). */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
              idCol: String, autoCompact: Boolean = true): Unit = {
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/tombstones")
+    // one file per delete, deduplicated inside its single partition, so
+    // the O(batch) id set needs no shuffle job
+    ids.select(col(idCol).cast("long").as("id")).coalesce(1).distinct()
+      .write.mode(SaveMode.Append).parquet(s"$path/tombstones")
     // bounded-mask policy (FullTextIndex.maybeCompact's twin): the
     // query-time tombstone anti-join must stay bounded under sustained
     // deletes without an operator remembering the maintenance window
@@ -276,11 +279,10 @@ object VectorIndex {
     // floor only ever fires early, and the exact fold decides below
     if (FullTextIndex.footerRowCount(spark, fs, s"$path/tombstones") < minTombstones)
       return false
-    val pending = spark.read.parquet(s"$path/tombstones")
-      .select(col("id")).distinct().count()
+    val pending = tombstones(spark, path).select(col("id")).distinct().count()
     if (pending < minTombstones) return false
     // parquet footer row count — no data pages read
-    val indexed = spark.read.parquet(s"$path/codes").count()
+    val indexed = codes(spark, path).count()
     if (pending.toDouble < frac * indexed) return false
     compact(spark, path)
     true
@@ -310,19 +312,25 @@ object VectorIndex {
     val hasTombs = fs.exists(tombDir)
     if (!hasTombs && !mergeAll) return
     import spark.implicits._
-    val tombs =
-      if (hasTombs) spark.read.parquet(s"$path/tombstones").select(col("id")).distinct()
-      else spark.emptyDataset[Long].toDF("id")
-    val codes = spark.read.parquet(s"$path/codes")
-    // bounded by nCells (the partition-column cardinality), never by data
-    val affected =
-      (if (mergeAll) codes.select(col("cell").cast("long"))
-       else codes.join(tombs, Seq("id")).select(col("cell").cast("long")))
-        .distinct().collect().map(_.getLong(0)).sorted
-    if (affected.nonEmpty) {
-      rewriteCells(spark, s"$path/codes", affected, tombs)
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/vecs")))
-        rewriteCells(spark, s"$path/vecs", affected, tombs)
+    BatchScope { scope =>
+      // the distinct tombstoned ids, computed once in one partition (the
+      // set is O(deletes since the last compaction)) and read by the
+      // affected-cells collect and by every table rewrite
+      val tombs =
+        if (hasTombs) scope.keep(tombstones(spark, path).select(col("id"))
+          .coalesce(1).distinct())
+        else spark.emptyDataset[Long].toDF("id")
+      val cs = codes(spark, path)
+      // bounded by nCells (the partition-column cardinality), never by data
+      val affected =
+        (if (mergeAll) cs.select(col("cell").cast("long"))
+         else cs.join(tombs, Seq("id")).select(col("cell").cast("long")))
+          .distinct().collect().map(_.getLong(0)).sorted
+      if (affected.nonEmpty) {
+        rewriteCells(s"$path/codes", cs, affected, tombs)
+        if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/vecs")))
+          rewriteCells(s"$path/vecs", vecs(spark, path), affected, tombs)
+      }
     }
     if (hasTombs) fs.delete(tombDir, true)
   }
@@ -344,11 +352,12 @@ object VectorIndex {
     * tombstones are cleared LAST in [[compact]], so a recovered run
     * simply redoes the rewrite. A delete-then-rename swap would instead
     * lose the cell outright if the process died between the two. */
-  private def rewriteCells(spark: SparkSession, tablePath: String,
+  private def rewriteCells(tablePath: String, table: DataFrame,
                            cells: Array[Long], tombs: DataFrame): Unit = {
+    val spark = table.sparkSession
     val tmpPath = s"${tablePath}_compact"
     val oldPath = s"${tablePath}_old"
-    spark.read.parquet(tablePath)
+    table
       .filter(col("cell").isin(cells: _*))
       .join(tombs, Seq("id"), "left_anti")
       .withColumn("cell", col("cell").cast("long"))
@@ -437,6 +446,15 @@ object VectorIndex {
       residual = isResidual(newRows.sparkSession, path))
   }
 
+  /** [[append]] with the quantizers, encode frame and layout of a handle
+    * [[load]]ed from `path` since its last write — for a body that
+    * searched the index and now grows it, so the sidecars are read once. */
+  private[graft] def appendLoaded(newRows: DataFrame, cIdCol: String,
+                                  cVecCol: String, path: String,
+                                  idx: Loaded): Unit =
+    encodeInto(newRows, cIdCol, cVecCol, idx.cents, idx.books, path,
+      SaveMode.Append, storeVectors = idx.vecs.isDefined, residual = idx.residual)
+
   /** A session-lifetime handle on one index: the k-sized quantizer
     * sidecars plus the codes DataFrame whose (expensive, nCells-wide)
     * partition listing is built once and reused across query batches.
@@ -460,12 +478,35 @@ object VectorIndex {
     // serve the restored layout, never a partially-swapped one
     reconcile(fs, s"$path/codes")
     reconcile(fs, s"$path/vecs")
-    def opt(sub: String): Option[DataFrame] =
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$sub")))
-        Some(spark.read.parquet(s"$path/$sub"))
+    def opt(sub: String, read: => DataFrame): Option[DataFrame] =
+      if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/$sub"))) Some(read)
       else None
-    Loaded(cents, books, spark.read.parquet(s"$path/codes"),
-      opt("vecs"), opt("tombstones"), residual = isResidual(spark, path))
+    Loaded(cents, books, codes(spark, path),
+      opt("vecs", vecs(spark, path)), opt("tombstones", tombstones(spark, path)),
+      residual = isResidual(spark, path))
+  }
+
+  /** The corpus-shaped tables, read with their pinned schemas: a
+    * `spark.read.parquet` without one runs a schema-inference job per
+    * read (per micro-batch on the ingest paths, per probe on the serving
+    * paths). `cell` reads as a long, the type every writer stores. */
+  private val CodesSchema = StructType.fromDDL("id BIGINT, codes ARRAY<BIGINT>, cell BIGINT")
+  private val TombstonesSchema = StructType.fromDDL("id BIGINT")
+
+  private def codes(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(CodesSchema).parquet(s"$path/codes")
+
+  private def tombstones(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(TombstonesSchema).parquet(s"$path/tombstones")
+
+  /** The vecs table stores the corpus vector column as given (float or
+    * double elements), so its element type comes from one part file's
+    * footer on the driver. */
+  private def vecs(spark: SparkSession, path: String): DataFrame = {
+    val stored = SidecarIO.sparkSchema(spark.sparkContext.hadoopConfiguration, s"$path/vecs")
+    spark.read.schema(StructType(Seq(StructField("id", LongType),
+        StructField("vec", stored("vec").dataType), StructField("cell", LongType))))
+      .parquet(s"$path/vecs")
   }
 
   /** The encode frame persisted at build time — meta's `residual`
@@ -849,29 +890,33 @@ object VectorIndex {
       if (residual) bridge.column(graft.functions.ResidualVec(
         bridge.expression(col("vec")), bridge.expression(col("cell")), bank))
       else col("vec")
-    val assigned = withCell.select(
+    val encoded = withCell.select(
         col("id"), col("cell"),
         Similarity.pqCodesCol(bookBank, encSrc).as("codes"),
         col("vec"))
-      // cluster by cell BEFORE the partitioned write: unordered input
-      // would make every task write a file into every cell directory
-      // (tasks × cells tiny files — measured 2.6× slower to SEARCH than
-      // the one-shot form at 100×, and a 26 s build); one narrow-payload
-      // shuffle at build time compacts each cell to one file per append
-      .repartition(col("cell"))
-    // two tables means two actions: without a persist the second write
+    // cluster by cell BEFORE the partitioned write: unordered input
+    // would make every task write a file into every cell directory
+    // (tasks × cells tiny files — measured 2.6× slower to SEARCH than
+    // the one-shot form at 100×, and a 26 s build); one narrow-payload
+    // shuffle at build time compacts each cell to one file per append.
+    // Input in one partition (a sink body's micro-batch) is one task
+    // already: the writer's sort by cell gives one file per cell, so
+    // the shuffle would only add a job
+    val assigned =
+      if (encoded.queryExecution.executedPlan.outputPartitioning.numPartitions == 1) encoded
+      else encoded.repartition(col("cell"))
+    // two tables means two actions: without a cut the second write
     // would re-read the corpus, re-run NearestCell+PQ per row, and
     // re-shuffle — "one corpus pass" must hold for the storeVectors
     // build too (spill-to-disk beats a second full encode at any scale)
-    if (storeVectors) assigned.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      assigned.select(col("id"), col("cell"), col("codes"))
+    BatchScope { scope =>
+      val rows = if (storeVectors) scope.keep(assigned) else assigned
+      rows.select(col("id"), col("cell"), col("codes"))
         .write.mode(mode).partitionBy("cell").parquet(s"$path/codes")
       if (storeVectors)
-        assigned.select(col("id"), col("cell"), col("vec"))
+        rows.select(col("id"), col("cell"), col("vec"))
           .write.mode(mode).partitionBy("cell").parquet(s"$path/vecs")
-    } finally if (storeVectors) assigned.unpersist(false)
+    }
   }
 
   /** Merge `srcPath`'s rows INTO `dstPath` — the backfill-plus-daily
@@ -938,8 +983,7 @@ object VectorIndex {
     * bounded by the layout, never by data. */
   def stats(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
-    val codes = spark.read.parquet(s"$path/codes")
-    val occ = codes.groupBy(col("cell")).agg(count(lit(1)).as("n"))
+    val occ = codes(spark, path).groupBy(col("cell")).agg(count(lit(1)).as("n"))
       .agg(count(lit(1)).as("n_cells"), sum(col("n")).as("n_rows"),
         min(col("n")).as("min_occupancy"),
         max(col("n")).as("max_occupancy"),
@@ -949,7 +993,7 @@ object VectorIndex {
     val tombDir = new org.apache.hadoop.fs.Path(s"$path/tombstones")
     val nTombs =
       if (fs.exists(tombDir))
-        spark.read.parquet(s"$path/tombstones").select(col("id")).distinct().count()
+        tombstones(spark, path).select(col("id")).distinct().count()
       else 0L
     val cellDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$path/codes"))
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("cell="))

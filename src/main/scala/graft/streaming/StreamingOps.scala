@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 
 import graft.functions.Kernel
-import graft.operators.{Dedup, DedupIndex, FullTextIndex, TextEmbedder, VectorIndex}
+import graft.operators.{BatchScope, Dedup, DedupIndex, FullTextIndex, TextEmbedder, VectorIndex}
 
 /** Structured Streaming surface — beyond parity (the reference is
   * strictly batch, SURVEY.md §2.7), but a training-data pipeline ingests
@@ -343,7 +343,9 @@ object StreamingOps {
     * slots per duplicate), so it runs under [[replayMarked]]. The scrub
     * tombstones the batch's ids and compacts, physically removing
     * whatever partial copy landed. The markers live inside the index
-    * layout (`ingest_log/`), so they travel with it. */
+    * layout (`ingest_log/`), so they travel with it. The micro-batch is
+    * encoded in one partition, so the append writes its cells without a
+    * clustering shuffle (one job per index table). */
   def idempotentAppend(batch: DataFrame, idCol: String, vecCol: String,
                        indexPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
@@ -351,7 +353,7 @@ object StreamingOps {
       VectorIndex.delete(spark, indexPath, batch.select(col(idCol)), idCol)
       VectorIndex.compact(spark, indexPath)
     } {
-      VectorIndex.append(batch, idCol, vecCol, indexPath)
+      VectorIndex.append(batch.coalesce(1), idCol, vecCol, indexPath)
     }
   }
 
@@ -364,7 +366,9 @@ object StreamingOps {
     * (nothing, tombstones, a partial or full append) is swept by the
     * redelivered batch's delete+compact before the single live append.
     * Per-batch cost: O(batch) tombstones + affected-cell rewrites +
-    * one narrow encode pass. */
+    * one narrow encode pass; the pending tombstones are read once per
+    * compaction and every table read skips schema inference (13 jobs
+    * per micro-batch in `IngestJobCountSpec`). */
   def ivfPqUpsertSink(stream: DataFrame, idCol: String, vecCol: String,
                       indexPath: String): DataStreamWriter[Row] =
     nonEmptyBatches(stream) { (batch, _) =>
@@ -433,7 +437,13 @@ object StreamingOps {
     * the `reconcile` removeDocs runs first): after reconcile the
     * crashed attempt either fully landed or never happened, so the
     * deltas the scrub derives from the live forward rows subtract
-    * exactly what was added — never stats from a partial append. */
+    * exactly what was added — never stats from a partial append.
+    *
+    * Per-batch cost: no Spark job before the first write (the format
+    * gate and the generation counter are driver-side sidecar reads, and
+    * the index tables read with pinned schemas), then two batch-scoped
+    * cuts — forward rows on doc_id, postings on token_id — feeding the
+    * four staged writes: 6 jobs per micro-batch in `IngestJobCountSpec`. */
   def bm25IngestBatch(batch: DataFrame, batchId: Long, idCol: String,
                       textCol: String, indexPath: String,
                       logPath: String): Unit = {
@@ -461,7 +471,8 @@ object StreamingOps {
     * Batches self-accumulate: a doc admitted at batch N is corpus for
     * batch N+1, so cross-batch duplicates are caught even though each
     * batch is checked independently. Per-batch cost is O(batch·log) +
-    * the candidate joins — never a corpus re-sign. */
+    * the candidate joins — never a corpus re-sign; see
+    * [[dedupIngestBatch]] for the per-batch job count. */
   def dedupIngestSink(stream: DataFrame, idCol: String, textCol: String,
                       table: String, threshold: Double, dupsPath: String,
                       n: Int = 3, numHashes: Int = 16, bands: Int = 4,
@@ -499,8 +510,15 @@ object StreamingOps {
   /** The replay-safe per-batch body of [[semanticIngestSink]] — the
     * [[replayMarked]] discipline, logged under `<dupsPath>_ingest_log`;
     * the crash-recovery scrub here is the index's own tombstone path
-    * (delete the batch's ids, compact the affected cells) before
-    * re-running. */
+    * (delete the batch's ids, compact the affected cells) plus
+    * [[scrubAudit]] before re-running.
+    *
+    * Per-batch cost: the batch rows, the in-batch pairs, the locally
+    * clean rows, the corpus pairs and the [[verdict]] are each computed
+    * once, as cuts scoped to the batch ([[graft.operators
+    * .BatchScope]]); the audit write and the index append both read the
+    * verdict, and the append reuses the quantizers the corpus check
+    * loaded: 10 jobs per micro-batch in `IngestJobCountSpec`. */
   def semanticIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
                           vecCol: String, indexPath: String, dim: Int,
                           threshold: Double, dupsPath: String,
@@ -510,43 +528,54 @@ object StreamingOps {
     replayMarked(spark, s"${dupsPath}_ingest_log", batchId) {
       VectorIndex.delete(spark, indexPath, batch.select(col(idCol)), idCol)
       VectorIndex.compact(spark, indexPath)
+      scrubAudit(spark, dupsPath, batch, idCol)
     } {
-      val inBatch = Dedup.embeddingNearDups(batch, idCol, vecCol, dim,
-          nPlanes, threshold)
-        .localCheckpoint(false)
-      val localClean = batch.join(
-        inBatch.select(col("id_b").as(idCol)).distinct(), Seq(idCol), "left_anti")
-      // fresh load per batch: rows admitted at batch N-1 must be corpus
-      // for batch N (the sidecars are k-sized; the listing covers only the
-      // probed cells)
-      val idx = VectorIndex.load(spark, indexPath)
-      val corpusPairs = VectorIndex.semanticDups(spark, localClean, idCol,
-          vecCol, idx, nProbe, k, threshold)
-        .localCheckpoint(false)
-      inBatch
-        .select(col("id_b").as(idCol), col("id_a").as("dup_of"),
-          col("cosine").as("similarity"), lit("batch").as("scope"))
-        .unionByName(corpusPairs
-          .select(col(idCol), col("corpus_id").as("dup_of"),
-            col("cosine").as("similarity"), lit("corpus").as("scope")))
-        .write.mode("append").parquet(dupsPath)
-      val clean = localClean.join(
-        corpusPairs.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-      VectorIndex.append(clean, idCol, vecCol, indexPath)
+      BatchScope { scope =>
+        val rows = scope.keepInOne(batch.select(col(idCol), col(vecCol)))
+        val inBatch = scope.keepInOne(Dedup.embeddingNearDups(rows, idCol, vecCol, dim,
+          nPlanes, threshold))
+        val localClean = scope.keepInOne(rows.join(
+          inBatch.select(col("id_b").as(idCol)), Seq(idCol), "left_anti"))
+        // fresh load per batch: rows admitted at batch N-1 must be corpus
+        // for batch N (the sidecars are k-sized; the listing covers only the
+        // probed cells)
+        val idx = VectorIndex.load(spark, indexPath)
+        val corpusPairs = scope.keepInOne(VectorIndex.semanticDups(spark, localClean,
+          idCol, vecCol, idx, nProbe, k, threshold))
+        val v = verdict(scope,
+          inBatch.select(col("id_b").as(idCol), col("id_a").as("dup_of"),
+              col("cosine").as("similarity"), lit("batch").as("scope"))
+            .unionByName(corpusPairs
+              .select(col(idCol), col("corpus_id").as("dup_of"),
+                col("cosine").as("similarity"), lit("corpus").as("scope"))),
+          localClean.join(corpusPairs.select(col(idCol)), Seq(idCol), "left_anti"),
+          idCol, vecCol)
+        v.filter(col("scope").isNotNull).drop(vecCol)
+          .write.mode("append").parquet(dupsPath)
+        VectorIndex.appendLoaded(v.filter(col("scope").isNull).select(col(idCol), col(vecCol)),
+          idCol, vecCol, indexPath, idx)
+      }
     }
   }
 
   /** The replay-safe per-batch body of [[dedupIngestSink]] — the
     * [[replayMarked]] discipline, logged under `<dupsPath>_ingest_log`.
     * The scrub removes THIS batch's ids from the index
-    * ([[DedupIndex.removeIds]]). Without it every already-appended doc
+    * ([[DedupIndex.removeIds]]) and from the audit table
+    * ([[scrubAudit]]). Without the first every already-appended doc
     * would match its own corpus signature (est_jaccard = 1.0) and the
     * whole batch would be re-audited as corpus duplicates of themselves
-    * — audit consumers filtering "clean" docs would wrongly drop it all.
+    * — audit consumers filtering "clean" docs would wrongly drop it all;
+    * without the second a batch that crashed after its audit write
+    * would audit its pairs twice.
     *
-    * Audit rows in dupsPath can still double on replay (parquet append
-    * is not transactional with the marker) — those are value-identical
-    * pairs; the index itself never doubles. */
+    * Per-batch cost: the batch is tokenized and signed ONCE; that frame
+    * feeds the in-batch exact-Jaccard pass, the corpus check and the
+    * append. The in-batch pairs, the corpus pairs and the [[verdict]]
+    * are computed once, as cuts scoped to the batch
+    * ([[graft.operators.BatchScope]]); the audit write and both index
+    * table appends read the verdict: 13 jobs per micro-batch in
+    * `IngestJobCountSpec`. */
   def dedupIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
                        textCol: String, table: String, threshold: Double,
                        dupsPath: String, n: Int = 3, numHashes: Int = 16,
@@ -555,36 +584,68 @@ object StreamingOps {
     replayMarked(spark, s"${dupsPath}_ingest_log", batchId) {
       DedupIndex.removeIds(spark, table, batch.select(col(idCol)),
         idCol, numBuckets)
+      scrubAudit(spark, dupsPath, batch, idCol)
     } {
-      // the in-batch pass signs internally (its exact-Jaccard verify needs
-      // the shingles anyway); the index-side check and the append share
-      // ONE further signing pass
-      val inBatch = Dedup.minhashNearDups(batch, idCol, textCol,
-          threshold, n, numHashes, bands)
-        .select(col("id_a"), col("id_b"), col("jaccard"))
-        .localCheckpoint(false)
-      val bSigs = DedupIndex.sign(batch, idCol, textCol, n, numHashes)
-        .localCheckpoint(false)
-      val localCleanSigs = bSigs.join(
-        inBatch.select(col("id_b").as(idCol)).distinct(),
-        Seq(idCol), "left_anti")
-      // self-pair guard (defense in depth behind the scrub): a doc must
-      // never count as a corpus duplicate of itself
-      val corpusPairs = DedupIndex.nearDupsAgainstSigned(spark,
-          localCleanSigs, idCol, table, threshold, numHashes, bands)
-        .filter(col(idCol) =!= col("corpus_id"))
-        .localCheckpoint(false)
-      inBatch
-        .select(col("id_b").as(idCol), col("id_a").as("dup_of"),
-          col("jaccard").as("similarity"), lit("batch").as("scope"))
-        .unionByName(corpusPairs
-          .select(col(idCol), col("corpus_id").as("dup_of"),
-            col("est_jaccard").as("similarity"), lit("corpus").as("scope")))
-        .write.mode("append").parquet(dupsPath)
-      val cleanSigs = localCleanSigs.join(
-        corpusPairs.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-      DedupIndex.appendSigned(spark, cleanSigs, idCol, table,
-        numHashes, bands, numBuckets)
+      BatchScope { scope =>
+        val signed = scope.keepInOne(Dedup.signedTokens(batch, idCol, textCol, n, numHashes))
+        val inBatch = scope.keepInOne(Dedup.minhashNearDupsSigned(signed, idCol,
+          threshold, n, numHashes, bands, Dedup.DefaultMaxBucketSize, scope.keep))
+        val localClean = scope.keepInOne(signed.select(col(idCol), col("__sig").as("sig"))
+          .join(inBatch.select(col("id_b").as(idCol)), Seq(idCol), "left_anti"))
+        // self-pair guard (defense in depth behind the scrub): a doc must
+        // never count as a corpus duplicate of itself
+        val corpusPairs = scope.keepInOne(DedupIndex.nearDupsAgainstSigned(spark,
+            localClean, idCol, table, threshold, numHashes, bands)
+          .filter(col(idCol) =!= col("corpus_id")))
+        val v = verdict(scope,
+          inBatch.select(col("id_b").as(idCol), col("id_a").as("dup_of"),
+              col("jaccard").as("similarity"), lit("batch").as("scope"))
+            .unionByName(corpusPairs
+              .select(col(idCol), col("corpus_id").as("dup_of"),
+                col("est_jaccard").as("similarity"), lit("corpus").as("scope"))),
+          localClean.join(corpusPairs.select(col(idCol)), Seq(idCol), "left_anti"),
+          idCol, "sig")
+        v.filter(col("scope").isNotNull).drop("sig")
+          .write.mode("append").parquet(dupsPath)
+        DedupIndex.appendSigned(spark, v.filter(col("scope").isNull).select(col(idCol), col("sig")),
+          idCol, table, numHashes, bands, numBuckets)
+      }
+    }
+  }
+
+  /** A dedup body's batch verdict, cut for the batch: one row per
+    * audited pair (idCol, dup_of, similarity, scope — `payload` null)
+    * and one row per clean row (audit columns null, `payload` = what the
+    * index append stores). The audit write and the append both filter
+    * it, so the detection plans behind it run once per batch. */
+  private def verdict(scope: BatchScope, pairs: DataFrame, clean: DataFrame,
+                      idCol: String, payload: String): DataFrame = {
+    def nullOf(df: DataFrame, c: String) = lit(null).cast(df.schema(c).dataType).as(c)
+    scope.keepInOne(pairs.select(pairs.columns.map(col) :+ nullOf(clean, payload): _*)
+      .unionByName(clean.select(col(idCol), nullOf(pairs, "dup_of"),
+        nullOf(pairs, "similarity"), nullOf(pairs, "scope"), col(payload))))
+  }
+
+  /** The audit half of a replay scrub: drop THIS batch's rows from the
+    * audit table at `dupsPath`. Ingest ids are new by contract, so the
+    * rows whose `idCol` is in the batch are exactly the rows a crashed
+    * attempt of this batch appended. The kept rows are staged beside the
+    * table and swapped in by park-and-swap ([[FullTextIndex.swapDir]]);
+    * a crash mid-swap leaves `started-` without `done-`, so the
+    * redelivered batch scrubs again and [[FullTextIndex.reconcileSwap]]
+    * first restores or finishes the interrupted swap. O(audit table),
+    * but it runs only on the crash-replay path. */
+  private def scrubAudit(spark: SparkSession, dupsPath: String,
+                         batch: DataFrame, idCol: String): Unit = {
+    val live = new org.apache.hadoop.fs.Path(dupsPath)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val staged = s"${dupsPath}_scrub"
+    FullTextIndex.reconcileSwap(fs, dupsPath, staged)
+    if (fs.exists(live)) {
+      spark.read.parquet(dupsPath)
+        .join(batch.select(col(idCol)), Seq(idCol), "left_anti")
+        .write.parquet(staged)
+      FullTextIndex.swapDir(fs, dupsPath, staged)
     }
   }
 }

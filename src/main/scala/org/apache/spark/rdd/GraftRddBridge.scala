@@ -7,4 +7,9 @@ package org.apache.spark.rdd
   * [[org.apache.spark.sql.graftbridge.Bridge]]. */
 object GraftRddBridge {
   def isLocallyCheckpointed(rdd: RDD[_]): Boolean = rdd.isLocallyCheckpointed
+
+  /** Drop a scoped `localCheckpoint`'s blocks: `RDD.unpersist` would log
+    * the same lineage-truncation WARN for every released cut. */
+  def releaseLocalCheckpoint(rdd: RDD[_]): Unit =
+    rdd.sparkContext.unpersistRDD(rdd.id, blocking = false)
 }

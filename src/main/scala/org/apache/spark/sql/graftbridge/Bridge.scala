@@ -65,6 +65,46 @@ object Bridge {
     }
   }
 
+  /** The RDD behind a `localCheckpoint` frame (its persisted blocks), so
+    * a caller that scopes the cut can unpersist it ([[graft.operators
+    * .BatchScope]]); None for any other plan. */
+  def checkpointedRdd(df: org.apache.spark.sql.DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical match {
+      case l: org.apache.spark.sql.execution.LogicalRDD => Some(l.rdd)
+      case _ => None
+    }
+
+  /** A `localCheckpoint` frame whose RDD has exactly one partition,
+    * re-declared as `SinglePartition` (the checkpoint's scan reports no
+    * partitioning of its own, so every aggregation over it would plan an
+    * exchange — a shuffle job under adaptive execution). With
+    * `inPlaceJoins` it also gets a one-byte size estimate and a
+    * sort-merge join hint: joins among such frames then neither
+    * broadcast a side (a broadcast job each) nor re-shuffle the single
+    * partitions for parallelism (a shuffle job per side, skipped only
+    * while every input's estimate stays under
+    * `spark.sql.maxSinglePartitionBytes` — estimates multiply along a
+    * join chain, so only a minimal one holds). Used by
+    * [[graft.operators.BatchScope]]; any other frame is returned
+    * unchanged. */
+  def asSinglePartition(df: org.apache.spark.sql.DataFrame,
+                        inPlaceJoins: Boolean): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.execution.LogicalRDD
+    df.queryExecution.logical match {
+      case l: LogicalRDD if l.rdd.getNumPartitions == 1 =>
+        val session = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        val stats =
+          if (inPlaceJoins) org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes = 1)
+          else l.computeStats()
+        val single = org.apache.spark.sql.classic.Dataset.ofRows(session,
+          new LogicalRDD(l.output, l.rdd,
+            org.apache.spark.sql.catalyst.plans.physical.SinglePartition,
+            l.outputOrdering, l.isStreaming, l.stream)(session, Some(stats)))
+        if (inPlaceJoins) single.hint("merge") else single
+      case _ => df
+    }
+  }
+
   /** Register a SQL function on a LIVE session (the extensions path in
     * [[graft.sql.GraftExtensions]] only applies at session build time;
     * `SparkSession.sessionState` is private[sql], hence this bridge). */

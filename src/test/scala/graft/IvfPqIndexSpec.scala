@@ -736,4 +736,35 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(hits == before)
     assert(before.nonEmpty)
   }
+
+  test("an index written before read schemas were pinned serves exactly as it did") {
+    // the layout the unpinned reads served: double-element vectors (the
+    // vecs table stores whatever the corpus carried), appends, pending
+    // tombstones; the reference handle reads every table the way load()
+    // did before — schema inference, `cell` inferred as an int partition
+    val path = tmp("graft_ivfpq_unpinned")
+    val ed = e.select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
+    VectorIndex.writeIvfPq(ed.filter(col("vec_id") < 400), "vec_id", "embedding",
+      16, 8, 16, path, storeVectors = true, residual = true)
+    VectorIndex.append(ed.filter(col("vec_id") >= 400), "vec_id", "embedding", path)
+    VectorIndex.delete(spark, path, ed.filter(col("vec_id") % 11 === 0), "vec_id",
+      autoCompact = false)
+    val (cents, books) = VectorIndex.loadQuantizers(spark, path)
+    val inferred = VectorIndex.Loaded(cents, books, spark.read.parquet(s"$path/codes"),
+      Some(spark.read.parquet(s"$path/vecs")), Some(spark.read.parquet(s"$path/tombstones")),
+      residual = true)
+    assert(inferred.codes.schema("cell").dataType == org.apache.spark.sql.types.IntegerType)
+    val pinned = VectorIndex.load(spark, path)
+    assert(pinned.vecs.get.schema("vec").dataType == inferred.vecs.get.schema("vec").dataType)
+    val qd = q.select(col("qid"), col("qv").cast("array<double>").as("qv"))
+    val allowed = e.filter(col("vec_id") % 3 === 0)
+    def results(idx: VectorIndex.Loaded) = Seq(
+      asSet(VectorIndex.searchLoaded(spark, qd, "qid", "qv", idx, 4, 5)),
+      asSet(VectorIndex.searchRescored(spark, qd, "qid", "qv", idx, 4, 5, overfetch = 4)),
+      asSet(VectorIndex.searchFiltered(spark, qd, "qid", "qv", idx, 4, 5, allowed, "vec_id")))
+    val want = results(inferred)
+    assert(results(pinned) == want)
+    assert(want.forall(_.nonEmpty))
+    assert(want.head.forall(_._2 % 11 != 0), "tombstoned rows must stay masked")
+  }
 }

@@ -421,6 +421,82 @@ class StreamingSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(spark.table(s"${table}_sigs").filter($"doc_id" >= 10L).count() == 2L)
   }
 
+  test("dedupIngestBatch replay after a crash past its audit write: each pair audited once") {
+    val table = "graft_stream_dedup_audit_replay"
+    val dups = java.nio.file.Files.createTempDirectory("graft_audit_dups").toString + "/pairs"
+    val corpus = Seq(
+      (1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six")).toDF("doc_id", "text")
+    graft.operators.DedupIndex.writeMinhash(corpus, "doc_id", "text",
+      table = table, numBuckets = 4)
+    def run(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      StreamingOps.dedupIngestBatch(batch, id, "doc_id", "text", table,
+        threshold = 0.5, dupsPath = dups, numBuckets = 4)
+    // an earlier, completed batch: its audit row must survive the scrub
+    run(Seq((5L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text"), 0L)
+    val batch = Seq(
+      (10L, "one two three four five six"),          // corpus dup of 2
+      (11L, "red orange yellow green blue purple"),  // new
+      (12L, "red orange yellow green blue purple"))  // in-batch dup of 11
+      .toDF("doc_id", "text")
+    run(batch, 1L)
+    // crash state: the audit landed, the index append and done-1 did not
+    graft.operators.DedupIndex.removeIds(spark, table, batch.select($"doc_id"),
+      "doc_id", numBuckets = 4)
+    val log = new org.apache.hadoop.fs.Path(s"${dups}_ingest_log")
+    val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(log, "done-1"), false)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(log, "started-1")))
+    run(batch, 1L)
+    val audited = spark.read.parquet(dups).select($"doc_id", $"dup_of", $"scope")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    assert(audited.sorted == Seq((5L, 1L, "corpus"), (10L, 2L, "corpus"), (12L, 11L, "batch")),
+      s"each pair must be audited exactly once: $audited")
+    val indexed = spark.table(s"${table}_sigs").filter($"doc_id" >= 10L)
+      .select($"doc_id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(indexed == Seq(11L))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(log, "done-1")))
+  }
+
+  test("semanticIngestBatch replay after a crash past its audit write: each pair audited once") {
+    val path = java.nio.file.Files.createTempDirectory("graft_semaudit_idx").toString
+    val dups = java.nio.file.Files.createTempDirectory("graft_semaudit_dups").toString + "/pairs"
+    val corpus = Seq(
+      (0L, Seq(1f, 0f, 0f, 0f)),
+      (1L, Seq(0f, 1f, 0f, 0f)),
+      (2L, Seq(0.8f, 0.6f, 0f, 0f)),
+      (3L, Seq(0.6f, 0.8f, 0f, 0f))).toDF("vec_id", "embedding")
+    graft.operators.VectorIndex.writeIvfPq(corpus, "vec_id", "embedding",
+      nCells = 2, m = 2, nCentsPq = 2, path = path, storeVectors = true)
+    def run(batch: org.apache.spark.sql.DataFrame, id: Long): Unit =
+      StreamingOps.semanticIngestBatch(batch, id, "vec_id", "embedding", path,
+        dim = 4, threshold = 0.95, dupsPath = dups, nPlanes = 0, nProbe = 2, k = 8)
+    // an earlier, completed batch: its audit row must survive the scrub
+    run(Seq((5L, Seq(1f, 0.01f, 0f, 0f))).toDF("vec_id", "embedding"), 0L)
+    val batch = Seq(
+      (20L, Seq(0.01f, 1f, 0f, 0f)),  // corpus near-copy of 1
+      (21L, Seq(0f, 0f, 1f, 0f)),     // new
+      (22L, Seq(0f, 0.01f, 1f, 0f)))  // in-batch near-copy of 21
+      .toDF("vec_id", "embedding")
+    run(batch, 1L)
+    // crash state: the audit landed, the index append and done-1 did not
+    graft.operators.VectorIndex.delete(spark, path, batch.select($"vec_id"), "vec_id")
+    graft.operators.VectorIndex.compact(spark, path)
+    val log = new org.apache.hadoop.fs.Path(s"${dups}_ingest_log")
+    val fs = log.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new org.apache.hadoop.fs.Path(log, "done-1"), false)
+    assert(fs.exists(new org.apache.hadoop.fs.Path(log, "started-1")))
+    run(batch, 1L)
+    val audited = spark.read.parquet(dups).select($"vec_id", $"dup_of", $"scope")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getString(2))).toSeq
+    assert(audited.sorted == Seq((5L, 0L, "corpus"), (20L, 1L, "corpus"), (22L, 21L, "batch")),
+      s"each pair must be audited exactly once: $audited")
+    val indexed = spark.read.parquet(s"$path/codes").filter($"id" >= 20L)
+      .select($"id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(indexed == Seq(21L))
+    assert(fs.exists(new org.apache.hadoop.fs.Path(log, "done-1")))
+  }
+
   test("semanticIngestSink: batch + corpus semantic dups audited, clean rows self-accumulate") {
     val path = java.nio.file.Files.createTempDirectory("graft_sem_idx").toString
     val dups = java.nio.file.Files.createTempDirectory("graft_sem_dups").toString + "/pairs"
