@@ -5,11 +5,13 @@ import org.apache.spark.sql.graftbridge.Bridge
 
 /** Batch-scoped lineage cuts for the per-batch index bodies (the ingest
   * sinks' exactly-once bodies, upserts, removals and the appends they
-  * run). A body cuts each frame it reads more than once through [[keep]]
-  * or [[keepInOne]]; the scope drops every cut's blocks when the body
-  * returns or throws, so nothing cached outlives its micro-batch (an
-  * unscoped `localCheckpoint` stays cached until the driver
-  * garbage-collects its RDD).
+  * run). A body cuts each frame it reads more than once through
+  * [[keep]], [[keepInOne]] or [[gather]]; the scope drops every cut's
+  * blocks when the body returns or throws, so nothing cached outlives
+  * its micro-batch (an unscoped `localCheckpoint` stays cached until
+  * the driver garbage-collects its RDD). A lost executor loses the cut
+  * blocks it held (a local checkpoint keeps no lineage to recompute
+  * them), which fails the body; a redelivered micro-batch re-runs it.
   *
   * The cut is a lazy `localCheckpoint`: its exchanges run when it is
   * declared, its last stage inside the first job that reads it, and
@@ -34,14 +36,23 @@ private[graft] final class BatchScope private {
     Bridge.asSinglePartition(cut(df), inPlaceJoins = false)
 
   /** [[keep]] in ONE partition, declared for in-place joins — for
-    * frames that are batch-sized by contract (a micro-batch and what a
-    * body derives from it, a removal's ids and victims). Aggregations
-    * and joins among these frames need no exchange and no broadcast
+    * frames derived from a micro-batch alone (the batch, its signatures,
+    * its in-batch pairs, a verdict over cuts). Aggregations and joins
+    * among these frames need no exchange and no broadcast
     * ([[org.apache.spark.sql.graftbridge.Bridge.asSinglePartition]]):
     * they run inside the job that reads them instead of adding a
-    * shuffle or broadcast job each. */
+    * shuffle or broadcast job each. The coalesce is narrow, so every
+    * scan in the frame's last stage runs in the one task: a frame whose
+    * plan reads an index table goes through [[gather]] instead. */
   def keepInOne(df: DataFrame): DataFrame =
     Bridge.asSinglePartition(cut(df.coalesce(1)), inPlaceJoins = true)
+
+  /** [[keepInOne]] for a batch-sized frame whose plan scans an index
+    * table (a corpus check's pairs, a removal's victims): the scans run
+    * in parallel tasks and one shuffle gathers the batch-sized result
+    * into the single partition — one job more than [[keepInOne]], which
+    * would pull scans that grow with the index into its one task. */
+  def gather(df: DataFrame): DataFrame = keepInOne(df.repartition(1))
 
   private def release(): Unit =
     held.foreach(org.apache.spark.rdd.GraftRddBridge.releaseLocalCheckpoint)

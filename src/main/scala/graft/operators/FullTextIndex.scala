@@ -313,8 +313,9 @@ object FullTextIndex {
     * most once per generation (ids are permanent identities).
     *
     * Per-batch cost: the id collect, the tombstone mask's broadcast
-    * (when tombstones exist) and the three staged writes — 5 jobs in
-    * `IngestJobCountSpec`. */
+    * (when tombstones exist), the shuffle that gathers the victims of a
+    * parallel forward scan into one partition, and the three staged
+    * writes — 6 jobs in `IngestJobCountSpec`. */
   def removeDocs(spark: SparkSession, ids: DataFrame, idCol: String,
                  path: String): Unit = {
     conf(spark, path) // format gate — refuse a stale layout up front
@@ -330,24 +331,24 @@ object FullTextIndex {
     val rm = new Path(s"$path/_removal")
     fs.delete(rm, true)
     BatchScope { scope =>
-      // the removal's id set and its victims live in ONE partition: the
-      // three staged tables are single files, so each delta aggregates
-      // in place instead of shuffling and coalescing per write. Both
-      // frames are batch-scoped; every write completes before READY
-      // commits the removal
-      val drop = scope.keepInOne(ids.select(col(idCol).cast("long").as("doc_id"))
-        .coalesce(1).distinct())
+      val drop = ids.select(col(idCol).cast("long").as("doc_id"))
       // batch-bounded id set → In(doc_id, ...) reaches the forward scan
       // (row-group skipping on the sorted doc column); wide batches fall
       // back to the broadcast semi join. limit+1 decides the path, so a
       // huge removal batch never round-trips its full id set through the
-      // driver just to learn it won't fit the IN pushdown
-      val idArr = drop.limit(PushdownTermLimit + 1).collect()
-        .map(_.getLong(0)).sorted
+      // driver just to learn it won't fit the IN pushdown; the ids are
+      // deduplicated on the driver (a duplicate only ever pushes a
+      // batch onto the join path), so the id set needs no exchange
+      val head = drop.limit(PushdownTermLimit + 1).collect().map(_.getLong(0))
       def pruneDocs(t: DataFrame): DataFrame =
-        if (idArr.length <= PushdownTermLimit) t.filter(col("doc_id").isin(idArr: _*))
-        else t.join(broadcast(drop), Seq("doc_id"), "left_semi")
-      val victims = scope.keepInOne(
+        if (head.length <= PushdownTermLimit) t.filter(col("doc_id").isin(head.distinct.sorted: _*))
+        else t.join(broadcast(drop.distinct()), Seq("doc_id"), "left_semi")
+      // the victims live in ONE partition: the three staged tables are
+      // single files, so each delta aggregates in place instead of
+      // shuffling and coalescing per write, while the forward scan
+      // behind them stays parallel (gather). The cut is batch-scoped;
+      // every write completes before READY commits the removal
+      val victims = scope.gather(
         liveRows(spark, path, pruneDocs(read(spark, path, "docs"))))
       // stage EVERYTHING the apply step will do, deltas included, BEFORE
       // touching any live table — after READY the removal is decided and

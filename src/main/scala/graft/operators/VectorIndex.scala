@@ -240,10 +240,12 @@ object VectorIndex {
     * just not free). */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
              idCol: String, autoCompact: Boolean = true): Unit = {
-    // one file per delete, deduplicated inside its single partition, so
-    // the O(batch) id set needs no shuffle job
-    ids.select(col(idCol).cast("long").as("id")).coalesce(1).distinct()
-      .write.mode(SaveMode.Append).parquet(s"$path/tombstones")
+    // one file per delete; the dedup needs no exchange when the caller
+    // passes its ids in one partition (the streaming sinks coalesce
+    // their micro-batch), while an id set scanned from a table keeps
+    // its parallel scan
+    ids.select(col(idCol).cast("long").as("id")).distinct()
+      .coalesce(1).write.mode(SaveMode.Append).parquet(s"$path/tombstones")
     // bounded-mask policy (FullTextIndex.maybeCompact's twin): the
     // query-time tombstone anti-join must stay bounded under sustained
     // deletes without an operator remembering the maintenance window
@@ -313,33 +315,43 @@ object VectorIndex {
     if (!hasTombs && !mergeAll) return
     import spark.implicits._
     BatchScope { scope =>
-      // the distinct tombstoned ids, computed once in one partition (the
-      // set is O(deletes since the last compaction)) and read by the
-      // affected-cells collect and by every table rewrite
+      // the distinct tombstoned ids (a parallel scan of the O(deletes
+      // since the last compaction) table), cut once. A set of at most
+      // PushdownTermLimit ids filters as an IN list, so neither the
+      // affected-cells collect nor a cell rewrite broadcasts it; a wider
+      // set joins the cut
       val tombs =
-        if (hasTombs) scope.keep(tombstones(spark, path).select(col("id"))
-          .coalesce(1).distinct())
+        if (hasTombs) scope.keep(tombstones(spark, path).select(col("id")).distinct())
         else spark.emptyDataset[Long].toDF("id")
+      val inList = tombs.limit(FullTextIndex.PushdownTermLimit + 1).collect().map(_.getLong(0))
+      val few = inList.length <= FullTextIndex.PushdownTermLimit
+      def live(t: DataFrame): DataFrame =
+        if (!few) t.join(tombs, Seq("id"), "left_anti")
+        else if (inList.isEmpty) t
+        else t.filter(!col("id").isin(inList: _*))
       val cs = codes(spark, path)
-      // bounded by nCells (the partition-column cardinality), never by data
+      // bounded by nCells (the partition-column cardinality), never by
+      // data; the IN list matches only the listed ids' rows, so their
+      // cells collect without the distinct's exchange
       val affected =
-        (if (mergeAll) cs.select(col("cell").cast("long"))
-         else cs.join(tombs, Seq("id")).select(col("cell").cast("long")))
-          .distinct().collect().map(_.getLong(0)).sorted
+        (if (mergeAll) cs.select(col("cell")).distinct()
+         else if (few) cs.filter(col("id").isin(inList: _*)).select(col("cell"))
+         else cs.join(tombs, Seq("id"), "left_semi").select(col("cell")).distinct())
+          .select(col("cell").cast("long")).collect().map(_.getLong(0)).distinct.sorted
       if (affected.nonEmpty) {
-        rewriteCells(s"$path/codes", cs, affected, tombs)
+        rewriteCells(s"$path/codes", cs, affected, live)
         if (fs.exists(new org.apache.hadoop.fs.Path(s"$path/vecs")))
-          rewriteCells(s"$path/vecs", vecs(spark, path), affected, tombs)
+          rewriteCells(s"$path/vecs", vecs(spark, path), affected, live)
       }
     }
     if (hasTombs) fs.delete(tombDir, true)
   }
 
   /** Rewrite the given cell partitions of one table minus the tombstoned
-    * ids: stage into `<table>_compact`, then swap directories (write
-    * fully materializes before any source dir is touched — Spark cannot
-    * overwrite a path it is reading). A cell whose rows are all deleted
-    * simply loses its directory.
+    * ids (`live` filters them out): stage into `<table>_compact`, then
+    * swap directories (write fully materializes before any source dir
+    * is touched — Spark cannot overwrite a path it is reading). A cell
+    * whose rows are all deleted simply loses its directory.
     *
     * The swap is CRASH-RECOVERABLE: each live cell dir is renamed ASIDE
     * (into `<table>_old/cell=N` — outside the table dir, so a concurrent
@@ -353,13 +365,11 @@ object VectorIndex {
     * simply redoes the rewrite. A delete-then-rename swap would instead
     * lose the cell outright if the process died between the two. */
   private def rewriteCells(tablePath: String, table: DataFrame,
-                           cells: Array[Long], tombs: DataFrame): Unit = {
+                           cells: Array[Long], live: DataFrame => DataFrame): Unit = {
     val spark = table.sparkSession
     val tmpPath = s"${tablePath}_compact"
     val oldPath = s"${tablePath}_old"
-    table
-      .filter(col("cell").isin(cells: _*))
-      .join(tombs, Seq("id"), "left_anti")
+    live(table.filter(col("cell").isin(cells: _*)))
       .withColumn("cell", col("cell").cast("long"))
       .repartition(col("cell"))
       .write.mode(SaveMode.Overwrite).partitionBy("cell").parquet(tmpPath)
@@ -902,20 +912,27 @@ object VectorIndex {
     // Input in one partition (a sink body's micro-batch) is one task
     // already: the writer's sort by cell gives one file per cell, so
     // the shuffle would only add a job
-    val assigned =
-      if (encoded.queryExecution.executedPlan.outputPartitioning.numPartitions == 1) encoded
-      else encoded.repartition(col("cell"))
-    // two tables means two actions: without a cut the second write
+    val oneTask = encoded.queryExecution.executedPlan.outputPartitioning.numPartitions == 1
+    val assigned = if (oneTask) encoded else encoded.repartition(col("cell"))
+    // two tables means two actions: without a persist the second write
     // would re-read the corpus, re-run NearestCell+PQ per row, and
     // re-shuffle — "one corpus pass" must hold for the storeVectors
-    // build too (spill-to-disk beats a second full encode at any scale)
-    BatchScope { scope =>
-      val rows = if (storeVectors) scope.keep(assigned) else assigned
+    // build too (spill-to-disk beats a second full encode at any scale).
+    // A one-task micro-batch takes a batch-scoped cut instead (a persist
+    // costs one more job per reading query); a corpus build keeps the
+    // persist, whose blocks Spark recomputes when an executor is lost
+    def write(rows: DataFrame): Unit = {
       rows.select(col("id"), col("cell"), col("codes"))
         .write.mode(mode).partitionBy("cell").parquet(s"$path/codes")
       if (storeVectors)
         rows.select(col("id"), col("cell"), col("vec"))
           .write.mode(mode).partitionBy("cell").parquet(s"$path/vecs")
+    }
+    if (!storeVectors) write(assigned)
+    else if (oneTask) BatchScope(scope => write(scope.keep(assigned)))
+    else {
+      assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try write(assigned) finally assigned.unpersist(false)
     }
   }
 

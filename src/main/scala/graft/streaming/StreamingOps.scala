@@ -344,16 +344,17 @@ object StreamingOps {
     * tombstones the batch's ids and compacts, physically removing
     * whatever partial copy landed. The markers live inside the index
     * layout (`ingest_log/`), so they travel with it. The micro-batch is
-    * encoded in one partition, so the append writes its cells without a
-    * clustering shuffle (one job per index table). */
+    * coalesced to one partition, so the append writes its cells without
+    * a clustering shuffle (one job per index table). */
   def idempotentAppend(batch: DataFrame, idCol: String, vecCol: String,
                        indexPath: String, batchId: Long): Unit = {
     val spark = batch.sparkSession
+    val one = batch.coalesce(1)
     replayMarked(spark, s"$indexPath/ingest_log", batchId) {
-      VectorIndex.delete(spark, indexPath, batch.select(col(idCol)), idCol)
+      VectorIndex.delete(spark, indexPath, one.select(col(idCol)), idCol)
       VectorIndex.compact(spark, indexPath)
     } {
-      VectorIndex.append(batch.coalesce(1), idCol, vecCol, indexPath)
+      VectorIndex.append(one, idCol, vecCol, indexPath)
     }
   }
 
@@ -367,12 +368,14 @@ object StreamingOps {
     * redelivered batch's delete+compact before the single live append.
     * Per-batch cost: O(batch) tombstones + affected-cell rewrites +
     * one narrow encode pass; the pending tombstones are read once per
-    * compaction and every table read skips schema inference (13 jobs
-    * per micro-batch in `IngestJobCountSpec`). */
+    * compaction and filter the rewrites as an IN list, and every table
+    * read skips schema inference (13 jobs for `VectorIndex.upsert` in
+    * `IngestJobCountSpec`). */
   def ivfPqUpsertSink(stream: DataFrame, idCol: String, vecCol: String,
                       indexPath: String): DataStreamWriter[Row] =
     nonEmptyBatches(stream) { (batch, _) =>
-      VectorIndex.upsert(batch, idCol, vecCol, indexPath)
+      // one partition: the tombstone dedup and the encode need no shuffle
+      VectorIndex.upsert(batch.coalesce(1), idCol, vecCol, indexPath)
     }
 
   /** The lexical twin: micro-batches of re-crawled (id, text) docs
@@ -387,7 +390,9 @@ object StreamingOps {
   def bm25UpsertSink(stream: DataFrame, idCol: String, textCol: String,
                      indexPath: String): DataStreamWriter[Row] =
     nonEmptyBatches(stream) { (batch, _) =>
-      FullTextIndex.upsertBatch(batch.sparkSession, batch, idCol, textCol, indexPath)
+      // one partition: the removal's id dedup needs no shuffle
+      FullTextIndex.upsertBatch(batch.sparkSession, batch.coalesce(1), idCol, textCol,
+        indexPath)
     }
 
   /** Continuous statistics maintenance: each micro-batch folds its own
@@ -449,7 +454,8 @@ object StreamingOps {
                       logPath: String): Unit = {
     val spark = batch.sparkSession
     replayMarked(spark, logPath, batchId) {
-      FullTextIndex.removeDocs(spark, batch.select(col(idCol)), idCol, indexPath)
+      FullTextIndex.removeDocs(spark, batch.select(col(idCol)).coalesce(1), idCol,
+        indexPath)
     } {
       FullTextIndex.appendBatch(spark, batch, idCol, textCol, indexPath)
     }
@@ -516,9 +522,10 @@ object StreamingOps {
     * Per-batch cost: the batch rows, the in-batch pairs, the locally
     * clean rows, the corpus pairs and the [[verdict]] are each computed
     * once, as cuts scoped to the batch ([[graft.operators
-    * .BatchScope]]); the audit write and the index append both read the
-    * verdict, and the append reuses the quantizers the corpus check
-    * loaded: 10 jobs per micro-batch in `IngestJobCountSpec`. */
+    * .BatchScope]]; the corpus pairs are gathered after a parallel scan
+    * of the probed cells); the audit write and the index append both
+    * read the verdict, and the append reuses the quantizers the corpus
+    * check loaded: 11 jobs per micro-batch in `IngestJobCountSpec`. */
   def semanticIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
                           vecCol: String, indexPath: String, dim: Int,
                           threshold: Double, dupsPath: String,
@@ -526,7 +533,7 @@ object StreamingOps {
                           k: Int = 5): Unit = {
     val spark = batch.sparkSession
     replayMarked(spark, s"${dupsPath}_ingest_log", batchId) {
-      VectorIndex.delete(spark, indexPath, batch.select(col(idCol)), idCol)
+      VectorIndex.delete(spark, indexPath, batch.select(col(idCol)).coalesce(1), idCol)
       VectorIndex.compact(spark, indexPath)
       scrubAudit(spark, dupsPath, batch, idCol)
     } {
@@ -540,7 +547,7 @@ object StreamingOps {
         // for batch N (the sidecars are k-sized; the listing covers only the
         // probed cells)
         val idx = VectorIndex.load(spark, indexPath)
-        val corpusPairs = scope.keepInOne(VectorIndex.semanticDups(spark, localClean,
+        val corpusPairs = scope.gather(VectorIndex.semanticDups(spark, localClean,
           idCol, vecCol, idx, nProbe, k, threshold))
         val v = verdict(scope,
           inBatch.select(col("id_b").as(idCol), col("id_a").as("dup_of"),
@@ -573,9 +580,10 @@ object StreamingOps {
     * feeds the in-batch exact-Jaccard pass, the corpus check and the
     * append. The in-batch pairs, the corpus pairs and the [[verdict]]
     * are computed once, as cuts scoped to the batch
-    * ([[graft.operators.BatchScope]]); the audit write and both index
-    * table appends read the verdict: 13 jobs per micro-batch in
-    * `IngestJobCountSpec`. */
+    * ([[graft.operators.BatchScope]]; the corpus pairs are gathered
+    * after a parallel scan of the index's bands and signatures); the
+    * audit write and both index table appends read the verdict: 14 jobs
+    * per micro-batch in `IngestJobCountSpec`. */
   def dedupIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
                        textCol: String, table: String, threshold: Double,
                        dupsPath: String, n: Int = 3, numHashes: Int = 16,
@@ -594,7 +602,7 @@ object StreamingOps {
           .join(inBatch.select(col("id_b").as(idCol)), Seq(idCol), "left_anti"))
         // self-pair guard (defense in depth behind the scrub): a doc must
         // never count as a corpus duplicate of itself
-        val corpusPairs = scope.keepInOne(DedupIndex.nearDupsAgainstSigned(spark,
+        val corpusPairs = scope.gather(DedupIndex.nearDupsAgainstSigned(spark,
             localClean, idCol, table, threshold, numHashes, bands)
           .filter(col(idCol) =!= col("corpus_id")))
         val v = verdict(scope,

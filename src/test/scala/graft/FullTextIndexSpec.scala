@@ -99,6 +99,24 @@ class FullTextIndexSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(removed.forall(_._2 % 7 != 0), "removed docs must never rank")
   }
 
+  test("removeDocs with repeated ids, and past the IN-list bound, == fresh build on survivors") {
+    import spark.implicits._
+    val gone = d.filter(col("doc_id") % 7 === 0).select(col("doc_id"))
+    val pFresh = tmp("graft_ftidx_w0")
+    FullTextIndex.write(d.filter(col("doc_id") % 7 =!= 0), "doc_id", "text", pFresh)
+    val fresh = asSet(FullTextIndex.searchTopK(spark, queries, "qid", "qtext", pFresh, k = 5))
+    assert(fresh.nonEmpty)
+    // every id twice: the IN list dedups them on the driver; ids absent
+    // from the index widen the set past PushdownTermLimit: the semi join
+    val absent = (1000000L until 1000000L + FullTextIndex.PushdownTermLimit).toDF("doc_id")
+    Seq(gone.union(gone), gone.union(absent)).foreach { ids =>
+      val p = tmp("graft_ftidx_w")
+      FullTextIndex.write(d, "doc_id", "text", p)
+      FullTextIndex.removeDocs(spark, ids, "doc_id", p)
+      assert(asSet(FullTextIndex.searchTopK(spark, queries, "qid", "qtext", p, k = 5)) == fresh)
+    }
+  }
+
   test("removal crash states reconcile: READY rolls forward, pre-READY discards") {
     val fs = new org.apache.hadoop.fs.Path("/")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.operators.{DedupIndex, FullTextIndex, VectorIndex}
+import graft.operators.{BatchScope, DedupIndex, FullTextIndex, VectorIndex}
 import graft.streaming.StreamingOps
 
 /** Spark jobs per call of every index-mutation body one streamed ingest
@@ -15,7 +15,9 @@ import graft.streaming.StreamingOps
   * to every micro-batch.
   *
   * Also pins batch-scoped persistence: no body leaves a cached block
-  * behind, whether it returns or throws. */
+  * behind, whether it returns or throws; and that a batch-sized frame
+  * read from an index table is gathered into its one partition after a
+  * parallel scan, never scanned in one task. */
 class IngestJobCountSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   private def tmp(prefix: String): String =
@@ -76,14 +78,14 @@ class IngestJobCountSpec extends AnyFunSuite with SparkSessionTestWrapper {
 
   /** Jobs per body, measured with `local[4]` and 4 shuffle partitions. */
   private val Bounds = Map(
-    "dedupIngestBatch" -> 13,
-    "semanticIngestBatch" -> 10,
+    "dedupIngestBatch" -> 14,
+    "semanticIngestBatch" -> 11,
     "bm25IngestBatch" -> 6,
     "idempotentAppend" -> 2,
     "VectorIndex.upsert" -> 13,
-    "FullTextIndex.upsertBatch" -> 10,
-    "VectorIndex.delete" -> 1,
-    "FullTextIndex.removeDocs" -> 5)
+    "FullTextIndex.upsertBatch" -> 11,
+    "VectorIndex.delete" -> 2,
+    "FullTextIndex.removeDocs" -> 6)
 
   test("each ingest-path body stays within its measured Spark job count") {
     val f = new Fixture("count")
@@ -95,6 +97,38 @@ class IngestJobCountSpec extends AnyFunSuite with SparkSessionTestWrapper {
     counts.foreach { case (name, jobs) =>
       assert(jobs <= Bounds(name), s"$name ran $jobs jobs (bound ${Bounds(name)})")
     }
+  }
+
+  test("gather scans an index-sized table in parallel; keepInOne scans it in one task") {
+    val table = tmp("graft_jobs_gather")
+    spark.range(0, 4000, 1, 4).toDF("id").write.mode("overwrite").parquet(table)
+    val scan = spark.read.parquet(table).filter(col("id") % 100 === 0)
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stageTasks.add(e.stageInfo.numTasks)
+    }
+    /** (widest stage, partitions of the cut, rows) of one scoped cut. */
+    def shape(cut: BatchScope => DataFrame => DataFrame): (Int, Int, Long) = {
+      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      stageTasks.clear()
+      val (parts, n) = BatchScope { scope =>
+        val c = cut(scope)(scan)
+        (c.rdd.getNumPartitions, c.count())
+      }
+      org.apache.spark.GraftListenerBridge.waitUntilListenerBusEmpty(spark.sparkContext)
+      import scala.jdk.CollectionConverters._
+      (stageTasks.asScala.max, parts, n)
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val (gatherWidth, gatherParts, gatherRows) = shape(_.gather)
+      val (oneWidth, oneParts, oneRows) = shape(_.keepInOne)
+      assert(gatherRows == 40 && oneRows == 40)
+      assert(gatherParts == 1 && oneParts == 1)
+      assert(gatherWidth > 1, "gather ran the table scan in one task")
+      assert(oneWidth == 1)
+    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   test("no body leaves a persisted RDD behind, returning or throwing") {

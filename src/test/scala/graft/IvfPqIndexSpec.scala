@@ -224,6 +224,28 @@ class IvfPqIndexSpec extends AnyFunSuite with SparkSessionTestWrapper {
     assert(after.nonEmpty)
   }
 
+  test("compact past the IN-list bound removes exactly what the IN-list compaction does") {
+    import spark.implicits._
+    val deleted = Seq(100L, 200L, 300L)
+    // ids absent from the index widen the tombstone set past
+    // PushdownTermLimit, so this compaction joins the tombstones
+    val absent = 1000000L until 1000000L + FullTextIndex.PushdownTermLimit
+    def survivors(ids: Seq[Long]): (Set[Long], Set[Long]) = {
+      val path = tmp("graft_ivfpq_cmp_wide")
+      VectorIndex.writeIvfPq(e, "vec_id", "embedding", 16, 8, 16, path, storeVectors = true)
+      VectorIndex.delete(spark, path, ids.toDF("vec_id"), "vec_id", autoCompact = false)
+      VectorIndex.compact(spark, path)
+      assert(!new java.io.File(s"$path/tombstones").exists(), "tombstones must clear")
+      def live(t: String) = spark.read.parquet(s"$path/$t").select(col("id"))
+        .collect().map(_.getLong(0)).toSet
+      (live("codes"), live("vecs"))
+    }
+    val narrow = survivors(deleted)
+    assert(survivors(deleted ++ absent) == narrow)
+    val all = e.select(col("vec_id")).collect().map(_.getLong(0)).toSet
+    assert(narrow == ((all -- deleted, all -- deleted)))
+  }
+
   test("compact(mergeAll): per-append file growth folds to one file per cell") {
     val path = tmp("graft_ivfpq_merge")
     VectorIndex.writeIvfPq(e.filter(col("vec_id") < 200), "vec_id", "embedding",
