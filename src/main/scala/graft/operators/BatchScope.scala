@@ -21,9 +21,13 @@ import org.apache.spark.sql.graftbridge.Bridge
   * measured 44 jobs against 18 for one streamed MinHash ingest batch. */
 private[graft] final class BatchScope private {
   private val held = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.rdd.RDD[_]]
+  private val inPlace = scala.collection.mutable.Set.empty[org.apache.spark.rdd.RDD[_]]
 
+  /** Every cut's plan first gets its in-place joins hinted
+    * ([[Bridge.hintInPlaceJoins]]): a join among batch frames reads them
+    * in place instead of broadcasting one. */
   private def cut(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(false)
+    val c = Bridge.hintInPlaceJoins(df, inPlace.contains).localCheckpoint(false)
     held ++= Bridge.checkpointedRdd(c)
     c
   }
@@ -41,11 +45,16 @@ private[graft] final class BatchScope private {
     * among these frames need no exchange and no broadcast
     * ([[org.apache.spark.sql.graftbridge.Bridge.asSinglePartition]]):
     * they run inside the job that reads them instead of adding a
-    * shuffle or broadcast job each. The coalesce is narrow, so every
-    * scan in the frame's last stage runs in the one task: a frame whose
-    * plan reads an index table goes through [[gather]] instead. */
-  def keepInOne(df: DataFrame): DataFrame =
-    Bridge.asSinglePartition(cut(df.coalesce(1)), inPlaceJoins = true)
+    * shuffle or broadcast job each. A join reads the frame in place only
+    * inside a plan this scope cuts, which is where every join among
+    * batch frames runs. The coalesce is narrow, so every scan in the
+    * frame's last stage runs in the one task: a frame whose plan reads
+    * an index table goes through [[gather]] instead. */
+  def keepInOne(df: DataFrame): DataFrame = {
+    val c = Bridge.asSinglePartition(cut(df.coalesce(1)), inPlaceJoins = true)
+    inPlace ++= Bridge.checkpointedRdd(c)
+    c
+  }
 
   /** [[keepInOne]] for a batch-sized frame whose plan scans an index
     * table (a corpus check's pairs, a removal's victims): the scans run

@@ -88,7 +88,12 @@ object Dedup {
     * definition both the relational and narrow candidate paths (and, via
     * constants, the SQL oracle's bandKeySql) must share. */
   private[operators] def bandKeyFold(ms: Seq[Column]): Column =
-    ms.foldLeft(lit(0L): Column)((a, m) => (a * lit(1000003L) + m) % lit(911382323007L))
+    ms.foldLeft(lit(0L): Column)((a, m) => (a * lit(BandMul) + m) % lit(BandMod))
+
+  /** [[bandKeyFold]]'s constants; the driver regime of [[minhashPairs]]
+    * folds with them too. Keys stay below `BandMod` < 2^40. */
+  private val BandMul = 1000003L
+  private val BandMod = 911382323007L
 
   /** Skew guard shared by the candidate paths: drop (band, key) buckets
     * holding more than `maxBucketSize` docs — a hub bucket is
@@ -171,14 +176,15 @@ object Dedup {
   /** End-to-end MinHash+LSH near-dup pairs with exact-Jaccard verification:
     * (id_a, id_b, jaccard) for pairs whose shingle-set Jaccard ≥ threshold.
     *
-    * 100 TB shape (this is the pipeline's hot path): signatures are
-    * NARROW (native per-row kernel — the corpus itself never shuffles);
-    * the only full-corpus exchange carries `bands` small rows per doc
-    * for the band self-join; and the exact-Jaccard verification explodes
-    * shingles ONLY for candidate docs (left-semi join on the candidate
-    * id set, which is orders of magnitude smaller than the corpus).
-    * The previous formulation shuffled the entire corpus's distinct
-    * shingle set twice before any candidate existed.
+    * Signatures are NARROW (native per-row kernel — the corpus itself
+    * never shuffles), and the signed docs are cut once. A corpus of fewer
+    * than [[DriverMinhashLimit]] docs is then banded and verified on the
+    * driver; a larger one runs the relational plan, whose only
+    * full-corpus exchange carries `bands` small rows per doc for the band
+    * self-join and whose exact-Jaccard verification explodes shingles
+    * ONLY for candidate docs (left-semi join on the candidate id set,
+    * which is orders of magnitude smaller than the corpus). Pairs and
+    * schema do not depend on the regime ([[minhashPairs]]).
     *
     * `maxBucketSize` (default [[DefaultMaxBucketSize]]) caps hub buckets —
     * pass `Int.MaxValue` for exact uncapped MMDS semantics. The cap is
@@ -200,26 +206,89 @@ object Dedup {
         .filter(size(col("__tids")) >= n),
       n, numHashes)
 
-  /** [[minhashNearDups]] over a [[signedTokens]] frame. `cut` breaks the
-    * lineage of the two frames the verification reads more than once:
-    * a lazy `localCheckpoint` for the one-shot operator, a batch-scoped
-    * cut ([[BatchScope]]) for a per-batch body. */
+  /** [[minhashNearDups]] over a [[signedTokens]] frame, in the regime
+    * [[minhashPairs]] picks under the default limits. `cut` breaks the
+    * lineage of the frames read more than once: a lazy
+    * `localCheckpoint` for the one-shot operator, a batch-scoped cut
+    * ([[BatchScope]]) for a per-batch body. */
   private[graft] def minhashNearDupsSigned(signed: DataFrame, idCol: String,
                                            threshold: Double, n: Int,
                                            numHashes: Int, bands: Int,
                                            maxBucketSize: Int,
-                                           cut: DataFrame => DataFrame): DataFrame = {
+                                           cut: DataFrame => DataFrame): DataFrame =
+    minhashPairs(signed, idCol, threshold, n, numHashes, bands, maxBucketSize, cut)
+
+  /** Signed corpora with fewer docs than this are banded and verified on
+    * the driver. Measured on synthetic corpora of 2^10–2^16 docs at
+    * local[4] (4-core VM), driver vs relational regime: see SCALING.md.
+    * The limit is set by driver heap: a doc read back holds its id, its
+    * signature and its distinct shingle array (up to `K.MaxLength` longs),
+    * so 2^16 docs of 512 tokens take roughly 300 MB, inside a default
+    * 1 GB driver. It must stay below 2^23 (the kernel packs a band key
+    * below 2^40 and a doc rank into one long). */
+  private[operators] val DriverMinhashLimit: Int = 1 << 16
+
+  /** The driver regime's second bound: Σ C(size, 2) over the band
+    * buckets the cap keeps — the candidate pairs, counted with
+    * repeats across bands — before any pair is enumerated. Each is one
+    * packed long, so 2^24 of them take 128 MB. */
+  private[operators] val DriverMinhashPairs: Long = 1L << 24
+
+  /** The one MinHash near-dup core behind [[minhashNearDups]] and
+    * [[minhashNearDupsSigned]]. The signed docs are cut once as
+    * (id, signature, distinct shingles); a multi-partition cut is
+    * counted (one job, in parallel, which also materializes it) and read
+    * back only when it has fewer than `limit` docs (one more job; a
+    * one-partition cut is read in one job that stops after `limit`
+    * docs).
+    *
+    *  - DRIVER regime (fewer than `limit` docs, integral, non-null,
+    *    distinct ids, at most `pairLimit` bucket pairs): banding, the
+    *    hub-bucket cap, candidate pairs and exact Jaccard run over
+    *    arrays ([[pairsOnDriver]]), and the pairs come back as a local
+    *    relation with the relational plan's schema.
+    *  - RELATIONAL regime: the band self-join and the candidate-only
+    *    Jaccard joins over the cut ([[relationalPairs]]); the docs are
+    *    never tokenized a second time.
+    *
+    * Either regime drops candidate pairs that share no shingle, also at
+    * `threshold ≤ 0`. `limit` and `pairLimit` are the regime switch
+    * (tests pass 0 to force the relational regime). */
+  private[operators] def minhashPairs(signed: DataFrame, idCol: String, threshold: Double,
+                                      n: Int, numHashes: Int, bands: Int,
+                                      maxBucketSize: Int, cut: DataFrame => DataFrame,
+                                      limit: Int = DriverMinhashLimit,
+                                      pairLimit: Long = DriverMinhashPairs): DataFrame = {
     val rpb = numHashes / bands
-    val sigs = signed.select(col(idCol), col("__sig"))
+    val docs = cut(signed.select(col(idCol), col("__sig"),
+      array_distinct(shingles(col("__tids"), n)).as("__sh")))
+    driverDocs(docs, limit)
+      .flatMap(pairsOnDriver(_, threshold, rpb, bands, maxBucketSize, pairLimit)) match {
+      case Some(pairs) =>
+        val schema = relationalPairs(docs, idCol, threshold, rpb, bands, maxBucketSize,
+          identity).schema
+        val box = boxLong(schema.head.dataType)
+        val rows = new java.util.ArrayList[Row](pairs.length)
+        pairs.foreach { case (a, b, j) => rows.add(Row(box(a), box(b), j)) }
+        signed.sparkSession.createDataFrame(rows, schema)
+      case None =>
+        relationalPairs(docs, idCol, threshold, rpb, bands, maxBucketSize, cut)
+    }
+  }
+
+  /** The relational regime of [[minhashPairs]] over the cut docs
+    * (idCol, `__sig`, `__sh`). */
+  private def relationalPairs(docs: DataFrame, idCol: String, threshold: Double,
+                              rowsPerBand: Int, bands: Int, maxBucketSize: Int,
+                              cut: DataFrame => DataFrame): DataFrame = {
     // band key: the shared fold, over sig-array elements here
-    val bandKey: Int => Column = b =>
-      bandKeyFold((b * rpb until (b + 1) * rpb).map(i => element_at(col("__sig"), i + 1)))
+    val bandKey: Int => Column = b => bandKeyFold((b * rowsPerBand until (b + 1) * rowsPerBand)
+      .map(i => element_at(col("__sig"), i + 1)))
     // ONE explicit small exchange (bands rows per doc: id+band+key) on
     // the join key: the cap aggregation, the left side, and the right
-    // side of the self-join all reuse this exchange (ReuseExchange),
-    // so the narrow tokenize+signature pipeline below it runs exactly
-    // once — and the self-join needs no further shuffle.
-    val banded = sigs.select(
+    // side of the self-join all reuse this exchange (ReuseExchange), so
+    // the self-join needs no further shuffle
+    val banded = docs.select(
       col(idCol),
       posexplode(array((0 until bands).map(bandKey): _*)).as(Seq("band", "key")))
       .repartition(col("band"), col("key"))
@@ -235,16 +304,130 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .distinct())
-    // verification shingles: candidate docs only (semi join), per-row
-    // distinct (array_distinct) so no corpus-wide distinct shuffle;
-    // cut for the same reason (3 references in jaccardOnPairs)
+    // verification shingles: candidate docs only (semi join), already
+    // distinct per row; cut for the same reason (3 references in
+    // jaccardOnPairs)
     val candIds = cands.select(col("id_a").as(idCol))
       .union(cands.select(col("id_b").as(idCol)))
       .distinct()
-    val shCand = cut(signed.join(candIds, Seq(idCol), "left_semi")
-      .select(col(idCol),
-        explode(array_distinct(shingles(col("__tids"), n))).as("shingle")))
+    val shCand = cut(docs.join(candIds, Seq(idCol), "left_semi")
+      .select(col(idCol), explode(col("__sh")).as("shingle")))
     jaccardOnPairs(cands, shCand, idCol, threshold)
+  }
+
+  /** The cut docs as (id, signature, sorted distinct shingles) when there
+    * are fewer than `limit` of them with integral, non-null ids, else
+    * None. A multi-partition cut is counted first, so an over-limit
+    * corpus is never pulled; a one-partition cut is read by one task
+    * that stops after `limit` docs. */
+  private def driverDocs(docs: DataFrame, limit: Int): Option[Array[(Long, Array[Long], Array[Long])]] = {
+    val get = longGetter(docs.schema.head.dataType)
+    if (get == null || limit <= 0) None
+    else {
+      val rdd = docs.queryExecution.toRdd
+      if (rdd.getNumPartitions > 1 && rdd.count() >= limit) None
+      else {
+        val parts = rdd.mapPartitions { it =>
+          val out = Array.newBuilder[(Long, Array[Long], Array[Long])]
+          var k = 0
+          var ok = true
+          while (ok && it.hasNext) {
+            val r = it.next()
+            ok = k + 1 < limit && !r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2)
+            if (ok) {
+              val sh = r.getArray(2).toLongArray()
+              java.util.Arrays.sort(sh)
+              out += ((get(r, 0), r.getArray(1).toLongArray(), sh))
+              k += 1
+            }
+          }
+          Iterator.single(Option.when(ok)(out.result()))
+        }.collect()
+        if (parts.forall(_.isDefined)) Some(parts.flatMap(_.get)) else None
+      }
+    }
+  }
+
+  /** The driver regime's kernel: [[relationalPairs]] over arrays, for
+    * docs (id, signature, sorted distinct shingles). Docs are ranked by
+    * id, so a rank pair (a < b) is an id pair (id_a < id_b). Per band,
+    * (key, rank) packs into one long and sorts, so each bucket is a run
+    * of ascending ranks; runs over `maxBucketSize` are dropped like
+    * [[capBuckets]] drops them. Returns the verified pairs ascending, or
+    * None when ids repeat or the kept buckets hold more than `pairLimit`
+    * pairs (counted before any is enumerated). */
+  private def pairsOnDriver(docs: Array[(Long, Array[Long], Array[Long])], threshold: Double,
+                            rowsPerBand: Int, bands: Int, maxBucketSize: Int,
+                            pairLimit: Long): Option[Array[(Long, Long, Double)]] = {
+    val d = docs.sortBy(_._1)
+    val m = d.length.toLong
+    if (d.indices.exists(v => v > 0 && d(v)._1 == d(v - 1)._1)) None
+    else {
+      val sorted = Array.tabulate(bands) { b =>
+        val packed = Array.tabulate(d.length) { v =>
+          var key = 0L
+          var i = b * rowsPerBand
+          while (i < (b + 1) * rowsPerBand) { key = (key * BandMul + d(v)._2(i)) % BandMod; i += 1 }
+          key * m + v
+        }
+        java.util.Arrays.sort(packed)
+        packed
+      }
+      // kept buckets as (band, from, until) runs of one key
+      val runs = Array.newBuilder[(Int, Int, Int)]
+      var total = 0L
+      sorted.indices.foreach { b =>
+        val p = sorted(b)
+        var i = 0
+        while (i < p.length) {
+          var j = i + 1
+          while (j < p.length && p(j) / m == p(i) / m) j += 1
+          val s = (j - i).toLong
+          if (s <= maxBucketSize) { runs += ((b, i, j)); total += s * (s - 1) / 2 }
+          i = j
+        }
+      }
+      if (total > pairLimit) None
+      else {
+        val cand = new Array[Long](total.toInt)
+        var c = 0
+        runs.result().foreach { case (b, from, until) =>
+          val p = sorted(b)
+          var x = from
+          while (x < until) {
+            var y = x + 1
+            while (y < until) { cand(c) = (p(x) % m) * m + p(y) % m; c += 1; y += 1 }
+            x += 1
+          }
+        }
+        java.util.Arrays.sort(cand)
+        val out = Array.newBuilder[(Long, Long, Double)]
+        var k = 0
+        while (k < cand.length) {
+          if (k == 0 || cand(k) != cand(k - 1)) {
+            val (a, b) = (d((cand(k) / m).toInt), d((cand(k) % m).toInt))
+            val inter = sortedOverlap(a._3, b._3)
+            if (inter > 0) {
+              val j = inter.toDouble / (a._3.length.toLong + b._3.length - inter).toDouble
+              if (j >= threshold) out += ((a._1, b._1, j))
+            }
+          }
+          k += 1
+        }
+        Some(out.result())
+      }
+    }
+  }
+
+  /** |a ∩ b| for sorted distinct arrays. */
+  private def sortedOverlap(a: Array[Long], b: Array[Long]): Long = {
+    var (i, j, n) = (0, 0, 0L)
+    while (i < a.length && j < b.length) {
+      if (a(i) < b(j)) i += 1
+      else if (a(i) > b(j)) j += 1
+      else { n += 1; i += 1; j += 1 }
+    }
+    n
   }
 
   /** Exact Jaccard over (id, shingle) sets for given candidate pairs. */
@@ -465,12 +648,7 @@ object Dedup {
         val e = edges.schema.head
         val schema = StructType(Seq(StructField("id", e.dataType, e.nullable),
           StructField("cluster", e.dataType, maxRounds > 0 || e.nullable)))
-        val box: Long => Any = e.dataType match {
-          case IntegerType => _.toInt
-          case ShortType   => _.toShort
-          case ByteType    => _.toByte
-          case _           => identity
-        }
+        val box = boxLong(e.dataType)
         val rows = new java.util.ArrayList[Row](ids.length)
         ids.indices.foreach(v => rows.add(Row(box(ids(v)), box(labels(v)))))
         pairs.sparkSession.createDataFrame(rows, schema)
@@ -521,13 +699,7 @@ object Dedup {
     * whose single task walks the checkpoint's blocks and stops after
     * `limit` rows, so an over-limit graph is never pulled — else None. */
   private def driverEdges(edges: DataFrame, limit: Int): Option[Array[Long]] = {
-    val get: (InternalRow, Int) => Long = edges.schema.head.dataType match {
-      case LongType    => _.getLong(_)
-      case IntegerType => _.getInt(_).toLong
-      case ShortType   => _.getShort(_).toLong
-      case ByteType    => _.getByte(_).toLong
-      case _           => null
-    }
+    val get = longGetter(edges.schema.head.dataType)
     if (get == null || limit <= 0) None
     else edges.queryExecution.toRdd.coalesce(1).mapPartitions { it =>
       val sd = new scala.collection.mutable.ArrayBuilder.ofLong
@@ -540,6 +712,24 @@ object Dedup {
       }
       Iterator.single(Option.when(ok)(sd.result()))
     }.collect().headOption.getOrElse(Some(Array.emptyLongArray)) // no blocks: no edges
+  }
+
+  /** Reads an integral column of an [[InternalRow]] as a long; null for
+    * any other type (the driver regimes take integral ids only). */
+  private def longGetter(t: DataType): (InternalRow, Int) => Long = t match {
+    case LongType    => _.getLong(_)
+    case IntegerType => _.getInt(_).toLong
+    case ShortType   => _.getShort(_).toLong
+    case ByteType    => _.getByte(_).toLong
+    case _           => null
+  }
+
+  /** The inverse of [[longGetter]]: a long boxed as a value of type `t`. */
+  private def boxLong(t: DataType): Long => Any = t match {
+    case IntegerType => _.toInt
+    case ShortType   => _.toShort
+    case ByteType    => _.toByte
+    case _           => identity
   }
 
   /** The driver regime's kernel: the seeded min-label + pointer-doubling

@@ -912,7 +912,7 @@ object VectorIndex {
     // Input in one partition (a sink body's micro-batch) is one task
     // already: the writer's sort by cell gives one file per cell, so
     // the shuffle would only add a job
-    val oneTask = encoded.queryExecution.executedPlan.outputPartitioning.numPartitions == 1
+    val oneTask = inOnePartition(encoded)
     val assigned = if (oneTask) encoded else encoded.repartition(col("cell"))
     // two tables means two actions: without a persist the second write
     // would re-read the corpus, re-run NearestCell+PQ per row, and
@@ -934,6 +934,19 @@ object VectorIndex {
       assigned.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try write(assigned) finally assigned.unpersist(false)
     }
+  }
+
+  /** Whether `df` runs in one task: its plan declares one partition, or
+    * its plan has no exchange and no subquery and its RDD has one
+    * partition (a checkpointed batch declares an unknown partitioning;
+    * its partition count is known without a job). */
+  private def inOnePartition(df: DataFrame): Boolean = {
+    val plan = df.queryExecution.executedPlan
+    plan.outputPartitioning.numPartitions == 1 ||
+      (!plan.isInstanceOf[org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec] &&
+        plan.find(p => p.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange] ||
+          p.subqueries.nonEmpty).isEmpty &&
+        df.queryExecution.toRdd.getNumPartitions == 1)
   }
 
   /** Merge `srcPath`'s rows INTO `dstPath` — the backfill-plus-daily

@@ -582,8 +582,11 @@ object StreamingOps {
     * are computed once, as cuts scoped to the batch
     * ([[graft.operators.BatchScope]]; the corpus pairs are gathered
     * after a parallel scan of the index's bands and signatures); the
-    * audit write and both index table appends read the verdict: 14 jobs
-    * per micro-batch in `IngestJobCountSpec`. */
+    * in-batch pass reads the signed batch back in one job and verifies
+    * it on the driver (`Dedup.minhashNearDupsSigned`'s driver regime,
+    * for batches under its doc limit); the audit write and both index
+    * table appends read the verdict: 8 jobs per micro-batch in
+    * `IngestJobCountSpec` (14 with the relational in-batch pass). */
   def dedupIngestBatch(batch: DataFrame, batchId: Long, idCol: String,
                        textCol: String, table: String, threshold: Double,
                        dupsPath: String, n: Int = 3, numHashes: Int = 16,

@@ -78,14 +78,13 @@ object Bridge {
     * re-declared as `SinglePartition` (the checkpoint's scan reports no
     * partitioning of its own, so every aggregation over it would plan an
     * exchange — a shuffle job under adaptive execution). With
-    * `inPlaceJoins` it also gets a one-byte size estimate and a
-    * sort-merge join hint: joins among such frames then neither
-    * broadcast a side (a broadcast job each) nor re-shuffle the single
-    * partitions for parallelism (a shuffle job per side, skipped only
-    * while every input's estimate stays under
-    * `spark.sql.maxSinglePartitionBytes` — estimates multiply along a
-    * join chain, so only a minimal one holds). Used by
-    * [[graft.operators.BatchScope]]; any other frame is returned
+    * `inPlaceJoins` it also gets a one-byte size estimate, so joins among
+    * such frames do not re-shuffle the single partitions for parallelism
+    * (a shuffle job per side, skipped only while every input's estimate
+    * stays under `spark.sql.maxSinglePartitionBytes` — estimates multiply
+    * along a join chain, so only a minimal one holds). A join that reads
+    * one must then be kept from broadcasting it ([[hintInPlaceJoins]]).
+    * Used by [[graft.operators.BatchScope]]; any other frame is returned
     * unchanged. */
   def asSinglePartition(df: org.apache.spark.sql.DataFrame,
                         inPlaceJoins: Boolean): org.apache.spark.sql.DataFrame = {
@@ -96,13 +95,43 @@ object Bridge {
         val stats =
           if (inPlaceJoins) org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes = 1)
           else l.computeStats()
-        val single = org.apache.spark.sql.classic.Dataset.ofRows(session,
+        org.apache.spark.sql.classic.Dataset.ofRows(session,
           new LogicalRDD(l.output, l.rdd,
             org.apache.spark.sql.catalyst.plans.physical.SinglePartition,
             l.outputOrdering, l.isStreaming, l.stream)(session, Some(stats)))
-        if (inPlaceJoins) single.hint("merge") else single
       case _ => df
     }
+  }
+
+  /** `df` with a sort-merge hint on every join side that reads one of
+    * the `inPlace` checkpoints through unary operators only (the path a
+    * Dataset hint on that checkpoint would take into the join) and
+    * carries no hint of its own (an explicit `broadcast` still decides):
+    * the one-byte estimate of [[asSinglePartition]] would otherwise make
+    * that side a broadcast (a broadcast job each). The hint goes on the
+    * join side itself, never on the checkpoint, so no query that reads
+    * a checkpoint without a join plans a hint it cannot use (Spark logs
+    * each such hint as a warning). */
+  def hintInPlaceJoins(df: org.apache.spark.sql.DataFrame,
+                       inPlace: org.apache.spark.rdd.RDD[_] => Boolean): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical._
+    import org.apache.spark.sql.execution.LogicalRDD
+    def reads(p: LogicalPlan): Boolean = p match {
+      case l: LogicalRDD => inPlace(l.rdd)
+      case _: ResolvedHint => false
+      case u: UnaryNode => reads(u.child)
+      case _ => false
+    }
+    def merge(p: LogicalPlan) =
+      if (reads(p)) ResolvedHint(p, HintInfo(strategy = Some(SHUFFLE_MERGE))) else p
+    val plan = df.queryExecution.analyzed
+    val hinted = plan.transformUp {
+      case j: Join if reads(j.left) || reads(j.right) =>
+        j.copy(left = merge(j.left), right = merge(j.right))
+    }
+    if (hinted eq plan) df
+    else org.apache.spark.sql.classic.Dataset.ofRows(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession], hinted)
   }
 
   /** Register a SQL function on a LIVE session (the extensions path in
