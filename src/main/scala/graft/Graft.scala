@@ -279,18 +279,22 @@ object Graft {
     val qWords = query.toLowerCase.replaceAll("[^a-z0-9 ]", " ")
       .split("\\s+").filter(_.nonEmpty).toSeq
     val qIds = qWords.flatMap(wp.tokenizeWord)
-    val (w, b) = graft.backend.RerankHeadBank.loadedQuantized
     val pe = df
       .select(col(idCol),
         bridge.column(graft.functions.WordPieceIds(
           bridge.expression(col(textCol)), wp)).as("__ids"))
-      .withColumn("__pe", Reranker.wordPiecePairEncode(qWords, col("__ids"), wp, maxLen))
-      .select(col(idCol), col("__pe.input_ids").as("__tids"))
-    graft.backend.BackendEmbedder.embed(pe, idCol, "__tids",
-      graft.backend.RerankHeadBackend(
-        graft.backend.DecoderLayerBackend.fullModel(), w, b),
+      .select(col(idCol),
+        Reranker.wordPiecePairEncode(qWords, col("__ids"), wp, maxLen)("input_ids").as("__tids"))
+    graft.backend.BackendEmbedder.embed(pe, idCol, "__tids", learnedRerankHead,
       minTokens = qIds.length + 4)
       .select(col(idCol), element_at(col("embedding"), 1).as("score"))
+  }
+
+  // one instance per JVM: the head parses its checkpoint once, and the
+  // backend's registry key and unboxed weights are derived once
+  private lazy val learnedRerankHead: graft.backend.RerankHeadBackend = {
+    val (w, b) = graft.backend.RerankHeadBank.loadedQuantized
+    graft.backend.RerankHeadBackend(graft.backend.DecoderLayerBackend.fullModel(), w, b)
   }
 
   /** The LEARNED ColBERT route — per-token vectors from the full

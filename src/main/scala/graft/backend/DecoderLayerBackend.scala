@@ -70,6 +70,10 @@ final case class DecoderLayerBackend(
   private val offO = offV + KvOut * H
   private val offUp = Inter * H
   private val offDown = 2 * Inter * H
+  // unboxed copies, made once per instance (the layers' own copies live
+  // on LayerBank.Weights)
+  @transient private lazy val gFinalA: Array[Long] = gFinal.toArray
+  @transient private lazy val embA: Array[Long] = embTable.map(_.toArray).orNull
 
   /** The embedding state — the layer-0 residual stream. With a learned
     * table and an in-vocab id: the real table row quantized to the
@@ -77,23 +81,33 @@ final case class DecoderLayerBackend(
     * `floor(k/1024 · QS + 0.5)` is the one parenthesization mirrored
     * in the oracle). Otherwise: the hash cell scaled into [0, QS) by
     * exact integer division. */
-  def s0(t: Long): Array[Long] = embTable match {
-    case Some(w) if t >= 0 && t < vocabSize =>
-      Array.tabulate(H)(d =>
-        math.floor(w((t * H).toInt + d).toDouble / 1024.0 * QSd + 0.5).toLong)
-    case _ =>
-      Array.tabulate(H)(e => (((t % M3) * A3 + e.toLong * B3 + C3) % M3) * QS / M3)
+  def s0(t: Long): Array[Long] = {
+    val out = new Array[Long](H)
+    val emb = embA
+    var d = 0
+    if (emb != null && t >= 0 && t < vocabSize) {
+      val base = (t * H).toInt
+      while (d < H) { out(d) = math.floor(emb(base + d).toDouble / 1024.0 * QSd + 0.5).toLong; d += 1 }
+    } else {
+      while (d < H) { out(d) = (((t % M3) * A3 + d.toLong * B3 + C3) % M3) * QS / M3; d += 1 }
+    }
+    out
   }
 
   /** Learned RMSNorm, quantized back to the fixed-point stream:
     * out = round(((s/QS) / sqrt(mean((s/QS)²) + eps)) · gain · QS). */
-  private def rmsNormQ(s: Array[Long], g: IndexedSeq[Long]): Array[Long] = {
+  private def rmsNormQ(s: Array[Long], g: Array[Long]): Array[Long] = {
     var sq = 0L
     var e = 0
     while (e < H) { sq += s(e) * s(e); e += 1 }
     val rms = math.sqrt((sq.toDouble / QSd / QSd) / H.toDouble + RmsEps)
-    Array.tabulate(H)(i =>
-      math.floor(((s(i).toDouble / QSd) / rms) * (g(i).toDouble / 2048.0) * QSd + 0.5).toLong)
+    val out = new Array[Long](H)
+    var i = 0
+    while (i < H) {
+      out(i) = math.floor(((s(i).toDouble / QSd) / rms) * (g(i).toDouble / 2048.0) * QSd + 0.5).toLong
+      i += 1
+    }
+    out
   }
 
   /** The final model norm — doubles, feeds l2 directly. */
@@ -102,28 +116,31 @@ final case class DecoderLayerBackend(
     var e = 0
     while (e < H) { sq += s(e) * s(e); e += 1 }
     val rms = math.sqrt((sq.toDouble / QSd / QSd) / H.toDouble + RmsEps)
-    Array.tabulate(H)(i =>
-      ((s(i).toDouble / QSd) / rms) * (gFinal(i).toDouble / 2048.0))
+    val g = gFinalA
+    val out = new Array[Double](H)
+    var i = 0
+    while (i < H) { out(i) = ((s(i).toDouble / QSd) / rms) * (g(i).toDouble / 2048.0); i += 1 }
+    out
   }
 
   /** Projected cell d of layer weights' attention block at `off`, from
     * a normalized state vector, reduced into [0, M3) — the q86 proj
     * over x1 instead of raw hash cells. */
-  @inline private def projA(w: LayerBank.Weights, x: Array[Long], off: Int, d: Int): Long = {
+  @inline private def projA(attn: Array[Long], x: Array[Long], off: Int, d: Int): Long = {
     var s = 0L
     var e = 0
     val base = off + d * H
-    while (e < H) { s += w.attn(base + e) * x(e); e += 1 }
+    while (e < H) { s += attn(base + e) * x(e); e += 1 }
     (s % M3 + M3) % M3
   }
 
   /** q86's head-local rational rotation over projected cells. */
-  private def rotProjInto(w: LayerBank.Weights, x: Array[Long], p: Int, off: Int, width: Int, out: Array[Long]): Unit = {
+  private def rotProjInto(attn: Array[Long], x: Array[Long], p: Int, off: Int, width: Int, out: Array[Long]): Unit = {
     var i = 0
     while (i < width) { // step by pairs: each projects its two cells once
       val hh = (i % D) / 2
-      val x0 = projA(w, x, off, i)
-      val x1 = projA(w, x, off, i + 1)
+      val x0 = projA(attn, x, off, i)
+      val x1 = projA(attn, x, off, i + 1)
       val u = (p + hh + 2).toLong
       val c = u * u - 1L
       val s = 2L * u
@@ -140,6 +157,8 @@ final case class DecoderLayerBackend(
   private def attnMlpTail(w: LayerBank.Weights, sQi: Array[Long], qq: Array[Long],
                           kk: Array[Array[Long]], vv: Array[Array[Long]],
                           mask: Array[Int], qi: Int): Array[Long] = {
+    val attn = w.attnA
+    val mlp = w.mlpA
     val y = new Array[Long](QOut)
     val tw = new Array[Long](NHeads)
     var j = 0
@@ -177,17 +196,17 @@ final case class DecoderLayerBackend(
       var s = 0L
       var e = 0
       val base = offO + dd * QOut
-      while (e < QOut) { s += w.attn(base + e) * z(e); e += 1 }
+      while (e < QOut) { s += attn(base + e) * z(e); e += 1 }
       r1(dd) = sQi(dd) + math.floor(s.toDouble / 1024.0 + 0.5).toLong
       dd += 1
     }
     // ---- gated MLP (q87 semantics over the post-attention norm) ----
-    val x2 = rmsNormQ(r1, w.g2)
+    val x2 = rmsNormQ(r1, w.g2A)
     @inline def projM(off: Int, i: Int): Long = {
       var s = 0L
       var e = 0
       val base = off + i * H
-      while (e < H) { s += w.mlp(base + e) * x2(e); e += 1 }
+      while (e < H) { s += mlp(base + e) * x2(e); e += 1 }
       (s % M3 + M3) % M3
     }
     // gated activation lanes, computed once and reused across dims
@@ -204,7 +223,7 @@ final case class DecoderLayerBackend(
       var s = 0L
       var i2 = 0
       val base = offDown + d * Inter
-      while (i2 < Inter) { s += w.mlp(base + i2) * al(i2); i2 += 1 }
+      while (i2 < Inter) { s += mlp(base + i2) * al(i2); i2 += 1 }
       // down_proj rescale: k/1024 weights over two Z_M3 factors
       r2(d) = r1(d) + math.floor((s.toDouble / 1024.0 / M3.toDouble / M3.toDouble) * QSd + 0.5).toLong
       d += 1
@@ -216,6 +235,7 @@ final case class DecoderLayerBackend(
     * per layer pass and shared across queries. */
   private def kvPrecomp(w: LayerBank.Weights, x1: Array[Array[Long]], mask: Array[Int],
                         pos: Array[Int]): (Array[Array[Long]], Array[Array[Long]]) = {
+    val attn = w.attnA
     val seqLen = x1.length
     val kk = new Array[Array[Long]](seqLen)
     val vv = new Array[Array[Long]](seqLen)
@@ -223,9 +243,12 @@ final case class DecoderLayerBackend(
     while (j < seqLen) {
       if (mask(j) == 1) {
         val k = new Array[Long](KvOut)
-        rotProjInto(w, x1(j), pos(j), offK, KvOut, k)
+        rotProjInto(attn, x1(j), pos(j), offK, KvOut, k)
         kk(j) = k
-        vv(j) = Array.tabulate(KvOut)(d => projA(w, x1(j), offV, d))
+        val v = new Array[Long](KvOut)
+        var d = 0
+        while (d < KvOut) { v(d) = projA(attn, x1(j), offV, d); d += 1 }
+        vv(j) = v
       }
       j += 1
     }
@@ -239,10 +262,10 @@ final case class DecoderLayerBackend(
     require(mask(qi) == 1, s"query index $qi is a padded position")
     val seqLen = states.length
     val x1 = Array.tabulate(seqLen)(j =>
-      if (mask(j) == 1 || j == qi) rmsNormQ(states(j), w.g1) else null)
+      if (mask(j) == 1 || j == qi) rmsNormQ(states(j), w.g1A) else null)
     val (kk, vv) = kvPrecomp(w, x1, mask, pos)
     val qq = new Array[Long](QOut)
-    rotProjInto(w, x1(qi), pos(qi), 0, QOut, qq)
+    rotProjInto(w.attnA, x1(qi), pos(qi), 0, QOut, qq)
     attnMlpTail(w, states(qi), qq, kk, vv, mask, qi)
   }
 
@@ -255,13 +278,13 @@ final case class DecoderLayerBackend(
                   pos: Array[Int]): IndexedSeq[Array[Long]] = {
     val seqLen = states.length
     val x1 = Array.tabulate(seqLen)(j =>
-      if (mask(j) == 1) rmsNormQ(states(j), w.g1) else null)
+      if (mask(j) == 1) rmsNormQ(states(j), w.g1A) else null)
     val (kk, vv) = kvPrecomp(w, x1, mask, pos)
     (0 until seqLen).map { qi =>
       if (mask(qi) == 0) states(qi)
       else {
         val qq = new Array[Long](QOut)
-        rotProjInto(w, x1(qi), pos(qi), 0, QOut, qq)
+        rotProjInto(w.attnA, x1(qi), pos(qi), 0, QOut, qq)
         attnMlpTail(w, states(qi), qq, kk, vv, mask, qi)
       }
     }
@@ -300,8 +323,9 @@ final case class DecoderLayerBackend(
     * sparse_text_embedding/impl.rs:229, kept in exact integers — the
     * established no-ln gate form), zeros dropped. */
   def tiedSparseWeights(tids: Array[Long]): Seq[(Long, Long)] = {
-    val emb = embTable.getOrElse(throw new IllegalStateException(
-      "tiedSparseWeights needs the learned embed table (the tied head)"))
+    val emb = embA
+    if (emb == null) throw new IllegalStateException(
+      "tiedSparseWeights needs the learned embed table (the tied head)")
     if (tids.isEmpty) return Seq.empty
     val states = allStates(tids)
     val out = new Array[Long](vocabSize)
@@ -327,7 +351,11 @@ final case class DecoderLayerBackend(
     * [outDim × hidden] F32 row-major matrix (k/1024 numerators), then
     * l2-normalized per token. One fixed scale order
     * (`sum / QS / 1024`) mirrored in the oracle. */
-  def colbertTokens(tids: Array[Long], w: IndexedSeq[Long], outDim: Int): Seq[Array[Double]] = {
+  def colbertTokens(tids: Array[Long], w: IndexedSeq[Long], outDim: Int): Seq[Array[Double]] =
+    colbertTokens(tids, w.toArray, outDim)
+
+  /** [[colbertTokens]] over an unboxed head, the per-row form. */
+  private[backend] def colbertTokens(tids: Array[Long], w: Array[Long], outDim: Int): Seq[Array[Double]] = {
     require(w.length == outDim * H, s"head of ${w.length} != $outDim x $H")
     if (tids.length < 2) return Seq.empty
     allStates(tids).drop(1).map { st =>
@@ -425,7 +453,11 @@ object DecoderLayerBackend {
     * stream, the full decoder stack, the final model norm. Composed
     * with the real-vocab WordPiece tokenizer every gated id is
     * in-table, so no stage of the forward touches the hash stream. */
-  def fullModel(): DecoderLayerBackend = {
+  def fullModel(): DecoderLayerBackend = full
+
+  // one instance per JVM, so its registry key and unboxed weights are
+  // derived once
+  private lazy val full: DecoderLayerBackend = {
     val (emb, ls, gf) = LayerBank.loadedFull
     DecoderLayerBackend(ls, gf, embTable = Some(emb))
   }

@@ -31,6 +31,10 @@ trait EmbeddingBackend extends Serializable {
     * contract). Per-sequence backends leave this false and skip the
     * sort. */
   def padsBatchLongest: Boolean = false
+
+  /** The [[BackendRegistry]] key, computed once per instance: a
+    * case-class backend's `toString` prints every weight it holds. */
+  @transient private[backend] lazy val registryKey: String = toString
 }
 
 /** The default deterministic backend: the same feature-hashing projector
@@ -115,44 +119,61 @@ object Backends {
   * src/text_embedding/mod.rs:5), run the per-executor backend once per
   * micro-batch, emit (id, embedding) rows. Narrow — no shuffle; the
   * partition iterator never materializes more than one micro-batch.
-  * Implemented as typed `Dataset.mapPartitions` (not `df.rdd`): rows
-  * stay in Tungsten encoding, and the operator applies unchanged to
-  * Structured Streaming DataFrames. */
+  * Every route crosses one typed boundary ([[rows]]): rows stay in
+  * Tungsten encoding, the operator applies unchanged to Structured
+  * Streaming DataFrames, and a call builds four Datasets with encoders
+  * derived once per JVM. */
 object BackendEmbedder {
+  import org.apache.spark.sql.{Encoder, Encoders}
+  import org.apache.spark.sql.functions.col
+
+  // derived by Scala reflection, so once per JVM, not per call
+  private lazy val idTids: Encoder[(Long, Array[Long])] = Encoders.product
+  private lazy val idVec: Encoder[(Long, Array[Double])] = Encoders.product
+  private lazy val idPosVec: Encoder[(Long, Long, Array[Double])] = Encoders.product
+  private lazy val idTermWeight: Encoder[(Long, Long, Long)] = Encoders.product
+
+  /** The one typed boundary of the backend routes: `(id, tids)` rows
+    * with at least `minTokens` ids reach `f` a partition at a time,
+    * with the executor's registry instance of `backend` under `key`;
+    * `f`'s tuples come back as columns `names`. `minTokens` filters
+    * inside the partition function: a Catalyst Filter on size(tids)
+    * gets pushed below the projection and re-evaluates the whole
+    * tokenizer expression per row (2x the scan-stage cost for the heavy
+    * WordPiece/BPE tokenizers), while here the materialized array just
+    * checks its length. */
+  private def rows[B <: EmbeddingBackend, O](df: DataFrame, idCol: String, tidsCol: String,
+      backend: B, key: String, minTokens: Int, out: Encoder[O], names: String*)
+      (f: (B, Iterator[(Long, Array[Long])]) => Iterator[O]): DataFrame =
+    df.select(col(idCol).cast("long"), col(tidsCol)).as(idTids)
+      .mapPartitions { it =>
+        val be = BackendRegistry.getOrCreate(key, () => backend).asInstanceOf[B]
+        f(be, it.filter(r => r._2 != null && r._2.length >= minTokens))
+      }(out)
+      .toDF(names: _*)
+
   def embed(df: DataFrame, idCol: String, tidsCol: String,
             backend: EmbeddingBackend, batchSize: Int = 256,
             minTokens: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bKey = backend.toString
-    df.select(org.apache.spark.sql.functions.col(idCol).cast("long"),
-        org.apache.spark.sql.functions.col(tidsCol))
-      .as[(Long, Array[Long])]
-      // minTokens filters INSIDE the typed boundary: a Catalyst
-      // Filter on size(tids) gets pushed below the projection and
-      // re-evaluates the whole tokenizer expression per row (2x the
-      // scan-stage cost for the heavy WordPiece/BPE tokenizers); here
-      // the already-materialized array just checks its length
-      .filter((r: (Long, Array[Long])) => r._2 != null && r._2.length >= minTokens)
-      .mapPartitions { it =>
-        val be = BackendRegistry.getOrCreate(bKey, () => backend)
-        // padded-tensor backends get length-CLASSED micro-batches: rows
-        // stream into per-length-class buffers and a batch flushes when
-        // its class fills, so every tensor the backend pads is near-
-        // uniform in length. O(1) per row and bounded memory (a few
-        // batchSize buffers) — measured cheaper than sortWithinPartitions
-        // bucketing, whose full-partition materialization cost MORE task
-        // time than the padding it saved (sf1 A/B on q95/q98). Results
-        // are batch-composition-invariant by the trait contract.
-        val groups =
-          if (backend.padsBatchLongest) lengthClassed(it, batchSize)
-          else it.grouped(batchSize)
-        groups.flatMap { group =>
-          val embs = be.embedBatch(group.map(_._2))
-          group.map(_._1).zip(embs)
-        }
+    val lengthClasses = backend.padsBatchLongest
+    rows(df, idCol, tidsCol, backend, backend.registryKey, minTokens, idVec,
+        idCol, "embedding") { (be, it) =>
+      // padded-tensor backends get length-CLASSED micro-batches: rows
+      // stream into per-length-class buffers and a batch flushes when
+      // its class fills, so every tensor the backend pads is near-
+      // uniform in length. O(1) per row and bounded memory (a few
+      // batchSize buffers) — measured cheaper than sortWithinPartitions
+      // bucketing, whose full-partition materialization cost MORE task
+      // time than the padding it saved (sf1 A/B on q95/q98). Results
+      // are batch-composition-invariant by the trait contract.
+      val groups =
+        if (lengthClasses) lengthClassed(it, batchSize)
+        else it.grouped(batchSize)
+      groups.flatMap { group =>
+        val embs = be.embedBatch(group.map(_._2))
+        group.map(_._1).zip(embs)
       }
-      .toDF(idCol, "embedding")
+    }
   }
 
   /** Group a partition's rows into micro-batches of near-uniform token
@@ -211,23 +232,16 @@ object BackendEmbedder {
                     model: DecoderLayerBackend,
                     w: IndexedSeq[Long], outDim: Int,
                     minTokens: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, posexplode}
-    val bKey = "colbert:" + model.toString
-    df.select(col(idCol).cast("long"), col(tidsCol))
-      .as[(Long, Array[Long])]
-      .filter((r: (Long, Array[Long])) => r._2 != null && r._2.length >= minTokens)
-      .mapPartitions { it =>
-        val be = BackendRegistry.getOrCreate(bKey, () => model)
-          .asInstanceOf[DecoderLayerBackend]
-        it.flatMap { case (id, tids) =>
-          be.colbertTokens(tids, w, outDim).iterator.zipWithIndex.map {
-            case (vec, p) => (id, p.toLong, vec)
-          }
+    import org.apache.spark.sql.functions.posexplode
+    val head = w.toArray
+    rows(df, idCol, tidsCol, model, "colbert:" + model.registryKey, minTokens, idPosVec,
+        idCol, "pos", "__vec") { (be, it) =>
+      it.flatMap { case (id, tids) =>
+        be.colbertTokens(tids, head, outDim).iterator.zipWithIndex.map {
+          case (vec, p) => (id, p.toLong, vec)
         }
       }
-      .toDF(idCol, "pos", "__vec")
+    }
       .select(col(idCol), col("pos"), posexplode(col("__vec")).as(Seq("dim", "val")))
       .select(col(idCol), col("pos"), col("dim").cast("long").as("dim"), col("val"))
   }
@@ -237,22 +251,13 @@ object BackendEmbedder {
     * weight) rows, zeros dropped. Narrow flatMap per doc. */
   def tiedSparse(df: DataFrame, idCol: String, tidsCol: String,
                  model: DecoderLayerBackend,
-                 minTokens: Int = 0): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(org.apache.spark.sql.functions.col(idCol).cast("long"),
-        org.apache.spark.sql.functions.col(tidsCol))
-      .as[(Long, Array[Long])]
-      .filter((r: (Long, Array[Long])) => r._2 != null && r._2.length >= minTokens)
-      .mapPartitions { it =>
-        val be = BackendRegistry.getOrCreate("tied:" + model.toString, () => model)
-          .asInstanceOf[DecoderLayerBackend]
-        it.flatMap { case (id, tids) =>
-          be.tiedSparseWeights(tids).iterator.map { case (v, w) => (id, v, w) }
-        }
+                 minTokens: Int = 0): DataFrame =
+    rows(df, idCol, tidsCol, model, "tied:" + model.registryKey, minTokens, idTermWeight,
+        idCol, "term_id", "weight") { (be, it) =>
+      it.flatMap { case (id, tids) =>
+        be.tiedSparseWeights(tids).iterator.map { case (v, w) => (id, v, w) }
       }
-      .toDF(idCol, "term_id", "weight")
-  }
+    }
 
   /** Padding-minimization variant (SURVEY §4 "sort-by-length within
     * partition"): rows sort by token count inside each partition before

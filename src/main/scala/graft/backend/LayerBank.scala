@@ -84,7 +84,14 @@ object LayerBank {
       attn: IndexedSeq[Long],
       mlp: IndexedSeq[Long],
       g1: IndexedSeq[Long],
-      g2: IndexedSeq[Long]) extends Serializable
+      g2: IndexedSeq[Long]) extends Serializable {
+    // unboxed copies, made once per instance: the forward's hot loops
+    // index them per multiply-add
+    @transient private[backend] lazy val attnA: Array[Long] = attn.toArray
+    @transient private[backend] lazy val mlpA: Array[Long] = mlp.toArray
+    @transient private[backend] lazy val g1A: Array[Long] = g1.toArray
+    @transient private[backend] lazy val g2A: Array[Long] = g2.toArray
+  }
 
   private def load(): (IndexedSeq[Long], IndexedSeq[Weights], IndexedSeq[Long]) = {
     val fs = shardFiles

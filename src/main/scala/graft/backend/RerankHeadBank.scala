@@ -62,8 +62,12 @@ final case class RerankHeadBackend(
   // delegates to the model's batch-longest-padded pooledHidden
   override def padsBatchLongest: Boolean = model.padsBatchLongest
 
+  // unboxed copy, made once per instance
+  @transient private lazy val wA: Array[Long] = w.toArray
+
   def embedBatch(batch: Seq[Array[Long]]): Seq[Array[Double]] =
     model.pooledHidden(batch).map { h =>
+      val w = wA
       var s = 0.0
       var d = 0
       while (d < h.length) { s += (w(d).toDouble / 1024.0) * h(d); d += 1 }

@@ -308,7 +308,20 @@ case class SparseDotQ(left: Expression, right: Expression, wq: IndexedSeq[Long])
   override def nullSafeEval(tid: Any, pos: Any): Any =
     evalRow(tid.asInstanceOf[Long], pos.asInstanceOf[Long])
 
-  def evalRow(tid: Long, pos: Long): Long = {
+  def evalRow(tid: Long, pos: Long): Long = SparseDotQ.dot(w, tid, pos)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sparseDot", this, classOf[SparseDotQ].getName)
+    defineCodeGen(ctx, ev, (t, p) => s"$ref.evalRow($t, $p)")
+  }
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SparseDotQ =
+    copy(left = newLeft, right = newRight)
+}
+
+object SparseDotQ {
+  /** Σ_d hidden(tid, pos, d) · w[d], exact int64. */
+  def dot(w: Array[Long], tid: Long, pos: Long): Long = {
     val base = (tid % graft.functions.K.M3) * graft.functions.K.A3 +
       (pos + 1L) * graft.functions.K.C3
     var s = 0L
@@ -319,14 +332,77 @@ case class SparseDotQ(left: Expression, right: Expression, wq: IndexedSeq[Long])
     }
     s
   }
+}
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("sparseDot", this, classOf[SparseDotQ].getName)
-    defineCodeGen(ctx, ev, (t, p) => s"$ref.evalRow($t, $p)")
+/** The learned BGE-M3 sparse head of one row (q76): for each token id
+  * > 3 (XLM-R specials skipped) at position p, wq = [[SparseDotQ.dot]] +
+  * bq; strictly-positive wq kept, duplicate ids max-merged, ids
+  * ascending, weight = wq / scale — the reference's per-input HashMap
+  * then sort (the reference's sparse_text_embedding/impl.rs:256-304)
+  * as one native pass. Exact integers up to the one final division, so
+  * the rows equal the explode → groupBy(doc, token).max formulation's
+  * for every input with distinct ids. */
+case class SparseWeightedPairs(child: Expression, wq: IndexedSeq[Long], bq: Long, scale: Long)
+    extends UnaryExpression with ImplicitCastInputTypes {
+  override def inputTypes: Seq[org.apache.spark.sql.graftbridge.Bridge.AbstractType] =
+    Seq(ArrayType(LongType))
+
+  override def dataType: DataType = ArrayType(
+    StructType(Seq(
+      StructField("token_id", LongType, nullable = false),
+      StructField("weight", DoubleType, nullable = false))),
+    containsNull = false)
+
+  private val w = wq.toArray
+
+  override def nullSafeEval(input: Any): Any = evalRow(input.asInstanceOf[ArrayData])
+
+  def evalRow(tids: ArrayData): ArrayData = {
+    val n = tids.numElements()
+    val toks = new Array[Long](n)
+    val qs = new Array[Long](n)
+    var m = 0
+    var p = 0
+    while (p < n) {
+      val t = tids.getLong(p)
+      if (t > 3L) {
+        val q = SparseDotQ.dot(w, t, p.toLong) + bq
+        if (q > 0L) { toks(m) = t; qs(m) = q; m += 1 }
+      }
+      p += 1
+    }
+    // distinct kept ids, ascending
+    val ids = java.util.Arrays.copyOf(toks, m)
+    java.util.Arrays.sort(ids)
+    var k = 0
+    var i = 0
+    while (i < m) {
+      if (k == 0 || ids(i) != ids(k - 1)) { ids(k) = ids(i); k += 1 }
+      i += 1
+    }
+    val best = new Array[Long](k)
+    i = 0
+    while (i < m) {
+      val j = java.util.Arrays.binarySearch(ids, 0, k, toks(i))
+      if (qs(i) > best(j)) best(j) = qs(i)
+      i += 1
+    }
+    val out = new Array[Any](k)
+    i = 0
+    while (i < k) {
+      out(i) = org.apache.spark.sql.catalyst.InternalRow(ids(i), best(i).toDouble / scale.toDouble)
+      i += 1
+    }
+    new GenericArrayData(out)
   }
 
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): SparseDotQ =
-    copy(left = newLeft, right = newRight)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val ref = ctx.addReferenceObj("sparseWeighted", this, classOf[SparseWeightedPairs].getName)
+    defineCodeGen(ctx, ev, c => s"$ref.evalRow($c)")
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): SparseWeightedPairs =
+    copy(child = newChild)
 }
 
 /** Native SimHash signature: bit b of the result is set iff

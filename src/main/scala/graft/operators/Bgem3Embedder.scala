@@ -1,6 +1,7 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.QuotingUtils
 import org.apache.spark.sql.functions._
 import graft.functions.{K, Kernel}
 
@@ -19,10 +20,11 @@ import graft.functions.{K, Kernel}
   * one forward pass, here all three are per-row column expressions over a
   * single tokenization — the whole operator is NARROW (zero shuffles,
   * zero joins), so at 100 TB it scales linearly with input splits. The
-  * sparse max-merge, a groupBy in the standalone [[SparseEmbedder]],
-  * becomes a per-row fold over the (token, score) pairs sorted by
-  * (token asc, score asc): keeping the last element of each token run IS
-  * the max — linear in tokens, no exchange. Results are bit-identical to
+  * sparse max-merge, a groupBy in
+  * [[SparseEmbedder.sparseExplodedRelational]], becomes a per-row fold
+  * over the (token, score) pairs sorted by (token asc, score asc):
+  * keeping the last element of each token run IS the max — linear in
+  * tokens, no exchange. Results are bit-identical to
   * the standalone operators (spec-asserted) and share their oracles.
   */
 object Bgem3Embedder {
@@ -78,22 +80,24 @@ object Bgem3Embedder {
             maxLength: Int = K.MaxLength): DataFrame = {
     val tids = "__graft_tids"
     val pairs = "__graft_pairs"
-    val sums = "__graft_sums"
     val mean = "__graft_mean"
-    df.withColumn(tids, Kernel.tokenIds(col(textCol), maxLength))
+    val out = struct(
+      zip_with(col(mean),
+        array_repeat(Kernel.l2norm(col(mean)) + lit(K.Eps), lit(denseDim)),
+        (x, n) => x / n).as("dense"),
+      struct(
+        transform(col(pairs), p => p("token_id")).as("indices"),
+        transform(col(pairs), p => p("s")).as("values")).as("sparse"),
+      colbertVectors(col(tids), colbertDim).as("colbert")).as(outCol)
+    // df's columns in place, outCol replacing a same-named one
+    val kept = df.columns.map(c =>
+      if (c == outCol) out else col(QuotingUtils.quoteIdentifier(c)))
+    df.select(col("*"), Kernel.tokenIds(col(textCol), maxLength).as(tids))
       .filter(size(col(tids)) > 0) // also the projection barrier: tids
       // stays an attribute below, not inlined into downstream lambdas
-      .withColumn(sums, Kernel.pooledSums(col(tids), denseDim))
-      .withColumn(mean, Kernel.meanScaled(col(sums), size(col(tids))))
-      .withColumn(pairs, sparsePairs(col(tids)))
-      .withColumn(outCol, struct(
-        zip_with(col(mean),
-          array_repeat(Kernel.l2norm(col(mean)) + lit(K.Eps), lit(denseDim)),
-          (x, n) => x / n).as("dense"),
-        struct(
-          transform(col(pairs), p => p("token_id")).as("indices"),
-          transform(col(pairs), p => p("s")).as("values")).as("sparse"),
-        colbertVectors(col(tids), colbertDim).as("colbert")))
-      .drop(tids, pairs, sums, mean)
+      .select(col("*"),
+        Kernel.meanScaled(Kernel.pooledSums(col(tids), denseDim), size(col(tids))).as(mean),
+        sparsePairs(col(tids)).as(pairs))
+      .select((if (df.columns.contains(outCol)) kept else kept :+ out).toIndexedSeq: _*)
   }
 }

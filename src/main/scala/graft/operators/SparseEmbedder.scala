@@ -14,12 +14,12 @@ import graft.functions.{K, Kernel}
   *    ids by max, indices sorted ascending
   *    (/root/reference/src/sparse_text_embedding/impl.rs:256-304)
   *
-  * Both are relational aggregations: explode (doc, pos, token_id) →
-  * score → groupBy(doc, token_id).agg(max) → filter(>0). MAX over doubles
-  * is comparison-based, so it is exact and order-independent — safe to
-  * shuffle arbitrarily, and a map-side partial max runs before the
-  * exchange (hash aggregate), so at 100 TB the shuffle carries at most
-  * |vocab| rows per doc, not |tokens|.
+  * Both are per-doc max-merges over (doc, pos, token_id) scores, kept
+  * strictly positive. The routes merge inside one native per-row
+  * expression, so they are narrow; [[sparseExplodedRelational]] keeps
+  * the explode → groupBy(doc, token_id).agg(max) formulation the oracle
+  * mirrors. MAX is comparison-based, so both are exact and
+  * order-independent.
   */
 object SparseEmbedder {
 
@@ -135,28 +135,18 @@ object SparseEmbedder {
     *
     * Scale shape: the bank rides in the plan as a dim-sized literal
     * array (Catalyst ships it with the serialized plan — the "broadcast"
-    * of a vector-sized constant), the per-occurrence dot is narrow
-    * codegen'd HOF work, and the only exchange is the same map-side
-    * partial-max groupBy as the unweighted q04 path. */
+    * of a vector-sized constant), and dot, relu, keep and max-merge run
+    * per row in one native expression
+    * ([[graft.functions.SparseWeightedPairs]]) that `inline` fans out:
+    * NARROW, one job, no exchange. Like the reference, the merge is per
+    * input row: two rows sharing an id are not merged. */
   def weightedExploded(df: DataFrame, idCol: String, textCol: String,
                        wq: Array[Long], bq: Long, scale: Long,
                        maxLength: Int = K.MaxLength): DataFrame = {
     val bridge = org.apache.spark.sql.graftbridge.Bridge
-    df.select(col(idCol), posexplode(Kernel.tokenIds(col(textCol), maxLength)).as(Seq("pos", "token_id")))
-      .filter(col("token_id") > 3) // XLM-R special ids 0..3 (impl.rs:264)
-      // one native loop per row — the HOF aggregate ran dimIn
-      // interpreted lambda calls per (doc, token) row
-      .withColumn("__dotq",
-        bridge.column(graft.functions.SparseDotQ(
-          bridge.expression(col("token_id")),
-          bridge.expression(col("pos").cast("long")),
-          wq.toIndexedSeq)))
-      .withColumn("__wq", greatest(lit(0L), col("__dotq") + lit(bq)))
-      .filter(col("__wq") > 0)
-      .groupBy(col(idCol), col("token_id"))
-      .agg(max(col("__wq")).as("__mq"))
-      .select(col(idCol), col("token_id"),
-        (col("__mq").cast("double") / lit(scale.toDouble)).as("weight"))
+    df.select(col(idCol), inline(bridge.column(graft.functions.SparseWeightedPairs(
+      bridge.expression(Kernel.tokenIds(col(textCol), maxLength)),
+      wq.toIndexedSeq, bq, scale))))
   }
 
   /** Reference-shaped output: one row per doc with
