@@ -47,7 +47,7 @@ object Bench {
     //   stages back down: a fixed cores-sized count made big
     //   exact-distinct exchanges spill at 100×, while a flat wide
     //   constant taxed the small-sf suite (see Graft.tuneForScale).
-    val spark = builder(sfDir, cpus.toInt).getOrCreate()
+    val spark = Graft.tunedBuilder(sfDir, cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warmup: run the full q01 pipeline once untimed so JIT/codegen/session
     // init don't land on whichever query sorts first.
@@ -170,15 +170,6 @@ object Bench {
     println(s"""{"metric":"total_short","value":$total,"unit":"sec","n_queries":${results.size},"queries":$qsShort,"failed":$failed,"sf":"$sfDir"}""")
     spark.stop()
   }
-
-  /** The session every query is timed in — the scale-tuned
-    * [[Graft.tunedBuilder]] plus the optimizer exclusion above.
-    * `Verify --plan` builds from it too, so the plan it prints is the
-    * plan the bench runs. */
-  private[graft] def builder(sfDir: String, cpus: Int): SparkSession.Builder =
-    Graft.tunedBuilder(sfDir, cpus)
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
 
   /** Where the full line lands: `explicit` (SPARK_GRAFT_BENCH_OUT) or
     * `BENCH_FULL_<sf>_c<cpus>[_isolated].json`, so runs at another scale,

@@ -37,7 +37,7 @@ object Graft {
 
   /** Recommended session settings for the bucketed/partial-agg
     * operators at scale, for callers that bring their own SparkSession
-    * (the graft harness mains already set these in their builders).
+    * (sessions from [[tunedBuilder]] already carry them).
     * The critical one: Spark's ObjectHashAggregate falls back to
     * SORT-BASED aggregation at 128 distinct keys per partition
     * (`spark.sql.objectHashAggregate.sortBased.fallbackThreshold`),
@@ -117,17 +117,24 @@ object Graft {
       math.min(16L * parallelism, inputBytes / perPartition).toInt)
   }
 
-  /** The scale-tuned local session builder shared by the measurement
-    * mains (Bench, and through it `Verify --plan`; perfbench):
+  /** The one local session builder: every session in the repo is built
+    * here, so the bit-exact gates and the tests run under the
+    * configuration that is timed. Its callers: `graft.Bench`,
+    * `graft.Verify` (the gate dump and `--entry`/`--plan`), the test
+    * session (`SparkSessionTestWrapper`), `ScaleGen`, `RecallProbe`,
+    * `TokTrainProbe` and perfbench. It sets
     * `local[cpus]`, cores-sized shuffle partitions with AQE on, the data-GATED hash-agg fallback threshold
     * ([[fallbackThresholdFor]] — Spark's default below 64 MB of input,
     * the calibrated 128k above; see the Bench scaladoc and
     * [[tuneForScale]] for the two-sided measurements), a data-sized
     * initial exchange width ([[initialPartitionsFor]] over
-    * [[dirBytes]] of the input directory), and the nanos-as-long
-    * parquet compat the driver testdata needs. Returns the BUILDER so
-    * callers can append their own configs (Bench's optimizer
-    * exclusion) before `getOrCreate()`. */
+    * [[dirBytes]] of the input directory), the UTC session time zone,
+    * the nanos-as-long parquet compat for ns-timestamp test data, and
+    * excludes `InferFiltersFromGenerate`: that rule copies an explode's
+    * generator child into a Filter, which is pushed below the
+    * projection that computes it, so an expensive projected column
+    * (every `explode` over a `Kernel.tokenIds` alias) is evaluated
+    * twice per row. */
   def tunedBuilder(sfDir: String, cpus: Int): SparkSession.Builder = {
     val bytes = dirBytes(sfDir)
     SparkSession.builder()
@@ -138,6 +145,9 @@ object Graft {
         fallbackThresholdFor(Some(bytes)).toString)
       .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
         initialPartitionsFor(bytes, cpus).toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.optimizer.excludedRules",
+        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
   }

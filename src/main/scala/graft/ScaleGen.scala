@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-validation data generator (VERDICT r11 brief item 2; the sole
@@ -188,12 +188,7 @@ object ScaleGen {
     val src = args(0)
     val out = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession
-      .builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val spark = Graft.tunedBuilder(src, sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -13,43 +12,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     if (args.nonEmpty && args(0).startsWith("--")) { inspect(args); return }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Bench.scala: 128-key fallback would sort the candidate stream
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 17).toString)
-      // data-sized initial exchange width, aligned with Bench — the gate
-      // must prove results invariant under the scale config (it did:
-      // 147/147 bit-identical at 8× width, the rule's upper regime)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        Graft.initialPartitionsFor(Graft.dirBytes(sfDir), cpus.toInt).toString)
-      // InferFiltersFromGenerate copies the full (expensive) generator
-      // child expression into a Filter — for embedding pipelines that
-      // doubles the per-row work for no benefit.
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      // events.parquet carries ns timestamps; read them as long (the ts
-      // column is not part of any checked output)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.tunedBuilder(sfDir, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q40_tfidf_sparse,q42_clean_text → dump a subset
     // (local iteration; the driver always runs the full map)
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val attempted = SparkEntry.queries.filter { case (name, _) => only.forall(_.contains(name)) }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -65,16 +34,38 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // written before any gate runs, so a run that dies midway still names
+    // every gate it owed: tools/check.py fails each one without a dump
+    writeNames(s"$outDir/attempted.txt", attempted.keys)
+    val failed = attempted.toSeq.flatMap { case (name, fn) =>
+      try {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
+    writeNames(s"$outDir/failed.txt", failed)
     spark.stop()
+    if (failed.nonEmpty) {
+      System.err.println(s"[verify] ${failed.size} of ${attempted.size} failed: ${failed.mkString(",")}")
+      sys.exit(1)
+    }
   }
 
-  /** Plan/smoke inspection in one session built like the bench's
-    * ([[Bench.builder]] at 8 cores), so the audited plan is the plan the
-    * bench runs. `--plan` takes a comma list and prints each plan under
-    * a `=== <name>` header. */
+  private def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  private def writeNames(path: String, names: Iterable[String]): Unit =
+    Files.writeString(Paths.get(path), names.map(_ + "\n").mkString)
+
+  /** Plan/smoke inspection in one [[Graft.tunedBuilder]] session at
+    * `SPARK_GRAFT_CPUS` cores, so the audited plan is the plan the bench
+    * runs. `--plan` takes a comma list and prints each plan under a
+    * `=== <name>` header. */
   private def inspect(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = Bench.builder(sfDir, 8).getOrCreate()
+    val spark = Graft.tunedBuilder(sfDir, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     args(0) match {
       case "--entry" =>

@@ -65,12 +65,7 @@ object AttnBank {
   /** Resolve the shard walk → load → re-quantize: the flat [[Total]]
     * integer bank in q/k/v/o layout order. */
   def loadedQuantized: IndexedSeq[Long] = {
-    val fs = shardFiles
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sharded = Safetensors.loadShards(order.map(fs))
-    layout.flatMap { case (name, _, _) =>
-      sharded.tensorF32(name)
-        .map(f => math.floor(f.toDouble * Scale + 0.5).toLong)
-    }.toIndexedSeq
+    val sharded = Safetensors.resolved(shardFiles)
+    layout.flatMap { case (name, _, _) => sharded.quantized(name, Scale) }.toIndexedSeq
   }
 }

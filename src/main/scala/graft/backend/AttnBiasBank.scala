@@ -39,11 +39,7 @@ object AttnBiasBank {
 
   /** Resolve → load → re-quantize: the flat [[Total]] integer bank. */
   def loadedQuantized: IndexedSeq[Long] = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sh = Safetensors.loadShards(order.map(fs))
-    layout.flatMap { case (name, _, _) =>
-      sh.tensorF32(name).map(f => math.floor(f.toDouble * Scale + 0.5).toLong)
-    }.toIndexedSeq
+    val sh = Safetensors.resolved(files)
+    layout.flatMap { case (name, _, _) => sh.quantized(name, Scale) }.toIndexedSeq
   }
 }

@@ -30,11 +30,6 @@ object ColbertHeadBank {
       ("colbert_linear.weight", Seq(OutDim, Hidden),
         Array.tabulate(OutDim * Hidden)(i => headK(i).toFloat / Scale)))))
 
-  def loadedQuantized: IndexedSeq[Long] = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sh = Safetensors.loadShards(order.map(fs))
-    sh.tensorF32("colbert_linear.weight")
-      .map(f => math.floor(f.toDouble * Scale + 0.5).toLong).toIndexedSeq
-  }
+  def loadedQuantized: IndexedSeq[Long] =
+    Safetensors.resolved(files).quantized("colbert_linear.weight", Scale).toIndexedSeq
 }

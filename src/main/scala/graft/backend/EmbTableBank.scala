@@ -35,11 +35,6 @@ object EmbTableBank {
       ("embed_tokens.weight", Seq(VocabSize, Dim), bank))))
 
   /** Resolve → load → re-quantize, flat token-major. */
-  def loadedQuantized: IndexedSeq[Long] = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sharded = Safetensors.loadShards(order.map(fs))
-    sharded.tensorF32("embed_tokens.weight")
-      .map(f => math.floor(f.toDouble * Scale + 0.5).toLong).toIndexedSeq
-  }
+  def loadedQuantized: IndexedSeq[Long] =
+    Safetensors.resolved(files).quantized("embed_tokens.weight", Scale).toIndexedSeq
 }

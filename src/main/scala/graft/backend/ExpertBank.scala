@@ -44,12 +44,7 @@ object ExpertBank {
   /** Resolve the full shard walk → load → re-quantize: the flat
     * [NExperts · Dim · HiddenDim] integer bank, expert-major. */
   def loadedQuantized: IndexedSeq[Long] = {
-    val fs = shardFiles
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sharded = Safetensors.loadShards(order.map(fs))
-    (0 until NExperts).flatMap { e =>
-      sharded.tensorF32(s"experts.$e.weight")
-        .map(f => math.floor(f.toDouble * Scale + 0.5).toLong)
-    }
+    val sharded = Safetensors.resolved(shardFiles)
+    (0 until NExperts).flatMap(e => sharded.quantized(s"experts.$e.weight", Scale))
   }
 }

@@ -50,11 +50,8 @@ object ExpertMlpBank {
       bias: IndexedSeq[Long]) extends Serializable
 
   def loaded: Weights = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sh = Safetensors.loadShards(order.map(fs))
-    def quant(name: String): IndexedSeq[Long] =
-      sh.tensorF32(name).map(f => math.floor(f.toDouble * Scale + 0.5).toLong).toIndexedSeq
+    val sh = Safetensors.resolved(files)
+    def quant(name: String): IndexedSeq[Long] = sh.quantized(name, Scale).toIndexedSeq
     Weights(
       quant("mlp.router.layer.weight"),
       quant("mlp.experts.mlp.w1"),

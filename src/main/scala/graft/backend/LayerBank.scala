@@ -94,11 +94,8 @@ object LayerBank {
   }
 
   private def load(): (IndexedSeq[Long], IndexedSeq[Weights], IndexedSeq[Long]) = {
-    val fs = shardFiles
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sh = Safetensors.loadShards(order.map(fs))
-    def quant(name: String, scale: Long): IndexedSeq[Long] =
-      sh.tensorF32(name).map(f => math.floor(f.toDouble * scale + 0.5).toLong).toIndexedSeq
+    val sh = Safetensors.resolved(shardFiles)
+    def quant(name: String, scale: Long): IndexedSeq[Long] = sh.quantized(name, scale).toIndexedSeq
     val layers = (0 until NLayers).map { l =>
       Weights(
         Seq("q_proj", "k_proj", "v_proj", "o_proj")

@@ -39,13 +39,8 @@ object MergerBank {
       ("merger.mlp.weight", Seq(OutDim, NVals), bank),
       ("deepstack_merger_list.0.mlp.weight", Seq(OutDim, NVals), deepstackBank))))
 
-  private def loadTensor(name: String): IndexedSeq[Long] = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sharded = Safetensors.loadShards(order.map(fs))
-    sharded.tensorF32(name)
-      .map(f => math.floor(f.toDouble * Scale + 0.5).toLong).toIndexedSeq
-  }
+  private def loadTensor(name: String): IndexedSeq[Long] =
+    Safetensors.resolved(files).quantized(name, Scale).toIndexedSeq
 
   def loadedQuantized: IndexedSeq[Long] = loadTensor("merger.mlp.weight")
 

@@ -45,12 +45,7 @@ object MlpBank {
   /** Resolve → load → re-quantize: the flat [[Total]] integer bank in
     * gate/up/down layout order. */
   def loadedQuantized: IndexedSeq[Long] = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sharded = Safetensors.loadShards(order.map(fs))
-    layout.flatMap { case (name, _, _) =>
-      sharded.tensorF32(name)
-        .map(f => math.floor(f.toDouble * Scale + 0.5).toLong)
-    }.toIndexedSeq
+    val sharded = Safetensors.resolved(files)
+    layout.flatMap { case (name, _, _) => sharded.quantized(name, Scale) }.toIndexedSeq
   }
 }

@@ -144,11 +144,8 @@ object NomicBank {
                            layers: IndexedSeq[LayerW]) extends Serializable
 
   private def load(): Weights = {
-    val fs = shardFiles
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sh = Safetensors.loadShards(order.map(fs))
-    def quant(name: String, scale: Long): IndexedSeq[Long] =
-      sh.tensorF32(name).map(f => math.floor(f.toDouble * scale + 0.5).toLong).toIndexedSeq
+    val sh = Safetensors.resolved(shardFiles)
+    def quant(name: String, scale: Long): IndexedSeq[Long] = sh.quantized(name, scale).toIndexedSeq
     val layers = (0 until NLayers).map { l =>
       val p = s"encoder.layers.$l"
       LayerW(

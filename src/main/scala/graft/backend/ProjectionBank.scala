@@ -42,11 +42,6 @@ object ProjectionBank {
 
   /** Resolve (single-file branch) → load → re-quantize to the integer
     * grid the projection runs on. */
-  def loadedQuantized: Array[Long] = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sharded = Safetensors.loadShards(order.map(fs))
-    sharded.tensorF32("dense.weight")
-      .map(f => math.floor(f.toDouble * Scale + 0.5).toLong)
-  }
+  def loadedQuantized: Array[Long] =
+    Safetensors.resolved(files).quantized("dense.weight", Scale)
 }

@@ -31,11 +31,8 @@ object QkNormBank {
   /** Resolve → load → re-quantize: (q_norm gains, k_norm gains) as
     * 2048 + k longs. */
   def loaded: (IndexedSeq[Long], IndexedSeq[Long]) = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sh = Safetensors.loadShards(order.map(fs))
-    def quant(name: String): IndexedSeq[Long] =
-      sh.tensorF32(name).map(f => math.floor(f.toDouble * 2048.0 + 0.5).toLong).toIndexedSeq
+    val sh = Safetensors.resolved(files)
+    def quant(name: String): IndexedSeq[Long] = sh.quantized(name, 2048L).toIndexedSeq
     (quant("model.layers.0.self_attn.q_norm.weight"),
       quant("model.layers.0.self_attn.k_norm.weight"))
   }

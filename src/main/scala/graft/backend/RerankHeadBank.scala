@@ -34,11 +34,8 @@ object RerankHeadBank {
 
   /** Resolve → load → re-quantize: (flat weight row, bias). */
   def loadedQuantized: (IndexedSeq[Long], Long) = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sh = Safetensors.loadShards(order.map(fs))
-    def quant(name: String): IndexedSeq[Long] =
-      sh.tensorF32(name).map(f => math.floor(f.toDouble * Scale + 0.5).toLong).toIndexedSeq
+    val sh = Safetensors.resolved(files)
+    def quant(name: String): IndexedSeq[Long] = sh.quantized(name, Scale).toIndexedSeq
     (quant("score.weight"), quant("score.bias").head)
   }
 }

@@ -28,11 +28,6 @@ object RouterBank {
     "model.safetensors" -> Safetensors.write(Seq(
       ("mlp.router.layer.weight", Seq(NExperts, HiddenDim), bank))))
 
-  def loadedQuantized: IndexedSeq[Long] = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sh = Safetensors.loadShards(order.map(fs))
-    sh.tensorF32("mlp.router.layer.weight")
-      .map(f => math.floor(f.toDouble * Scale + 0.5).toLong).toIndexedSeq
-  }
+  def loadedQuantized: IndexedSeq[Long] =
+    Safetensors.resolved(files).quantized("mlp.router.layer.weight", Scale).toIndexedSeq
 }

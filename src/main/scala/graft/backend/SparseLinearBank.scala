@@ -19,7 +19,7 @@ import graft.model.Safetensors
   * k(d) = ((d+1)·B3 + A3) mod 4001 − 2000, written through
   * [[Safetensors.write]] into a TWO-SHARD checkpoint (weight in shard 1,
   * bias in shard 2) and read back through the S10 sharded path
-  * ([[Safetensors.resolveWeightFiles]] + [[Safetensors.loadShards]]) —
+  * ([[Safetensors.resolved]]) —
   * so the round trip exercised by the q76 correctness gate is
   * bytes → header → LE f32 → quantized grid, not a Scala constant.
   *
@@ -59,13 +59,8 @@ object SparseLinearBank {
   /** Resolve → load → quantize: the (weightQ, biasQ) integer grid the
     * operator consumes, recovered from the sharded container bytes. */
   def loadedQuantized: (Array[Long], Long) = {
-    val files = shardFiles
-    val order = Safetensors.resolveWeightFiles(files.keySet)
-    val sharded = Safetensors.loadShards(order.map(files))
-    val wq = sharded.tensorF32("weight")
-      .map(f => math.floor(f.toDouble * Scale + 0.5).toLong)
-    val bq = math.floor(sharded.tensorF32("bias")(0).toDouble * Scale + 0.5).toLong
-    (wq, bq)
+    val sharded = Safetensors.resolved(shardFiles)
+    (sharded.quantized("weight", Scale), sharded.quantized("bias", Scale)(0))
   }
 
   /** Per-(token, position) hidden cell in [0, M3) — the deterministic

@@ -44,11 +44,7 @@ object VlAttnBank {
       layout.map { case (n, off) => (n, Seq(HeadDim, Hidden), slice(off, HeadDim * Hidden)) }))
 
   def loadedQuantized: IndexedSeq[Long] = {
-    val fs = files
-    val order = Safetensors.resolveWeightFiles(fs.keySet)
-    val sh = Safetensors.loadShards(order.map(fs))
-    layout.flatMap { case (name, _) =>
-      sh.tensorF32(name).map(f => math.floor(f.toDouble * Scale + 0.5).toLong)
-    }.toIndexedSeq
+    val sh = Safetensors.resolved(files)
+    layout.flatMap { case (name, _) => sh.quantized(name, Scale) }.toIndexedSeq
   }
 }

@@ -209,10 +209,20 @@ object Safetensors {
       val (bytes, h) = shards(i)
       Safetensors.tensorF32(bytes, h, name)
     }
+    /** F32 tensor re-quantized onto a bank's integer grid:
+      * `floor(f · scale + 0.5)` recovers the k a bank wrote as
+      * k / scale exactly. */
+    def quantized(name: String, scale: Long): Array[Long] =
+      tensorF32(name).map(f => math.floor(f.toDouble * scale + 0.5).toLong)
   }
 
   def loadShards(files: Seq[Array[Byte]]): ShardedWeights =
     ShardedWeights(files.map(b => (b, parseHeader(b))))
+
+  /** [[resolveWeightFiles]] over a named file set, then [[loadShards]]:
+    * the load path every weight-fixture bank shares. */
+  def resolved(files: Map[String, Array[Byte]]): ShardedWeights =
+    loadShards(resolveWeightFiles(files.keySet).map(files))
 
   /** The BGE-M3 sparse-linear consumption shape
     * (bgem3_weights.rs:15-38): a flat `weight` F32 tensor plus a scalar

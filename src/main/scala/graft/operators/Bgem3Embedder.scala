@@ -92,9 +92,13 @@ object Bgem3Embedder {
     // df's columns in place, outCol replacing a same-named one
     val kept = df.columns.map(c =>
       if (c == outCol) out else col(QuotingUtils.quoteIdentifier(c)))
-    df.select(col("*"), Kernel.tokenIds(col(textCol), maxLength).as(tids))
-      .filter(size(col(tids)) > 0) // also the projection barrier: tids
-      // stays an attribute below, not inlined into downstream lambdas
+    // tokenize inside a one-element explode: its output is an attribute,
+    // so the empty-row filter stays above it and the downstream lambdas
+    // read tids. Over a projected alias the optimizer would push the
+    // filter below the projection with the tokenization inlined, and
+    // every row would be tokenized twice.
+    df.select(col("*"), explode(array(Kernel.tokenIds(col(textCol), maxLength))).as(tids))
+      .filter(size(col(tids)) > 0)
       .select(col("*"),
         Kernel.meanScaled(Kernel.pooledSums(col(tids), denseDim), size(col(tids))).as(mean),
         sparsePairs(col(tids)).as(pairs))

@@ -64,6 +64,14 @@ class EmbedRouteShapeSpec extends AnyFunSuite with SparkSessionTestWrapper {
     }
   }
 
+  test("bgem3Embedding tokenizes each row once and drops rows with no tokens") {
+    val plan = Graft.bgem3Embedding(docs, "doc_id", "text").queryExecution.optimizedPlan.toString
+    assert("tokenids\\(".r.findAllIn(plan).length == 1, s"not one tokenids in:\n$plan")
+    import spark.implicits._
+    val df = Seq((0L, "alpha beta"), (1L, ""), (2L, null)).toDF("doc_id", "text")
+    assert(Graft.bgem3Embedding(df, "doc_id", "text").select("doc_id").as[Long].collect().toSeq == Seq(0L))
+  }
+
   test("weighted sparse rows equal the groupBy max-merge over the sf0.001 documents") {
     val got = sorted(weighted(docs).collect())
     val want = sorted(groupByReference(docs).collect())

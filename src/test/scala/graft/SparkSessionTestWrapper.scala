@@ -2,22 +2,15 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for all specs. */
+/** One shared local session for all specs: [[Graft.tunedBuilder]] over
+  * an empty directory at 4 cores, so the specs run under the timed
+  * configuration at its sub-64 MB settings. */
 object SparkSessionTestWrapper {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh").toString
+    val s = Graft.tunedBuilder(wh, 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.optimizer.excludedRules",
-        "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // see Bench.scala: 128-key fallback would sort the candidate stream
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", (1 << 17).toString)
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
+      .config("spark.sql.warehouse.dir", wh)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
