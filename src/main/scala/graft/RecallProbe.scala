@@ -125,10 +125,7 @@ object RecallProbe {
         val knn = graft.operators.VectorIndex
           .selfKnnCandidates(spark, useIdx, nProbe, k, overfetch)
           .localCheckpoint(false)
-        val ann = edges(knn.as("x").join(knn.as("y"),
-            col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-          .filter(col("x.qid") < col("x.nid"))
-          .select(col("x.qid").as("id_a"), col("x.nid").as("id_b")))
+        val ann = edges(graft.operators.Similarity.mutualEdges(knn))
         val sec = (System.nanoTime() - t1) / 1e9
         val hit = ann.intersect(exact).size
         val recall = if (exact.isEmpty) 1.0 else hit.toDouble / exact.size
@@ -247,10 +244,7 @@ object RecallProbe {
           .selfKnnCandidates(spark, idxB, nProbe, k, overfetch)
           .localCheckpoint(false)
         val nCand = knn.count()
-        val ann = edges(knn.as("x").join(knn.as("y"),
-            col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-          .filter(col("x.qid") < col("x.nid"))
-          .select(col("x.qid").as("id_a"), col("x.nid").as("id_b")))
+        val ann = edges(graft.operators.Similarity.mutualEdges(knn))
         val sec = (System.nanoTime() - t1) / 1e9
         val bandJson = bandPairs.map { case (c, pairs) =>
           val hit = ann.intersect(pairs).size
@@ -292,10 +286,7 @@ object RecallProbe {
               .selfKnnCandidates(spark, idxV, nProbe, k, overfetch)
               .localCheckpoint(false)
             val nCand = knn.count()
-            val ann = edges(knn.as("x").join(knn.as("y"),
-                col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-              .filter(col("x.qid") < col("x.nid"))
-              .select(col("x.qid").as("id_a"), col("x.nid").as("id_b")))
+            val ann = edges(graft.operators.Similarity.mutualEdges(knn))
             val sec = (System.nanoTime() - t1) / 1e9
             val bandJson = bandPairs.map { case (c, pairs) =>
               val hit = ann.intersect(pairs).size
@@ -349,10 +340,7 @@ object RecallProbe {
         val knn = graft.operators.VectorIndex
           .selfKnnCandidates(spark, idxAug, nProbe, k, overfetch = 16)
           .localCheckpoint(false)
-        val ann = edges(knn.as("x").join(knn.as("y"),
-            col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-          .filter(col("x.qid") < col("x.nid"))
-          .select(col("x.qid").as("id_a"), col("x.nid").as("id_b")))
+        val ann = edges(graft.operators.Similarity.mutualEdges(knn))
         val hit = ann.intersect(plantedPairs).size
         val r = hit.toDouble / plantedPairs.size
         println(f"""{"probe":"$label","sf":"$sfDir","n":$nAug,"k":$k,"nCells":$nCellsAug,"nProbe":$nProbe,"overfetch":16,"planted":${plantedPairs.size},"hit":$hit,"recall":$r%.4f}""")

@@ -59,10 +59,20 @@ object K {
 object Kernel {
   import K._
 
-  /** Lowercase, strip non-alphanumerics, split on whitespace, drop empties.
-    * The analogue of the reference's tokenizer front (S7/P1) with a
-    * deterministic, SQL-expressible normalizer. */
+  /** text → array<string> of its normalized words: lowercase, every char
+    * whose lowercase is outside [a-z0-9] separates, no empty words. The
+    * analogue of the reference's tokenizer front (S7/P1): one native pass
+    * over [[WordStream]] ([[Tokens]]), the word stream of every tokenizer
+    * family; equal to [[tokensHof]] (spec-asserted). */
   def tokens(text: Column): Column =
+    org.apache.spark.sql.graftbridge.Bridge.column(
+      Tokens(org.apache.spark.sql.graftbridge.Bridge.expression(text)))
+
+  /** Reference SQL formulation of [[tokens]] — lowercase, strip
+    * non-alphanumerics, split on whitespace, drop empties; the chain the
+    * DuckDB oracle mirrors (`OracleSql.toks`), kept for the `*Hof`
+    * cross-validation variants. */
+  def tokensHof(text: Column): Column =
     filter(
       split(regexp_replace(lower(text), "[^a-z0-9 ]", " "), "\\s+"),
       t => t =!= "")
@@ -85,7 +95,7 @@ object Kernel {
   /** Reference HOF formulation of [[tokenIds]] — the expression the DuckDB
     * oracle mirrors token for token; kept for cross-validation. */
   def tokenIdsHof(text: Column, maxLen: Int = MaxLength): Column =
-    transform(slice(tokens(text), 1, maxLen), t => polyHash(t))
+    transform(slice(tokensHof(text), 1, maxLen), t => polyHash(t))
 
   import org.apache.spark.sql.graftbridge.Bridge
 

@@ -66,22 +66,11 @@ case class LangId(child: Expression, markers: Seq[(String, Seq[String])])
 
     var i = 0
     while (i < n) {
-      val c = s.charAt(i)
-      // same per-char contribution rule as TokenIds (-2 = U+0130:
-      // contribute 'i' then separate)
-      val lc: Int =
-        if (c >= 'a' && c <= 'z' || c >= '0' && c <= '9') c.toInt
-        else if (c >= 'A' && c <= 'Z') c.toInt + 32
-        else if (c < 128) -1
-        else if (c == 'İ') -2
-        else {
-          val l = Character.toLowerCase(c)
-          if (l >= 'a' && l <= 'z' || l >= '0' && l <= '9') l.toInt else -1
-        }
+      val lc = WordStream.charClass(s.charAt(i))
       if (lc >= 0) {
         if (sb.length >= maxMarkerLen) overflow = true
         else sb.append(lc.toChar)
-      } else if (lc == -2) {
+      } else if (lc == WordStream.ISep) {
         if (sb.length >= maxMarkerLen) overflow = true else sb.append('i')
         endToken()
       } else endToken()

@@ -73,22 +73,14 @@ case class TextNorm(child: Expression, stopwords: Seq[String])
       val isWs = c == ' ' || c == '\t' || c == '\n' || c == '\u000B' || c == '\f' || c == '\r'
       if (isWs) inWsRun = false
       else if (!inWsRun) { wsTokens += 1; inWsRun = true }
-      val lc: Int =
-        if (c >= 'a' && c <= 'z' || c >= '0' && c <= '9') c.toInt
-        else if (c >= 'A' && c <= 'Z') c.toInt + 32
-        else if (c < 128) -1
-        else if (c == 'İ') -2
-        else {
-          val l = Character.toLowerCase(c)
-          if (l >= 'a' && l <= 'z' || l >= '0' && l <= '9') l.toInt else -1
-        }
+      val lc = WordStream.charClass(c)
       if (lc >= 0) {
         if (tokStart < 0) {
           if (out.length > 0) out.append(' ')
           tokStart = out.length
         }
         out.append(lc.toChar)
-      } else if (lc == -2) {
+      } else if (lc == WordStream.ISep) {
         if (tokStart < 0) {
           if (out.length > 0) out.append(' ')
           tokStart = out.length

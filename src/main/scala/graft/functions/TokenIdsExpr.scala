@@ -22,24 +22,11 @@ object TokenIdsKernel {
     var inTok = false
     var i = 0
     while (i < n && count < maxLen) {
-      val c = s.charAt(i)
-      // lc: the char's contribution if its lowercase is in [a-z0-9];
-      // -1 = separator; -2 = contribute 'i' THEN separate (U+0130 only:
-      // its string lowercase is "i" + U+0307, and the combining dot
-      // separates)
-      val lc: Int =
-        if (c >= 'a' && c <= 'z' || c >= '0' && c <= '9') c.toInt
-        else if (c >= 'A' && c <= 'Z') c.toInt + 32
-        else if (c < 128) -1
-        else if (c == 'İ') -2
-        else {
-          val l = Character.toLowerCase(c)
-          if (l >= 'a' && l <= 'z' || l >= '0' && l <= '9') l.toInt else -1
-        }
+      val lc = WordStream.charClass(s.charAt(i))
       if (lc >= 0) {
         acc = (acc * 31L + lc.toLong) % K.M
         inTok = true
-      } else if (lc == -2) {
+      } else if (lc == WordStream.ISep) {
         acc = (acc * 31L + 'i'.toLong) % K.M
         out(count) = acc; count += 1
         acc = 0L; inTok = false
@@ -65,7 +52,7 @@ object TokenIdsKernel {
   * `transform(slice(filter(split(regexp_replace(lower(text),'[^a-z0-9 ]',' '),'\\s+'), t -> t != ''), 1, maxLen), polyHash)`
   * for any input: a char survives iff its (string) lowercase lands in
   * [a-z0-9]; everything else acts as a separator (see
-  * [[TokenIdsKernel.eval]] for the U+212A/U+0130 Unicode notes). The HOF
+  * [[WordStream.charClass]] for the U+212A/U+0130 Unicode notes). The HOF
   * formulation stays in [[Kernel.tokenIdsHof]] and a spec asserts
   * bit-equality between the two, including on non-ASCII fixtures.
   *
@@ -73,15 +60,19 @@ object TokenIdsKernel {
   * WholeStageCodegen region instead of forcing interpreted evaluation of
   * the enclosing subtree.
   *
-  * LOCALE NOTE: this kernel lowercases per char via
-  * `Character.toLowerCase` — locale-INdependent. The HOF/oracle
-  * formulation goes through Spark `lower()` → `String.toLowerCase()`,
-  * which consults the JVM default locale for non-ASCII strings (under
-  * tr-TR, 'I' lowers to dotless 'ı' there but to 'i' here). The
-  * spec-asserted bit-equality between the two formulations therefore
-  * assumes a root/en default locale, the production default for Spark
-  * clusters; pin `-Duser.language=en` (or assert `Locale.getDefault`)
-  * if deploying to machines with a Turkic default locale. */
+  * LOCALE NOTE: [[WordStream.charClass]] lowercases per char with
+  * `Character.toLowerCase(char)`, which ignores the locale. Spark's
+  * `lower()` in the HOF formulation does not: on Spark 4.1 (with
+  * `spark.sql.icu.caseMappings.enabled`, the default) it calls
+  * `CollationAwareUTF8String.toLowerCase`, which lowercases an all-ASCII
+  * string byte by byte and any other string with ICU's
+  * `UCharacter.toLowerCase(String)` under the JVM default locale (under
+  * tr-TR, 'I' in a non-ASCII string lowers to dotless 'ı' there but to
+  * 'i' here). The spec-asserted equality of the two formulations
+  * therefore assumes a non-Turkic default locale, the production default
+  * for Spark clusters; pin `-Duser.language=en` (or assert
+  * `Locale.getDefault`) if deploying to machines with a Turkic default
+  * locale. */
 case class TokenIds(child: Expression, maxLen: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
 

@@ -38,7 +38,7 @@ object Dedup {
 
   /** HOF formulation of [[exact]] (interpreted regexp+split chain). */
   def exactHof(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val norm = concat_ws(" ", Kernel.tokens(col(textCol)))
+    val norm = concat_ws(" ", Kernel.tokensHof(col(textCol)))
     df.withColumn("__h", md5(norm))
       .groupBy(col("__h").as("text_hash"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("dup_count"))

@@ -761,25 +761,31 @@ object Similarity {
     * through a hub is NOT enough to merge clusters.
     *
     * Scale shape: one kNN pass (partial top-k agg — ≤ k+1 rows per
-    * vector pre-shuffle), then the transpose self-join on the (qid,
-    * nid) pair key — both sides are the same n·(k+1)-row frame (lazy
-    * lineage cut, materialized once), so the join is hash-equi on a
-    * composite key, never a corpus cross join. The brute kNN is the
-    * exact baseline; [[annLshJoin]]-style candidates slot into
-    * [[semanticClustersFromKnn]] as the 100 TB path. */
+    * vector pre-shuffle), then [[mutualEdges]]' one aggregation over
+    * the n·(k+1) directed edges — never a corpus cross join. The brute
+    * kNN is the exact baseline; [[annLshJoin]]-style candidates slot
+    * into [[semanticClustersFromKnn]] as the 100 TB path. */
   def mutualKnnPairs(vecs: DataFrame, idCol: String, vecCol: String,
-                     k: Int): DataFrame = {
-    val knn = knnJoin(
+                     k: Int): DataFrame =
+    mutualEdges(knnJoin(
       vecs.select(col(idCol).cast("long").as("__qid"), col(vecCol).as("__qv")),
       "__qid", "__qv", vecs, idCol, vecCol, k + 1)
-      .select(col("__qid").as("qid"), col(idCol).cast("long").as("nid"))
-      .filter(col("qid") =!= col("nid"))
-      .localCheckpoint(false)
-    knn.as("x").join(knn.as("y"),
-        col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-      .filter(col("x.qid") < col("x.nid"))
-      .select(col("x.qid").as("id_a"), col("x.nid").as("id_b"))
-  }
+      .select(col("__qid").as("qid"), col(idCol).cast("long").as("nid")))
+
+  /** The mutual filter over directed kNN edges (qid, nid): one (id_a <
+    * id_b) row per pair present in both directions; self edges drop.
+    * One aggregation on the unordered pair — both directions are
+    * present iff the group holds two distinct `qid`s — reading the edge
+    * frame once. Not a transpose self-join: that reads the frame twice
+    * and broadcasts a hashed relation of it on its two-long key, whose
+    * driver copy (a 16 MB page for 2,500 edges) stays until the context
+    * cleaner drops it. */
+  private[graft] def mutualEdges(knn: DataFrame): DataFrame =
+    knn.groupBy(least(col("qid"), col("nid")).as("id_a"),
+        greatest(col("qid"), col("nid")).as("id_b"))
+      .agg(min(col("qid")).as("__lo"), max(col("qid")).as("__hi"))
+      .filter(col("__lo") =!= col("__hi"))
+      .select(col("id_a"), col("id_b"))
 
   /** Mutual-kNN edges from sign-LSH-bucketed candidates — the 100 TB
     * path of [[mutualKnnPairs]]: the corpus NEVER broadcasts. Bucket
@@ -791,19 +797,13 @@ object Similarity {
     * its own bucket's members ([[annLshJoin]]'s candidate rule), so a
     * cross-bucket near pair is missed — the standard LSH recall trade;
     * more planes shrink buckets, fewer planes raise recall. The mutual
-    * transpose join then runs over the same n·(k+1)-row frame as the
-    * brute path. Reference seed: /root/reference/src/similarity.rs:31-40
+    * filter ([[mutualEdges]]) then runs over the same n·(k+1)-row frame
+    * as the brute path. Reference seed: /root/reference/src/similarity.rs:31-40
     * (top-k by score with original-order ties). */
   def mutualAnnPairs(vecs: DataFrame, idCol: String, vecCol: String,
                      dim: Int, nPlanes: Int, k: Int,
-                     probes: Int = 0, salt: Int = 1): DataFrame = {
-    val knn = annBucketKnn(vecs, idCol, vecCol, dim, nPlanes, k, probes, salt)
-      .localCheckpoint(false)
-    knn.as("x").join(knn.as("y"),
-        col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-      .filter(col("x.qid") < col("x.nid"))
-      .select(col("x.qid").as("id_a"), col("x.nid").as("id_b"))
-  }
+                     probes: Int = 0, salt: Int = 1): DataFrame =
+    mutualEdges(annBucketKnn(vecs, idCol, vecCol, dim, nPlanes, k, probes, salt))
 
   /** Auto-size `nPlanes` from [[annBucketKnn]]'s cost-model rule: the smallest
     * plane count with 2^nPlanes ≥ n / targetBucket, i.e. expected

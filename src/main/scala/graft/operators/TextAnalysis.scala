@@ -41,7 +41,7 @@ object TextAnalysis {
   /** HOF formulation of [[langId]] (5 langs × 7 markers of interpreted
     * `isin` filters — correct but ~35 comparisons per token). */
   def langIdHof(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = Kernel.tokens(col(textCol))
+    val toks = Kernel.tokensHof(col(textCol))
     val withScores = df.withColumn("__toks", toks)
     // fold over languages in code order; strict > keeps the earliest max
     val (bestLang, bestScore) = markers.foldLeft((lit(""), lit(-1L).cast("long"))) {
@@ -89,7 +89,7 @@ object TextAnalysis {
   /** HOF formulation of [[quality]] (three interpreted regexp/HOF chains
     * per row), kept for cross-validation. */
   def qualityHof(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val toks = Kernel.tokens(col(textCol))
+    val toks = Kernel.tokensHof(col(textCol))
     df.withColumn("__toks", toks)
       .filter(size(col("__toks")) > 0)
       .withColumn("n_chars", length(col(textCol)).cast("long"))

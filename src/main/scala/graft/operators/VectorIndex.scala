@@ -792,7 +792,7 @@ object VectorIndex {
     * family holds cost linear but recalls 0.17 on the mid-cosine band
     * that carries this corpus's true-kNN mass; the IVF geometry +
     * exact rescore recalls it all at the same candidate bound). The
-    * mutual transpose join and CC labeling are exactly
+    * mutual filter and CC labeling are exactly
     * [[Similarity.mutualKnnPairs]]/[[Similarity.semanticClustersFromKnn]]'s;
     * only the candidate pass changes — so when the proposal covers the
     * true top-(k+1), output is BIT-IDENTICAL to the exact
@@ -815,13 +815,8 @@ object VectorIndex {
                               nProbe: Int = AutoNProbe, k: Int,
                               iterations: Int = Similarity.DefaultSemanticIterations,
                               overfetch: Int = 4): DataFrame = {
-    val knn = selfKnnCandidates(spark, idx, nProbe, k, overfetch)
-      .localCheckpoint(false)
-    val mutual = knn.as("x").join(knn.as("y"),
-        col("x.qid") === col("y.nid") && col("x.nid") === col("y.qid"))
-      .filter(col("x.qid") < col("x.nid"))
-      .select(col("x.qid").as("id_a"), col("x.nid").as("id_b"))
-    Similarity.semanticClustersFromKnn(mutual, iterations)
+    Similarity.semanticClustersFromKnn(
+      Similarity.mutualEdges(selfKnnCandidates(spark, idx, nProbe, k, overfetch)), iterations)
   }
 
   private def adcSearch(spark: SparkSession, queries: DataFrame,

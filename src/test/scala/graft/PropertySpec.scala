@@ -75,7 +75,7 @@ class PropertySpec extends AnyFunSuite with SparkSessionTestWrapper {
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("id", "text")
       val bridge = org.apache.spark.sql.graftbridge.Bridge
       val tn = bridge.column(graft.functions.TextNorm(bridge.expression(col("text")), stop))
-      val toks = Kernel.tokens(col("text"))
+      val toks = Kernel.tokensHof(col("text"))
       val bad = df
         .withColumn("n", tn)
         .withColumn("norm_hof", concat_ws(" ", toks))
